@@ -676,6 +676,22 @@ FROM matched
 """
 
 
+def _literal_table(
+    spark: SparkSession, rows: list[tuple], names: tuple[str, ...]
+) -> DataFrame:
+    """A small fixture table built from literals. createDataFrame(list)
+    puts a fresh RDD into the plan on every call; this plan is equal on
+    every build, so frames derived from it (crawl_e2e's admission table)
+    are found again by memo.persisted."""
+    return spark.range(1).select(
+        F.inline(
+            F.array(
+                *[F.struct(*[F.lit(v).alias(n) for v, n in zip(r, names)]) for r in rows]
+            )
+        )
+    )
+
+
 @register("robots_policy_filter", oracle=_ROBOTS_FILTER_SQL, driver=False)
 def robots_policy_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REP (robots.txt) gate over the canonicalized URL stream with the
@@ -710,7 +726,7 @@ def robots_policy_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append((dom, "/Docs/page-13", True))
         if dom == "src7.org":
             rows.append((dom, "/", False))
-    rules = spark.createDataFrame(rows, "domain string, prefix string, allow boolean")
+    rules = _literal_table(spark, rows, ("domain", "prefix", "allow"))
     return robots_allowed(canon, rules).select(
         "doc_id", "canonical_url", "robots_allowed", "robots_rule"
     )
@@ -731,9 +747,7 @@ def acquisition_policy_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     canon = canonicalize_url(
         docs.select("doc_id", url.alias("url")), "url"
     ).select("doc_id", "canonical_url", "host")
-    blocked = spark.createDataFrame(
-        [(d,) for d in _BLOCKED_DOMAINS], "domain string"
-    )
+    blocked = _literal_table(spark, [(d,) for d in _BLOCKED_DOMAINS], ("domain",))
     return classify_urls(canon, blocked).select(
         "doc_id", "canonical_url", "verdict"
     )

@@ -48,6 +48,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.memo import persisted
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
 
@@ -297,25 +298,10 @@ def classifier_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     # The scored corpus feeds BOTH the per-score AUC rollup and the
-    # confusion-count aggregate; persist it through the keyed memo so
+    # confusion-count aggregate; persist it through memo.persisted so
     # the feature+scoring pipeline executes once, not once per consumer
     # (r11; guide §2.4 — an eval harness materializes its scores table).
-    from cc_mapreducer_spark.operators.similarity import (
-        _frame_files,
-        _persisted,
-    )
-
-    # Variant = the file listing of the frame ACTUALLY persisted, which
-    # covers every source table the scoring pipeline reads — not just
-    # documents (ADVICE r11: an in-session overwrite of another input
-    # would have served a stale scored frame).
-    scored_raw = quality_classifier_scores(spark, sf_dir)
-    scored = _persisted(
-        spark,
-        ("classifier_scored", sf_dir),
-        (_frame_files(scored_raw),),
-        lambda: scored_raw,
-    )
+    scored = persisted(quality_classifier_scores(spark, sf_dir))
     per_score = scored.groupBy("score").agg(
         F.sum("y").cast("bigint").alias("p"),
         (F.count("*") - F.sum("y")).cast("bigint").alias("neg"),

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.memo import persisted
 from cc_mapreducer_spark.operators.dedup import _SPARK_TOKS
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
@@ -71,26 +72,10 @@ def collocations(
     # w1 == count of bigrams whose first word is w1, etc.), so the
     # stream aggregates once — the r11 before-plan re-derived the whole
     # scan->explode->window stream FOUR times (pairs, both margins, the
-    # total). The distinct-bigram count table persists via the keyed
-    # memo (vocabulary²-bounded but Zipf-small — the same standing
-    # artifact lm_perplexity's bigram model materializes).
-    from cc_mapreducer_spark.operators.similarity import (
-        _frame_files,
-        _frame_identity,
-        _persisted,
-    )
-
-    pairs_all_raw = bi.groupBy("w1", "w2").agg(F.count("*").alias("k11"))
-    # Corpus identity in the logical key (ADVICE r11: a bare
-    # ("colloc_pairs",) slot thrashed when two corpora alternate in one
-    # session, and collides outright for in-memory frames); file
-    # listing as the staleness variant.
-    pairs_all = _persisted(
-        docs.sparkSession,
-        ("colloc_pairs", _frame_identity(docs)),
-        (_frame_files(docs),),
-        lambda: pairs_all_raw,
-    )
+    # total). The distinct-bigram count table persists (memo.persisted;
+    # vocabulary²-bounded but Zipf-small — the same standing artifact
+    # lm_perplexity's bigram model materializes).
+    pairs_all = persisted(bi.groupBy("w1", "w2").agg(F.count("*").alias("k11")))
     pairs = pairs_all.filter(F.col("k11") >= min_count)
     r = pairs_all.groupBy("w1").agg(F.sum("k11").alias("r1"))
     c = pairs_all.groupBy("w2").agg(F.sum("k11").alias("c1"))

@@ -41,6 +41,7 @@ from cc_mapreducer_spark.operators.dedup import (
     minhash_bands,
     shingle_sets,
 )
+from cc_mapreducer_spark.memo import persisted
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table
 
@@ -141,29 +142,14 @@ def contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The band table self-joins below, and Catalyst builds the whole
     # shingle->minhash pipeline ONCE PER SIDE (the r11 before-plan shows
     # the scan->explode->window->collect_set->8-min-agg subtree twice).
-    # Persist it through the keyed memo — the same standing-artifact
+    # Persist it through memo.persisted — the same standing-artifact
     # policy as near_dedup's shingle table and simhash's fingerprint
     # cache: at 100 TB the MinHash band table is written once and every
     # candidate query (near-dedup, negative mining) reads it. The
-    # shingle input rides the shared ("shingles", sf_dir) memo entry,
-    # so near_dedup_pairs and this query build it once between them.
-    from cc_mapreducer_spark.operators.similarity import _persisted
-    from cc_mapreducer_spark.tables import spread
-
-    docs_src = spread(load_table(spark, sf_dir, "documents"))
-    variant = (tuple(sorted(docs_src.inputFiles())),)
-    sets = _persisted(
-        spark,
-        ("shingles", sf_dir),
-        variant,
-        lambda: shingle_sets(spark, sf_dir).filter(F.size("ss") > 0),
-    )
-    bands = _persisted(
-        spark,
-        ("minhash_bands", sf_dir),
-        variant,
-        lambda: minhash_bands(sets).select("doc_id", "band", "sig"),
-    )
+    # shingle input is the plan near_dedup_pairs persists too, so the
+    # two queries build it once between them.
+    sets = persisted(shingle_sets(spark, sf_dir).filter(F.size("ss") > 0))
+    bands = persisted(minhash_bands(sets).select("doc_id", "band", "sig"))
     matched = (
         bands.alias("a")
         .join(

@@ -42,6 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.memo import persisted
 from cc_mapreducer_spark.operators.acquisition import (
     _ADMISSION_SQL,
     _HTML_FIXTURE_SQL,
@@ -252,17 +253,7 @@ def _funnel_frames(spark: SparkSession, sf_dir: str) -> dict:
     # persist the whole robots∘blocklist∘first-seen pipeline executes
     # once per consumer (r11; guide §2.4). A real frontier materializes
     # exactly this decision table.
-    from cc_mapreducer_spark.operators.similarity import (
-        _frame_files,
-        _persisted,
-    )
-
-    adm_dom = adm.withColumn("domain", domain)
-    # Variant from the frame ACTUALLY persisted: adm derives from
-    # robots/blocklist/pages as well as documents, and _frame_files
-    # covers them all (ADVICE r11).
-    _variant = (_frame_files(adm_dom),)
-    adm = _persisted(spark, ("e2e_adm", sf_dir), _variant, lambda: adm_dom)
+    adm = persisted(adm.withColumn("domain", domain))
     adm_counts = adm.groupBy("domain").agg(
         F.count("*").cast("long").alias("n_urls"),
         F.count(F.when(F.col("admitted"), 1)).cast("long").alias("n_admitted"),

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.memo import persisted
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
 
@@ -274,33 +275,15 @@ def near_dedup_minhash(
         threshold = NEAR_DUP_JACCARD
     # Materialize the shingle-set table once: three branches below (minhash
     # input + both verify sides) would otherwise re-tokenize the corpus —
-    # at 100 TB this is an explicit parquet checkpoint. Routed through the
-    # keyed _persisted memo (similarity.py) rather than a bare .cache():
-    # a per-invocation .cache() re-persists on every call, so bench reps
-    # and driver sweeps rebuilt the shingle table each time and stranded
-    # the superseded copies in the CacheManager (VERDICT r4 item 1).
-    from cc_mapreducer_spark.operators.similarity import _persisted
-
-    docs_src = spread(load_table(spark, sf_dir, "documents"))
-    variant = (tuple(sorted(docs_src.inputFiles())),)
-    sets = _persisted(
-        spark,
-        ("shingles", sf_dir),
-        variant,
-        lambda: shingle_sets(spark, sf_dir).filter(F.size("ss") > 0),
-    )
+    # at 100 TB this is an explicit parquet checkpoint.
+    sets = persisted(shingle_sets(spark, sf_dir).filter(F.size("ss") > 0))
     # The band table is the SAME standing artifact contrastive_negatives
-    # already memoizes (shared key, shared variant): without it every
-    # invocation — and every bench rep — re-ran the explode + 8-way
+    # already memoizes (an equal plan, so one cache entry): without it
+    # every invocation — and every bench rep — re-ran the explode + 8-way
     # min-agg minhash pipeline twice (once per self-join side). At
     # 100 TB the LSH index is written once and read by every candidate
     # query; r12 makes this lane read it too (guide §2.4/§5).
-    bands = _persisted(
-        spark,
-        ("minhash_bands", sf_dir),
-        variant,
-        lambda: minhash_bands(sets).select("doc_id", "band", "sig"),
-    )
+    bands = persisted(minhash_bands(sets).select("doc_id", "band", "sig"))
     a = bands.alias("a")
     b = bands.alias("b")
     cand = (
@@ -516,7 +499,7 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache). At 100 TB this is the standard materialization point — write
     fingerprints (n_docs x 17 bytes, ~1/1000th of the corpus) to parquet
     once, run the pair search on that table."""
-    sh = _simhash_words(spark, sf_dir).cache()
+    sh = persisted(_simhash_words(spark, sf_dir))
     blocks = [
         (F.shiftright(F.col("hi" if i < 4 else "lo"), 24 - 8 * (i % 4)).bitwiseAND(F.lit(255)))
         for i in range(8)

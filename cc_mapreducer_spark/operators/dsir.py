@@ -46,6 +46,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from cc_mapreducer_spark.memo import persisted
 from cc_mapreducer_spark.operators.dedup import _SPARK_TOKS
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table
@@ -101,9 +102,9 @@ def importance_weights(
 ) -> DataFrame:
     """(doc_id, lang, weight): per-doc DSIR log importance weight."""
     # the histogram feeds TWO consumers (the bucket models, the per-doc
-    # contributions) — cache it so the tokenize+window pipeline runs
+    # contributions) — persist it so the tokenize+window pipeline runs
     # once (at scale: the parquet feature-table checkpoint)
-    db = doc_bucket_counts(docs, n_buckets).cache()
+    db = persisted(doc_bucket_counts(docs, n_buckets))
     # BOTH count models in ONE aggregate pass (the target model is a
     # conditional sum, not a second scan): r7's dsir A/B measured the
     # old raw/tgt two-agg shape — each consumed twice, by ratios AND
@@ -112,12 +113,14 @@ def importance_weights(
     # sums, so cr/ct/nr/nt are bit-identical to the two-pass form and
     # the DuckDB oracle needs no change. One pass over the data is also
     # the right 100 TB plan.
-    models = db.groupBy("bucket").agg(
-        F.sum("n").alias("cr"),
-        F.sum(
-            F.when(F.col("lang") == target_lang, F.col("n")).otherwise(F.lit(0))
-        ).alias("ct"),
-    ).cache()  # <= n_buckets rows, consumed by totals AND ratios
+    models = persisted(  # <= n_buckets rows, consumed by totals AND ratios
+        db.groupBy("bucket").agg(
+            F.sum("n").alias("cr"),
+            F.sum(
+                F.when(F.col("lang") == target_lang, F.col("n")).otherwise(F.lit(0))
+            ).alias("ct"),
+        )
+    )
     totals = models.agg(F.sum("cr").alias("nr"), F.sum("ct").alias("nt"))
     ratios = (
         models.crossJoin(F.broadcast(totals))

@@ -72,6 +72,7 @@ from cc_mapreducer_spark.functions.media_codec import (
     _png_chunk,
     decode_png_pixels,
 )
+from cc_mapreducer_spark.memo import persisted
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
 
@@ -351,21 +352,12 @@ def image_dhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint against a pure-python replica of decode + resample +
     hash, and pins the recompressed variant to its base's EXACT hash.
 
-    The frame is session-persisted per corpus (the similarity._persisted
-    discipline): the fingerprint table is the family's standing
-    artifact, and the pair probe, the cluster resolution, and the
-    digest suite all consume it — without the memo the PNG encode +
+    The frame is session-persisted per corpus (memo.persisted): the
+    fingerprint table is the family's standing artifact, and the pair
+    probe, the cluster resolution, and the digest suite all consume it — without the memo the PNG encode +
     decode pass re-ran once per consumer (measured: the cluster leg
     alone paid it twice)."""
-    from cc_mapreducer_spark.operators.similarity import _persisted
-
-    source = load_table(spark, sf_dir, "documents")
-    return _persisted(
-        spark,
-        ("image_dhash", sf_dir),
-        (tuple(sorted(source.inputFiles())),),
-        lambda: image_table(spark, sf_dir).mapInPandas(_dhash_batch, FP_SCHEMA),
-    )
+    return persisted(image_table(spark, sf_dir).mapInPandas(_dhash_batch, FP_SCHEMA))
 
 
 @register("image_near_dup_pairs", oracle=_PAIRS_SQL, driver=False)

@@ -51,6 +51,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.memo import value
 from cc_mapreducer_spark.operators.similarity import _query_matrix, _topk
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table
@@ -90,34 +91,6 @@ def _shortlist_n(n_vecs: int) -> int:
 _ROUND = 9
 
 
-# In-session memo for trained artifacts (codebooks here; coarse
-# centroids in similarity.py use the same helper): training is
-# deterministic and once-offline at scale — a serving job loads the
-# persisted artifact, it never retrains per query. The memo is the
-# local stand-in (same pattern as similarity._PERSISTED for LSH index
-# frames). Key includes the embeddings file's identity (mtime+size) so
-# an in-session overwrite of the corpus misses and retrains, plus every
-# hyperparameter the artifact depends on.
-_TRAIN_MEMO: dict[tuple, np.ndarray] = {}
-
-
-def train_memo_key(spark: SparkSession, sf_dir: str, *params) -> tuple:
-    import os
-
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(p)
-        sig = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        sig = None
-    return (
-        spark.sparkContext.applicationId,
-        os.path.realpath(sf_dir),
-        sig,
-        params,
-    )
-
-
 def _sub_d2(xm: np.ndarray, cent: np.ndarray) -> np.ndarray:
     """(n, K) squared distances of subspace slices to subspace centroids
     via a LEFT-ASSOCIATED per-dim fold of (c_d - x_d)^2 — the exact
@@ -138,7 +111,7 @@ def pq_train(spark: SparkSession, sf_dir: str) -> np.ndarray:
     """Train per-subspace codebooks: (M, K, dim/M) float64, driver-side
     on the deterministic sample (first _PQ_TRAIN_N vec_ids) — at scale
     a once-offline job; only encode and search are distributed
-    (in-session the tensor is memoized — see _TRAIN_MEMO).
+    (in-session the tensor is memoized per corpus, see memo.value).
 
     Cross-engine reproducible since r11 (the kmeans_cluster_sizes
     playbook, operators/kmeans.py): init = each subspace's first _PQ_K
@@ -148,13 +121,18 @@ def pq_train(spark: SparkSession, sf_dir: str) -> np.ndarray:
     mean absorbed onto the 1e-9 q() grid with the boundary-hazard
     guard. The DuckDB oracle (_ivfpq_sql below) re-derives this exact
     tensor. Empty cells keep their previous centroid."""
+    return value(
+        spark,
+        "pq_codebooks",
+        (sf_dir, _PQ_M, _PQ_K, _PQ_TRAIN_N, _PQ_ITERS),
+        [f"{sf_dir}/embeddings.parquet"],
+        lambda: _train_codebooks(spark, sf_dir),
+    )
+
+
+def _train_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
     from cc_mapreducer_spark.operators.kmeans import _q, _q_guard, _unit
 
-    key = train_memo_key(
-        spark, sf_dir, "pq-det", _PQ_M, _PQ_K, _PQ_TRAIN_N, _PQ_ITERS
-    )
-    if key in _TRAIN_MEMO:
-        return _TRAIN_MEMO[key]
     emb = load_table(spark, sf_dir, "embeddings")
     rows = sorted(
         emb.filter(F.col("vec_id") < _PQ_TRAIN_N).select("vec_id", "embedding").collect()
@@ -179,7 +157,6 @@ def pq_train(spark: SparkSession, sf_dir: str) -> np.ndarray:
                     new[c] = _q(mean)
             cent = new
         books[m] = cent
-    _TRAIN_MEMO[key] = books
     return books
 
 

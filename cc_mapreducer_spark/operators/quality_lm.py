@@ -53,6 +53,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.memo import persisted
 from cc_mapreducer_spark.operators.text_analysis import _DUCK_WORDS, _SPARK_WORDS
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
@@ -105,7 +106,7 @@ def lm_doc_scores(docs: DataFrame, lam: float = LAM) -> DataFrame:
 
     Materialization (r11, guide §2.4/§5): uni and bi — THE trained
     language model, the artifact CCNet trains once and serves many
-    times — are persisted through the keyed memo. Without it Catalyst
+    times — are persisted through memo.persisted. Without it Catalyst
     re-derives the whole token stream under every consumer (uni feeds
     two broadcasts plus consts, bi the score join, and the score
     pipeline itself is consumed twice by the bucketing caller): the r11
@@ -115,23 +116,11 @@ def lm_doc_scores(docs: DataFrame, lam: float = LAM) -> DataFrame:
     token stream itself is too big to materialize at 100 TB."""
     toks = token_stream(docs)
     uni_raw, bi_raw, _ = train_counts(toks)
-    from cc_mapreducer_spark.operators.similarity import (
-        _frame_files,
-        _frame_identity,
-        _persisted,
-    )
-
-    spark = docs.sparkSession
-    # Logical key = the corpus's plan identity (+ lam): distinct corpora
-    # — including in-memory ones with no inputFiles, and distinct
-    # transformations over the same files — get their own slots instead
-    # of colliding on (or thrashing) one (ADVICE r11 high). Variant =
-    # the current file listing, so an in-session path overwrite still
-    # misses and rebuilds.
-    ident = (_frame_identity(docs), lam)
-    variant = (_frame_files(docs),)
-    uni = _persisted(spark, ("lm_uni", *ident), variant, lambda: uni_raw)
-    bi = _persisted(spark, ("lm_bi", *ident), variant, lambda: bi_raw)
+    # The plan is the memo identity, so distinct corpora — including
+    # in-memory ones with no input files, and distinct transformations
+    # over the same files — get their own entries (ADVICE r11 high).
+    uni = persisted(uni_raw)
+    bi = persisted(bi_raw)
     consts = uni.agg(
         F.sum("cu").cast("bigint").alias("n_total"),
         F.count("*").cast("bigint").alias("n_vocab"),
@@ -169,23 +158,12 @@ def lm_quality_buckets(docs: DataFrame, lam: float = LAM) -> DataFrame:
     model). Documents with zero tokens keep NULL score and bucket.
 
     The doc-score table (one row per doc — corpus/10^3-sized) persists
-    through the keyed memo: it feeds BOTH the tertile thresholds and
+    through memo.persisted: it feeds BOTH the tertile thresholds and
     the final join, and without the materialization the entire scoring
     pipeline (scan -> explode -> model joins -> ordered fold) executes
     twice. CCNet itself materializes exactly this table before
     bucketing."""
-    from cc_mapreducer_spark.operators.similarity import (
-        _frame_files,
-        _frame_identity,
-        _persisted,
-    )
-
-    doc = _persisted(
-        docs.sparkSession,
-        ("lm_doc_scores", _frame_identity(docs), lam),
-        (_frame_files(docs),),
-        lambda: lm_doc_scores(docs, lam),
-    )
+    doc = persisted(lm_doc_scores(docs, lam))
     th = doc.agg(
         F.percentile("ppl", F.lit(1.0 / 3)).alias("t1"),
         F.percentile("ppl", F.lit(2.0 / 3)).alias("t2"),

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from cc_mapreducer_spark.memo import persisted
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
 
@@ -318,19 +319,11 @@ def tfidf_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tf — the inverted-index posting table — is consumed twice (df
     # derivation + the score join), and without materialization the
     # scan->explode->groupBy pipeline executes once per consumer (the
-    # r11 before-plan shows it twice). Persist through the keyed memo:
-    # a search pipeline materializes exactly this table once at any
+    # r11 before-plan shows it twice). Persist it (memo.persisted): a
+    # search pipeline materializes exactly this table once at any
     # scale; everything downstream is vocabulary/posting-sized.
-    from cc_mapreducer_spark.operators.similarity import _persisted
-
-    tf_raw = toks.groupBy("doc_id", "word").agg(
-        F.count("*").cast("bigint").alias("tf")
-    )
-    tf = _persisted(
-        spark,
-        ("tfidf_tf", sf_dir),
-        (tuple(sorted(docs.inputFiles())),),
-        lambda: tf_raw,
+    tf = persisted(
+        toks.groupBy("doc_id", "word").agg(F.count("*").cast("bigint").alias("tf"))
     )
     dfx = tf.groupBy("word").agg(F.count("*").cast("bigint").alias("df"))
     scored = tf.join(dfx, "word").select(

@@ -44,6 +44,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from cc_mapreducer_spark.memo import persisted, value
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table
 
@@ -230,73 +231,6 @@ def _cosine_pair_udf(*cols):
     return _cosine_pair_cached(*cols)
 
 
-# Persisted LSH index frames, keyed by (applicationId, source files,
-# params): the bucketed frame feeds several join branches per query AND
-# repeated invocations of the same query (bench reps, driver sweeps).
-# Building a fresh .persist() per invocation would accumulate cached
-# copies for the session lifetime (CacheManager holds plans until
-# unpersist/clearCache); reusing one keyed entry bounds the cache at one
-# frame per source. At 100 TB this is the materialized-parquet LSH index
-# table. Correctness guards:
-# - the key includes the source's CURRENT file listing, so overwriting a
-#   path in-session misses the memo and rebuilds instead of serving the
-#   old files' rows (or their FileNotFound ghosts);
-# - entries for stopped sessions are evicted on access (one live session
-#   per process here), so dead-JVM plan handles don't accumulate;
-# - an externally cleared cache is re-persisted on next access rather
-#   than silently downgrading every later invocation to recompute.
-_PERSISTED: dict[tuple, tuple[tuple, DataFrame]] = {}
-
-
-def _frame_identity(df: DataFrame) -> int:
-    """Semantic hash of the frame's ANALYZED plan — a stable identity
-    for the corpus definition itself. Two different corpora collide on
-    ``inputFiles()`` whenever they share backing files (a filtered or
-    transformed frame over the same parquet) or have none at all
-    (``createDataFrame`` local relations return ``[]``), so a memo
-    keyed on files alone would serve corpus A's cached artifact to
-    corpus B (ADVICE r11 high: lm_doc_scores(B) after lm_doc_scores(A)
-    scored B against A's model). The semantic hash distinguishes those
-    plans; pair it with ``_frame_files`` as the staleness variant."""
-    return int(df._jdf.queryExecution().analyzed().semanticHash())
-
-
-def _frame_files(df: DataFrame) -> tuple:
-    """Current file listing of every source the frame reads — the
-    staleness variant for ``_persisted`` (an in-session path overwrite
-    keeps the plan identity but changes the listing). Built from the
-    frame ACTUALLY persisted, so it covers all of its source tables,
-    not just one of them (ADVICE r11: e2e_adm tracked only documents'
-    files while deriving from robots/blocklist/pages too)."""
-    return tuple(sorted(df.inputFiles()))
-
-
-def _persisted(spark: SparkSession, logical: tuple, variant: tuple, build) -> DataFrame:
-    """One persisted frame per (session, logical source): ``variant``
-    captures everything the built frame depends on (current file
-    listing, bucket width); when it changes — path overwritten
-    in-session, corpus crossed a width boundary — the superseded frame
-    is unpersisted and replaced, not stranded in the CacheManager."""
-    from pyspark import StorageLevel
-
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _PERSISTED if k[0] != app]:
-        del _PERSISTED[k]
-    key = (app, *logical)
-    hit = _PERSISTED.get(key)
-    if hit is not None and hit[0] == variant:
-        df = hit[1]
-        if df.storageLevel == StorageLevel.NONE:  # externally clearCache'd
-            df = df.persist()
-            _PERSISTED[key] = (variant, df)
-        return df
-    if hit is not None:
-        hit[1].unpersist()
-    df = build().persist()
-    _PERSISTED[key] = (variant, df)
-    return df
-
-
 def _nd_stacked(emb: DataFrame, nbits: int) -> DataFrame:
     """(t, bucket, vec_id, embedding) — one row per (vector, table) with
     the size-adaptive prefix bucket. THE near-dup blocking layout: the
@@ -359,21 +293,14 @@ def similarity_topk_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     OR join. Per-table key is 4 sign bits; scanned fraction on i.i.d.
     corpus ~ tables * 2^-bits; recall 1-(1-p)^tables (measured >= 0.25
     floor in tests/test_similarity.py vs brute force)."""
-    source = load_table(spark, sf_dir, "embeddings")
-
-    def build():
-        e = source
-        for t in range(_N_TABLES):
-            e = e.withColumn(f"bkt{t}", F.expr(_table_bucket_spark(t)))
-        return e
-
+    emb = load_table(spark, sf_dir, "embeddings")
+    for t in range(_N_TABLES):
+        emb = emb.withColumn(f"bkt{t}", F.expr(_table_bucket_spark(t)))
     # Without reuse each of the _N_TABLES join branches re-evaluates the
     # 24 sign-bit folds over the whole corpus (6x the bucketing CPU —
     # negligible at local SF where per-stage overhead dominates, a real
-    # 6x at 100 TB). See _persisted for the caching policy.
-    emb = _persisted(
-        spark, ("signlsh", sf_dir), (tuple(sorted(source.inputFiles())),), build
-    )
+    # 6x at 100 TB). See memo.py for the caching policy.
+    emb = persisted(emb)
     q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
@@ -478,29 +405,18 @@ SELECT vec_a, vec_b, cosine FROM scored WHERE cosine >= {_NEAR_DUP_T}
 """
 
 
-def embedding_near_dup_pairs(
-    emb: DataFrame, n_rows: int | None = None, cache_key: tuple | None = None
-) -> DataFrame:
+def embedding_near_dup_pairs(emb: DataFrame, n_rows: int | None = None) -> DataFrame:
     """Near-duplicate candidate pairs over any (vec_id, embedding) frame:
     multi-table sign-LSH self-join with a size-adaptive bucket width (see
     near_dup_bits_for), exact cosine on candidates only, distinct on the
     scored pair (a pair colliding in several tables scores identically, so
     DISTINCT on the scalars dedups without shuffling embeddings twice).
 
-    cache_key (when the source is nameable, e.g. a table path) lets both
-    sides of the self-join — and repeated invocations — share one
-    persisted bucketed frame via _persisted; without it the folds are
-    simply recomputed per side (correct, no cache to leak)."""
+    Both sides of the self-join — and repeated invocations over an equal
+    plan — share one persisted bucketed frame (memo.persisted)."""
     if n_rows is None:
         n_rows = emb.count()  # count-star over parquet: metadata-cheap
-    nbits = near_dup_bits_for(n_rows)
-    if cache_key is not None:
-        variant = (tuple(sorted(emb.inputFiles())), nbits)
-        stacked = _persisted(
-            emb.sparkSession, cache_key, variant, lambda: _nd_stacked(emb, nbits)
-        )
-    else:
-        stacked = _nd_stacked(emb, nbits)
+    stacked = persisted(_nd_stacked(emb, near_dup_bits_for(n_rows)))
     a = stacked.select(
         "t", "bucket", F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea")
     )
@@ -524,7 +440,7 @@ def near_dup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates only (Arrow-batched numpy; threshold applied to the
     9dp-rounded value in both engines)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_near_dup_pairs(emb, cache_key=("near_dup", sf_dir))
+    return embedding_near_dup_pairs(emb)
 
 
 # --------------------------------------------------------------------------
@@ -552,7 +468,7 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> np.ndarray:
     (k x dim floats) — at 100 TB you train it once offline on a sample
     and broadcast it; the expensive part (cell assignment) stays
     distributed. In-session the trained tensor is memoized per corpus
-    identity (pq.train_memo_key).
+    (memo.value, keyed on the hyperparameters).
 
     Cross-engine reproducible by the kmeans playbook: init = the first
     _IVF_K sample vectors (vec_id order, unit, quantized), every
@@ -560,6 +476,16 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> np.ndarray:
     operators/kmeans.py), member-axis means absorbed onto the 1e-9 q()
     grid with the boundary-hazard guard — so the DuckDB oracle in
     operators/pq.py re-derives this exact tensor from first principles."""
+    return value(
+        spark,
+        "ivf_centroids",
+        (sf_dir, _IVF_K, _IVF_TRAIN_N, _IVF_ITERS),
+        [f"{sf_dir}/embeddings.parquet"],
+        lambda: _train_ivf_centroids(spark, sf_dir),
+    )
+
+
+def _train_ivf_centroids(spark: SparkSession, sf_dir: str) -> np.ndarray:
     from cc_mapreducer_spark.operators.kmeans import (
         _norm_fold,
         _q,
@@ -567,13 +493,7 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> np.ndarray:
         _unit,
         _dots,
     )
-    from cc_mapreducer_spark.operators.pq import _TRAIN_MEMO, train_memo_key
 
-    key = train_memo_key(
-        spark, sf_dir, "ivf-det", _IVF_K, _IVF_TRAIN_N, _IVF_ITERS
-    )
-    if key in _TRAIN_MEMO:
-        return _TRAIN_MEMO[key]
     emb = load_table(spark, sf_dir, "embeddings")
     rows = sorted(
         emb.filter(F.col("vec_id") < _IVF_TRAIN_N).select("vec_id", "embedding").collect()
@@ -592,7 +512,6 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> np.ndarray:
                     _q_guard(m / nrm, f"ivf iter {it} cell {c}")
                     new[c] = _q(m / nrm)
         cent = new
-    _TRAIN_MEMO[key] = cent
     return cent
 
 

@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.memo import persisted
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
 
@@ -201,27 +202,17 @@ def cms_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "word string, true_cnt bigint, cms_est bigint, "
             "overcount bigint, within_eps boolean",
         )
-    # Both small tables persist through the keyed memo: the sketch is
+    # Both small tables persist through memo.persisted: the sketch is
     # BY DEFINITION the materialized artifact (<= d*w rows), and the
     # probe table (<= _N_PROBES rows) feeds both the estimate join and
     # the final report — without the persist each consumer re-ran the
     # whole scan->explode->agg pipeline (r11; guide §2.4).
-    from cc_mapreducer_spark.operators.similarity import _persisted
-
-    variant = (tuple(sorted(docs.inputFiles())),)
-    sketch = _persisted(
-        spark, ("cms_sketch", sf_dir), variant, lambda: build_cms(words)
-    )
-    probes = _persisted(
-        spark,
-        ("cms_probes", sf_dir),
-        variant,
-        lambda: (
-            words.groupBy("word")
-            .agg(F.count("*").cast("bigint").alias("true_cnt"))
-            .orderBy(F.desc("true_cnt"), "word")
-            .limit(_N_PROBES)
-        ),
+    sketch = persisted(build_cms(words))
+    probes = persisted(
+        words.groupBy("word")
+        .agg(F.count("*").cast("bigint").alias("true_cnt"))
+        .orderBy(F.desc("true_cnt"), "word")
+        .limit(_N_PROBES)
     )
     est = cms_estimate(sketch, probes)
     # Match the oracle exactly: ceil(e * N / w) computed in double.

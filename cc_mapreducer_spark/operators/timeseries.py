@@ -45,6 +45,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from cc_mapreducer_spark.memo import persisted
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table
 
@@ -70,19 +71,21 @@ def resample_locf(
     src = events.repartition(F.col(entity))
     # The bucket agg feeds TWO consumers (the span->grid derivation and
     # the fill join); without an explicit materialization point Spark
-    # plans each consumer its own scan+shuffle of the RAW input. cache()
+    # plans each consumer its own scan+shuffle of the RAW input. Persisting
     # here = the parquet stage-checkpoint a 100 TB pipeline would write;
     # with it the raw data is scanned and shuffled exactly once, and all
     # later exchanges move only bucket-aggregate rows.
-    agg = src.groupBy(F.col(entity), bucket.alias("__bucket")).agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.col(value_col).cast("decimal(14,2)"))
-        .cast("double")
-        .alias("sum_value"),
-        F.max(F.struct(F.col(ts_col), F.col(order_col), F.col(value_col)))
-        .getField(value_col)
-        .alias("__lastv"),
-    ).cache()
+    agg = persisted(
+        src.groupBy(F.col(entity), bucket.alias("__bucket")).agg(
+            F.count("*").alias("n_events"),
+            F.sum(F.col(value_col).cast("decimal(14,2)"))
+            .cast("double")
+            .alias("sum_value"),
+            F.max(F.struct(F.col(ts_col), F.col(order_col), F.col(value_col)))
+            .getField(value_col)
+            .alias("__lastv"),
+        )
+    )
     span = agg.groupBy(entity).agg(
         F.min("__bucket").alias("__b0"), F.max("__bucket").alias("__b1")
     )

@@ -236,7 +236,7 @@ def tokenizer_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # WordPiece: ONE training supplies both the merge table and the
     # vocab the MaxMatch serving encodes with (the saved-artifact
     # save/load seam is exercised by wordpiece_token_stats; re-training
-    # through _model_path_for here would double the 40-round cost)
+    # through the saved model here would double the 40-round cost)
     from cc_mapreducer_spark.operators.wordpiece import train_wordpiece
 
     wp_merges, wp_vocab = train_wordpiece(docs)

@@ -96,6 +96,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from cc_mapreducer_spark.memo import value
 from cc_mapreducer_spark.operators.bpe import word_freq_table
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
@@ -382,30 +383,6 @@ def unigram_encode_from_model(
     return encode_unigram(word_freq_table(docs), unigram_load_model(spark, path))
 
 
-# per-process memo: corpus input files -> trained-model artifact path.
-# Training is deterministic (integer count grid), so re-serving a model
-# that an earlier call of THIS process trained on the same files is
-# exact; the first call per process always (re)trains and overwrites.
-_MODEL_PATHS: dict[tuple[str, ...], str] = {}
-
-
-def _model_path_for(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import os
-    import tempfile
-
-    files = tuple(sorted(load_table(spark, sf_dir, "documents").inputFiles()))
-    path = _MODEL_PATHS.get(files)
-    if path is None:
-        tag = hashlib.md5("|".join(files).encode()).hexdigest()[:12]
-        path = os.path.join(
-            tempfile.gettempdir(), f"cc_mr_spark_unigram_model_{tag}"
-        )
-        unigram_save_model(spark, sf_dir, path)
-        _MODEL_PATHS[files] = path
-    return path
-
-
 # --------------------------------------------------------------------------
 # the DuckDB oracle: 15 EM steps + 4 prunes + Viterbi, unrolled
 # --------------------------------------------------------------------------
@@ -628,6 +605,19 @@ def unigram_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     schedule — all {PRUNE_ROUNDS}x{EM_ITERS}+{EM_ITERS} EM steps on the
     integer count grid, every prune, and the Viterbi serving chain —
     from first principles (module docstring)."""
-    return unigram_encode_from_model(
-        spark, sf_dir, _model_path_for(spark, sf_dir)
+    import hashlib
+    import os
+    import tempfile
+
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    path = os.path.join(tempfile.gettempdir(), f"cc_mr_spark_unigram_model_{tag}")
+    # trained and saved once per corpus per session (deterministic
+    # training, so re-serving the saved model is exact)
+    value(
+        spark,
+        "unigram_model",
+        (path,),
+        [f"{sf_dir}/documents.parquet"],
+        lambda: unigram_save_model(spark, sf_dir, path),
     )
+    return unigram_encode_from_model(spark, sf_dir, path)

@@ -40,6 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.memo import value
 from cc_mapreducer_spark.operators.bpe import word_freq_table
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
@@ -259,29 +260,6 @@ def wordpiece_load_model(spark: SparkSession, path: str) -> list[str]:
     return sorted(r["piece"] for r in spark.read.parquet(path).collect())
 
 
-# per-process memo: corpus input files -> trained vocab artifact.
-# Training is deterministic (integer counts, total-order argmax), so
-# re-serving within a process is exact; the first call always trains.
-_MODEL_PATHS: dict[tuple[str, ...], str] = {}
-
-
-def _model_path_for(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import os
-    import tempfile
-
-    files = tuple(sorted(load_table(spark, sf_dir, "documents").inputFiles()))
-    path = _MODEL_PATHS.get(files)
-    if path is None:
-        tag = hashlib.md5("|".join(files).encode()).hexdigest()[:12]
-        path = os.path.join(
-            tempfile.gettempdir(), f"cc_mr_spark_wordpiece_model_{tag}"
-        )
-        wordpiece_save_model(spark, sf_dir, path)
-        _MODEL_PATHS[files] = path
-    return path
-
-
 from cc_mapreducer_spark.functions.trainer_sql import wp_stats_sql
 
 def encode_wordpiece_stats(docs: DataFrame, vocab: list[str]) -> DataFrame:
@@ -350,8 +328,23 @@ def wordpiece_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the kernel) — r11's shape joined the full token-array
     stream back to the corpus on doc_id and shuffled it, for an
     aggregation that reads none of the tokens."""
+    import hashlib
+    import os
+    import tempfile
+
     docs = spread(load_table(spark, sf_dir, "documents"))
-    vocab = wordpiece_load_model(spark, _model_path_for(spark, sf_dir))
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    path = os.path.join(tempfile.gettempdir(), f"cc_mr_spark_wordpiece_model_{tag}")
+    # trained and saved once per corpus per session (deterministic
+    # training, so re-serving the saved vocab is exact)
+    value(
+        spark,
+        "wordpiece_model",
+        (path,),
+        [f"{sf_dir}/documents.parquet"],
+        lambda: wordpiece_save_model(spark, sf_dir, path),
+    )
+    vocab = wordpiece_load_model(spark, path)
     per_doc = encode_wordpiece_stats(docs, vocab)
     return per_doc.groupBy("source").agg(
         F.count("*").alias("n_docs"),

@@ -25,22 +25,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.memo import value
 from cc_mapreducer_spark.registry import register
 
 _SINK_SEQ = 0
-
-# One staging dir per events file, reused across invocations and removed at
-# interpreter exit — repeated query runs must not leak temp dirs (ADVICE r1).
-_STAGE_DIRS: dict[str, str] = {}
-
-# Schema per (session, resolved events file): constant per file, so don't
-# rebuild a batch DataFrame (parquet footer read) for every streaming
-# query (ADVICE r2 — streaming_view_purchase_join builds two streams per
-# run). Keyed by applicationId too: the schema for an INT64-nanos file is
-# only readable because _read_events set the nanosAsLong conf on THAT
-# session — a fresh session in the same process must re-derive it so the
-# conf is re-applied, not inherit a schema its confs can't execute.
-_SCHEMAS: dict[tuple[str, str], object] = {}
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -49,8 +37,13 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     both physical types the driver has shipped (INT64 nanos / micros).
 
     The file source requires a DIRECTORY; the driver ships a single
-    parquet file, so stage a temp dir with a symlink to it (cached per
-    source file, cleaned up via atexit)."""
+    parquet file, so stage a temp dir with a symlink to it (removed at
+    interpreter exit). The staging dir and the schema are built once per
+    session and events file (memo.value), so repeated query runs neither
+    leak temp dirs (ADVICE r1) nor re-read the parquet footer per stream
+    (ADVICE r2 — streaming_view_purchase_join builds two streams per
+    run). Per session, because an INT64-nanos file is only readable
+    through the nanosAsLong conf _read_events sets on THAT session."""
     import atexit
     import os
     import shutil
@@ -59,20 +52,14 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cc_mapreducer_spark.tables import _normalize_event_ts, _read_events
 
     path = os.path.abspath(f"{sf_dir}/events.parquet")
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _SCHEMAS if k[0] != app]:  # evict stopped sessions
-        del _SCHEMAS[k]
-    schema_key = (app, path)
-    schema = _SCHEMAS.get(schema_key)
-    if schema is None:
-        schema = _read_events(spark, sf_dir).schema
-        _SCHEMAS[schema_key] = schema
-    stage_dir = _STAGE_DIRS.get(path)
-    if stage_dir is None:
+
+    def stage():
         stage_dir = tempfile.mkdtemp(prefix="cc_mr_spark_stream_")
         os.symlink(path, os.path.join(stage_dir, "events.parquet"))
-        _STAGE_DIRS[path] = stage_dir
         atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
+        return _read_events(spark, sf_dir).schema, stage_dir
+
+    schema, stage_dir = value(spark, "events_stream", (path,), [path], stage)
     stream = spark.readStream.schema(schema).parquet(stage_dir)
     return _normalize_event_ts(stream)
 

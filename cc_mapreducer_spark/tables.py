@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.memo import value
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -27,12 +29,6 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# scan-width probe results keyed by the scan's file set: the answer is a
-# constant per (files, session), and df.rdd.getNumPartitions() instantiates
-# the RDD lineage — pay that once per table, not once per query build.
-_SPREAD_NPARTS: dict[tuple[str, ...], int] = {}
-
-
 def spread(df: DataFrame) -> DataFrame:
     """Widen a narrow scan before CPU-heavy per-row expression work.
 
@@ -44,11 +40,12 @@ def spread(df: DataFrame) -> DataFrame:
     parallelism for the price of shuffling the (small) input."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    files = tuple(df.inputFiles())  # metadata-only (FileIndex listing)
-    nparts = _SPREAD_NPARTS.get(files)
-    if nparts is None:
-        nparts = df.rdd.getNumPartitions()
-        _SPREAD_NPARTS[files] = nparts
+    files = tuple(sorted(df.inputFiles()))  # metadata-only (FileIndex listing)
+    # df.rdd.getNumPartitions() instantiates the RDD lineage: pay that
+    # once per scanned file set, not once per query build
+    nparts = value(
+        spark, "scan_width", files, files, lambda: df.rdd.getNumPartitions()
+    )
     if nparts < target:
         return df.repartition(target)
     return df

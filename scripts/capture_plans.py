@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Capture .explain("formatted") for every headline bench lane into
-plans/r11/<query>_<tag>.txt (tag = before/after, argv[1]).
+plans/<dir>/<query>_<tag>.txt (tag = before/after, argv[1]), where
+<dir> is the SPARK_GRAFT_PLAN_DIR environment variable (default r12).
 
 Usage: python scripts/capture_plans.py <tag> [query ...]
 With no query names, captures the whole bench HEADLINE list.

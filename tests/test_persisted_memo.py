@@ -1,13 +1,15 @@
-"""Focused tests for the keyed persist memo (similarity._persisted)
-variant/identity fixes (r12, ADVICE r11 + VERDICT r11 item 9):
+"""Tests for the in-session artifact memo (cc_mapreducer_spark/memo.py):
 
-- two DIFFERENT in-memory corpora must not collide on one memo slot
+- two DIFFERENT in-memory corpora must not collide on one entry
   (the r11 bug: lm_doc_scores(B) after lm_doc_scores(A) was scored
   against A's cached model because inputFiles() is [] for both);
 - an in-session overwrite of a source table must MISS the memo and
-  rebuild (the staleness scenario the variant exists to catch);
-- two corpora in one session coexist in separate slots instead of
-  thrashing a single one.
+  rebuild, also when the file is rewritten in place under its old name;
+- two corpora in one session coexist in separate entries instead of
+  thrashing a single one;
+- the store is bounded, and evicting a frame unpersists it;
+- a second call of a query that reaches the store adds no cached data
+  and returns the same rows.
 """
 
 from __future__ import annotations
@@ -16,21 +18,37 @@ import math
 import shutil
 from collections import Counter
 
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
-from cc_mapreducer_spark.operators import similarity
+from cc_mapreducer_spark import memo, registry
+from cc_mapreducer_spark.operators.dedup import simhash_near_pairs
 from cc_mapreducer_spark.operators.quality_lm import LAM, lm_doc_scores
+from cc_mapreducer_spark.operators.search import tfidf_doc_keywords
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
-def _clear_memo():
-    for _, df in similarity._PERSISTED.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    similarity._PERSISTED.clear()
+def _clear_memo(spark):
+    spark.catalog.clearCache()
+    memo._ENTRIES.clear()
+
+
+@pytest.fixture(autouse=True)
+def _fresh_memo(spark):
+    # a test here persists whole source scans; leaving them cached would
+    # change the physical plans later test modules assert on
+    _clear_memo(spark)
+    yield
+    _clear_memo(spark)
+
+
+def _persistent_rdds(spark) -> int:
+    """Persistent RDDs, less the localCheckpoint ones: iterative operators
+    truncate lineage with those on every call, outside the memo."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+    return sum(1 for r in rdds if not r.rdd().isLocallyCheckpointed())
 
 
 def _py_ppl(texts: dict[int, str], lam: float = LAM) -> dict[int, float]:
@@ -62,7 +80,6 @@ def _py_ppl(texts: dict[int, str], lam: float = LAM) -> dict[int, float]:
 def test_lm_memo_distinguishes_in_memory_corpora(spark):
     """ADVICE r11 high: corpus B scored after corpus A must be scored
     against B's OWN model, not A's cached one."""
-    _clear_memo()
     a_texts = {1: "the cat sat on the mat", 2: "the dog sat on the rug"}
     b_texts = {1: "zulu yankee xray walrus", 2: "zulu zulu zulu zulu"}
     mk = lambda t: spark.createDataFrame(  # noqa: E731
@@ -76,71 +93,140 @@ def test_lm_memo_distinguishes_in_memory_corpora(spark):
             f"doc {d}: scored {got_b[d]} vs self-trained {ppl} — "
             "B was scored against a stale cached model"
         )
-    _clear_memo()
 
 
 def test_two_corpora_coexist_without_thrash(spark):
     """ADVICE r11 low: alternating corpora must occupy separate memo
-    slots (same persisted frame served again), not rebuild one slot."""
-    _clear_memo()
+    entries (same persisted frame served again), not rebuild one."""
     a = spark.createDataFrame([(1, "aa bb aa bb")], "doc_id long, text string")
     b = spark.createDataFrame([(1, "cc dd cc dd")], "doc_id long, text string")
     lm_doc_scores(a).collect()
     lm_doc_scores(b).collect()
-    n_after_both = len(similarity._PERSISTED)
-    frames = {k: v[1] for k, v in similarity._PERSISTED.items()}
-    lm_doc_scores(a).collect()  # must hit, not evict B's slots
-    assert len(similarity._PERSISTED) == n_after_both
-    for k, df in frames.items():
-        assert similarity._PERSISTED[k][1] is df, f"slot {k} was rebuilt"
-    _clear_memo()
+    entries = dict(memo._ENTRIES)
+    assert len(entries) == 4  # uni + bi per corpus
+    lm_doc_scores(a).collect()  # must hit, not evict B's entries
+    assert list(memo._ENTRIES) != list(entries), "A's entries were not touched"
+    assert set(memo._ENTRIES) == set(entries)
+    for k, (_, df) in entries.items():
+        assert memo._ENTRIES[k][1] is df, f"entry {k} was rebuilt"
 
 
 def test_memo_misses_on_source_overwrite(spark, tmp_path):
     """VERDICT r11 item 9: overwriting a source table in-session must
     miss the memo (new file listing -> rebuild), never serve the old
     rows."""
-    _clear_memo()
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    shutil.copy(f"{SF_SMOKE}/documents.parquet", sf / "documents.parquet")
-    src = str(sf)
-    docs1 = spark.read.parquet(f"{src}/documents.parquet")
-    built = []
+    path = str(tmp_path / "documents.parquet")
+    spark.read.parquet(f"{SF_SMOKE}/documents.parquet").write.parquet(path)
 
-    def build_from(df):
-        def _b():
-            out = df.groupBy().agg(F.count("*").alias("n"))
-            built.append(out)
-            return out
+    def count_frame():
+        return spark.read.parquet(path).groupBy().agg(F.count("*").alias("n"))
 
-        return _b
-
-    v1 = (similarity._frame_files(docs1),)
-    r1 = similarity._persisted(spark, ("memo_probe", src), v1, build_from(docs1))
-    r1.collect()
-    assert len(built) == 1
-    # same variant -> hit, no rebuild
-    similarity._persisted(spark, ("memo_probe", src), v1, build_from(docs1))
-    assert len(built) == 1
+    r1 = memo.persisted(count_frame())
+    assert r1.collect()[0]["n"] == 500
+    # an equal plan -> hit, no rebuild
+    assert memo.persisted(count_frame()) is r1
     # overwrite the table in-session: fewer rows, new part files
-    sub = docs1.limit(3)
+    sub = spark.read.parquet(path).limit(3)
     sub.write.mode("overwrite").parquet(str(tmp_path / "tmp_out"))
-    (sf / "documents.parquet").unlink()
-    shutil.copytree(tmp_path / "tmp_out", sf / "documents.parquet")
-    docs2 = spark.read.parquet(f"{src}/documents.parquet")
-    v2 = (similarity._frame_files(docs2),)
-    assert v2 != v1, "file listing did not change on overwrite"
-    r2 = similarity._persisted(spark, ("memo_probe", src), v2, build_from(docs2))
-    assert len(built) == 2, "memo served a stale frame after overwrite"
+    shutil.rmtree(path)
+    shutil.copytree(tmp_path / "tmp_out", path)
+    r2 = memo.persisted(count_frame())
+    assert r2 is not r1, "memo served a stale frame after overwrite"
     assert r2.collect()[0]["n"] == 3
-    _clear_memo()
 
 
 def test_frame_identity_separates_same_file_transforms(spark):
     """Two frames over the SAME files but different plans (the other
-    collision inputFiles() cannot see) must get different identities."""
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    collision a file listing cannot see) must get different entries."""
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select("doc_id")
     half = docs.filter(F.col("doc_id") % 2 == 0)
-    assert similarity._frame_files(docs) == similarity._frame_files(half)
-    assert similarity._frame_identity(docs) != similarity._frame_identity(half)
+    assert memo._source_files(docs) == memo._source_files(half)
+    p_docs, p_half = memo.persisted(docs), memo.persisted(half)
+    assert p_docs is not p_half
+    assert (p_docs.count(), p_half.count()) == (500, 250)
+
+
+def test_in_place_overwrite_misses(spark, tmp_path):
+    """A source rewritten in place under the SAME file name keeps the
+    file listing; the (path, mtime_ns, size) signature must still miss,
+    both for a memo entry and for an equal plan's CacheManager entry."""
+    shutil.copyfile(
+        f"{SF_SMOKE}/documents.parquet", tmp_path / "documents.parquet"
+    )
+    sf = str(tmp_path)
+
+    def run():
+        kw = tfidf_doc_keywords(spark, sf).select("doc_id").distinct().count()
+        return kw, simhash_near_pairs(spark, sf).count()
+
+    before = run()
+    table = pq.read_table(tmp_path / "documents.parquet").slice(0, 5)
+    pq.write_table(table, tmp_path / "documents.parquet")
+    after = run()
+    _clear_memo(spark)
+    fresh = run()
+    assert fresh[0] == 5 and before != fresh
+    assert after == fresh, f"stale after overwrite: {after} vs fresh {fresh}"
+
+
+def test_store_is_bounded(spark, monkeypatch):
+    """ADVICE r12 #1: a long session sweeping many corpora keeps at most
+    _MAX_ENTRIES entries, and an evicted frame leaves the cache. The cap
+    is lowered so the sweep stays short; the rule does not depend on it."""
+    cap = 8
+    monkeypatch.setattr(memo, "_MAX_ENTRIES", cap)
+    n_rdds = _persistent_rdds(spark)
+    for i in range(cap + 2):
+        docs = spark.createDataFrame(
+            [(1, f"w{i} x y w{i}")], "doc_id long, text string"
+        )
+        lm_doc_scores(docs).collect()  # persists two frames per corpus
+    assert len(memo._ENTRIES) == cap
+    assert _persistent_rdds(spark) - n_rdds <= cap
+
+
+# Every registered query whose first call at sf0.01 looks up a frame or
+# a trained artifact in the memo. The scan-width entries of
+# tables.spread(), which most queries reach, hold no cached data. Suite
+# keys are left out: each reaches the store only through single queries
+# listed here, and the three largest would add ~2 minutes.
+_STORE_QUERIES = [
+    "ann_recall_digest",
+    "canonical_docs",
+    "classifier_eval_metrics",
+    "cms_word_counts",
+    "collocations_top",
+    "contrastive_negatives",
+    "corpus_to_readers",
+    "crawl_e2e_funnel",
+    "dsir_selected_docs",
+    "duplicate_clusters",
+    "event_resample_locf",
+    "image_dhash_fingerprint",
+    "image_dup_clusters",
+    "image_near_dup_pairs",
+    "leakage_safe_split",
+    "lm_perplexity",
+    "near_dedup_pairs",
+    "near_dup_embeddings",
+    "simhash_near_pairs",
+    "similarity_topk_ivfpq",
+    "similarity_topk_signlsh",
+    "streaming_enriched_events",
+    "streaming_sessionize_watermarked",
+    "streaming_stateful_user_totals",
+    "streaming_windows",
+    "tfidf_doc_keywords",
+    "unigram_token_stats",
+    "wordpiece_token_stats",
+]
+
+
+@pytest.mark.parametrize("name", _STORE_QUERIES)
+def test_second_call_reuses_the_store(spark, name):
+    q = registry.all_queries()[name]
+    first = sorted(str(tuple(r)) for r in q(spark, SF_SMOKE).collect())
+    n_rdds = _persistent_rdds(spark)
+    second = sorted(str(tuple(r)) for r in q(spark, SF_SMOKE).collect())
+    assert _persistent_rdds(spark) == n_rdds, "second call persisted again"
+    assert second == first
