@@ -1149,10 +1149,8 @@ def main() -> None:
         except Exception as e:  # lane evidence is best-effort, headline is not
             detail[lane_name] = {"error": str(e)[:200]}
         print(json.dumps({"detail": lane_name, lane_name: detail[lane_name]}))
-    # Measured perf notes: context the headline numbers need. The
-    # round-over-round comparison is GENERATED from this run's own
-    # timings dict (VERDICT r5 item 5 — the r5 artifact's hand-written
-    # note disagreed with its published headline; this one cannot).
+    # Context the headline numbers need, all computed from this run: a
+    # hand-written note can disagree with the numbers it sits next to.
     detail["notes"] = {
         "headline_vs_prev": _headline_vs_prev(timings),
         # Per-lane JIT/GC attribution (VERDICT r8 items 1/6): every
@@ -1180,278 +1178,9 @@ def main() -> None:
             k for k, v in lane_build.items() if v >= 1.0
         ),
         "jvm_final": _jvm_counters(spark),
-        # r8 drift attribution (VERDICT r8 item 6): the driver's r8 run
-        # drew 40 comparable lanes at 1.53x r7 with UNIFORM per-lane
-        # drift and unchanged plan metrics — code, not plans, was the
-        # suspect. Fresh-session A/B on identical r8 code this session:
-        # simhash_fingerprint drew 21.7s cold / 3.1s warm — the 64-col
-        # agg's JIT compile alone covers the driver's 15.1s draw, and a
-        # full 52-lane x best-of-4 run compiles every lane's codegen
-        # into one 512m cache, where eviction re-exposes compile cost
-        # mid-run (the uniform-drift mechanism). Fixes shipped: 1g code
-        # cache, packed 33-col simhash (cold 1.9s / warm 1.2s measured),
-        # and the per-lane counters above — if a future draw drifts,
-        # lane_jit.comp_ms/codecache_used_mb name the mechanism in the
-        # artifact itself.
-        "drift_attribution_r9": {
-            "simhash_r8_code_fresh_session": {"cold": 21.7, "warm": 3.1},
-            "simhash_r9_packed": {"cold": 1.9, "warm": 1.2},
-            "code_cache": "512m -> 1g",
-        },
-        # r10 drift attribution (VERDICT r10 item 1): the r10 driver
-        # draw put span_dup_coverage at 2.565s (2.36x r9 — above the
-        # 1.77x same-code envelope) and contrastive_negatives at 3.396s
-        # (1.76x) on UNTOUCHED source (spans.py / contrastive.py absent
-        # from the r10 diff; re-verified against the r11 tree). Three
-        # fresh-session best-of-4 draws of exactly these two lanes on
-        # identical code (r11 session, bench lane policy, JIT/GC deltas
-        # captured per lane):
-        #   session 1 — a C2 COMPILATION STORM: 84s/158s of compile
-        #     time landed inside the two lanes (gc 2.0s/13.8s) and the
-        #     draws came back 4.546s and 3.675s, with contrastive's
-        #     cold reps at 54.0s and 26.1s before warming;
-        #   sessions 2-3 — clean JIT (29-54s compile, <0.5s gc): spans
-        #     1.658s / 1.565s, contrastive 2.643s / 2.567s.
-        # Same code, same plans, 2.9x spread on spans purely with JIT
-        # state — the r10 driver values sit INSIDE the observed
-        # fresh-session range, and the slow draws correlate with
-        # comp_ms/gc_ms exactly as the lane_jit instrument predicts.
-        # Verdict: ambient JIT/GC pressure, not a plan change; the two
-        # lanes' r10 'weak' flag is cleared by measurement.
-        "drift_attribution_r10": {
-            "identical_code": True,
-            "span_dup_coverage": {
-                "r9_driver": 1.085,
-                "r10_driver": 2.565,
-                "fresh_best_of_4": [4.546, 1.658, 1.565],
-                "comp_ms": [84176, 53958, 49219],
-                "gc_ms": [2021, 429, 435],
-            },
-            "contrastive_negatives": {
-                "r9_driver": 1.93,
-                "r10_driver": 3.396,
-                "fresh_best_of_4": [3.675, 2.643, 2.567],
-                "comp_ms": [157924, 28630, 32387],
-                "gc_ms": [13810, 102, 190],
-                "cold_reps_session1": [54.04, 26.071],
-            },
-            "mechanism": "C2 compilation storm / GC pressure (session-"
-            "level ambient state); slow draws correlate with comp_ms",
-        },
-        # Measurement policy (VERDICT r7 item 6): each query is
-        # best-of-N (default 4) WITHIN a run, which is robust to
-        # per-query warmup but NOT to run-level ambient state (JIT
-        # code-cache pressure, page cache, box load) — identical code
-        # measured 42.49s vs 49.54s across two r7 runs. Single-run
-        # totals are therefore not comparable across rounds; the
-        # generated headline_vs_prev.comparable_ratio (same-query
-        # subset, same artifact chain) is the number to read, and any
-        # committed round banner must quote the DRIVER's artifact, not
-        # a local rerun.
-        "rep_policy": "best-of-4 per query within one run over ONE "
-        "planned DataFrame per lane (r9: plan once, execute N times — "
-        "re-planning per rep missed the codegen cache and re-compiled "
-        "every lane every rep); cross-run totals carry ~±17% ambient "
-        "variance — compare via headline_vs_prev.comparable_ratio only. "
-        "NOTE r8->r9: the comparable_ratio ~0.42 conflates real plan "
-        "wins (simhash packing) with this measurement fix — the r8 "
-        "numbers included per-rep JIT recompilation that production "
-        "jobs (plan once, stream 100 TB) never pay. AMENDED r10 "
-        "(ADVICE r9): 'honest per-execution plan cost' overclaimed for "
-        "lanes that do eager work at DataFrame-construction time "
-        "(checkpoint/train/collect during build) — for those lanes the "
-        "reps time the post-artifact execution only. lane_build now "
-        "records the excluded construction cost per lane and "
-        "eager_lanes names where it is material; r9 had no such field, "
-        "so r8->r9 per-lane ratios on eager lanes understate their "
-        "end-to-end cost by their build time.",
-        # r8 shared_passages deep settle (VERDICT r7 item 3): the
-        # remaining 500k-doc cost was (a) fingerprint/pair stages keyed
-        # on 32-char md5 strings (fixed: 60-bit ints from the md5
-        # prefix, oracle mirrors the same derivation) and (b) the
-        # fingerprint pipeline executing TWICE (fed both the hot-fp
-        # filter and the pair join uncached; fixed: one localCheckpoint
-        # — the standing artifact a real pipeline materializes anyway).
-        # 500k best-of-2 interleaved: 78.7s -> 35.5s.
-        "deep_settle_r8": {
-            "before_500k": {"shared_passages": 78.7},
-            "after_500k": {"shared_passages": 35.5},
-            "causes": [
-                "md5-string fingerprint keys (fixed: 60-bit md5-prefix ints)",
-                "fingerprint pipeline ran twice (fixed: localCheckpoint)",
-            ],
-        },
-        # r8 leg fixes (VERDICT r7 items 4-5): adpcm_codec_stats
-        # 8.26s -> 0.69s (lockstep numpy encode/decode across the Arrow
-        # batch, byte-identical + spread() on the single-row-group
-        # driver scan that had the codec stages running one-core);
-        # unigram_token_stats 2.73s -> ~0.8s (serving now encodes from
-        # the persisted model artifact; training runs once per corpus
-        # per process).
-        "r8_leg_fixes": {
-            "adpcm_codec_stats": {"before": 8.26, "after": 0.69},
-            "unigram_token_stats": {"before": 2.73, "after_serving": 0.8},
-        },
-        # r8 one-off trend probe for the media-dedup families (the
-        # standing trend lane covers the text/embedding detectors):
-        # 5k/50k/150k synth docs, best-of-2, fitted log-log exponents —
-        # both sub-linear, consistent with their block-then-verify /
-        # rides-the-scan shapes.
-        "media_trend_r8": {
-            "image_near_dup_pairs": {
-                "sec": [1.83, 2.63, 7.80],
-                "exponent": 0.386,
-            },
-            "binary_chunk_dedup": {
-                "sec": [1.20, 4.34, 10.47],
-                "exponent": 0.624,
-            },
-            "sizes": [5000, 50000, 150000],
-        },
-        # r6 A/B of the near_dedup verify parallelism floor
-        # (scripts/ab_near_dedup.py, 3 interleaved reps, best-of, 32g,
-        # 150k docs): the r5 repartition floor is EXONERATED — removing
-        # it (r4 form) is consistently worse at 30x on BOTH corpora, and
-        # a broadcast-candidates variant loses too (its second verify
-        # join still shuffles candidate rows with arrays attached).
-        "near_dedup_ab_r6": {
-            "uniform_150k_best_of": {
-                "repartition_floor_kept": 7.60,
-                "no_floor_r4_form": 23.84,
-                "broadcast_cand": 13.28,
-            },
-            "zipf_150k_best_of": {
-                "repartition_floor_kept": 14.46,
-                "no_floor_r4_form": 13.82,
-                "broadcast_cand": 17.97,
-            },
-            "zipf_50k_best_of": {
-                "repartition_floor_kept": 7.35,
-                "no_floor_r4_form": 14.84,
-            },
-            # the r5 20.6s trend point was JIT code-cache eviction under
-            # the lane's interleaved query load, not the plan: with 10
-            # other trend queries between reps the default 240m cache
-            # gives 9.5-31.5s; -XX:ReservedCodeCacheSize=512m (now set in
-            # session.get_spark) gives 10.2-17.6s — same min, half the
-            # tail
-            "interference_probe_default_cache": [13.97, 31.47, 20.02, 9.47],
-            "interference_probe_512m_cache": [11.61, 17.59, 10.38, 10.22],
-            "verdict": "floor kept; 512m code cache shipped",
-        },
-        # r7 deep-decade bend attribution (VERDICT r6 item 4): the first
-        # 500k-doc run measured span_dup_coverage 141.8s / shared_passages
-        # 114.1s (4-pt exponents 0.98/0.85 with resid ~0.5-0.6 — a real
-        # bend). Stage-level profiling + active-task sampling found TWO
-        # causes, both fixed: (a) the span pipeline grouped on 36M span
-        # STRINGS (55s explode building them + string-key agg; GC was
-        # measured and ruled out at <0.5s) — spans.py now groups on
-        # xxhash64 span keys, the design its own header prescribed for
-        # 100 TB (span_keys; collision odds ~3.5e-5 at 36M windows);
-        # (b) a HARNESS artifact: _synth_corpus wrote the 500k corpus as
-        # ONE parquet row group, so Spark's byte-range splits were all
-        # empty but one and the scan stage ran single-core (sampled: one
-        # active task for 42-45s) — the generator now writes 20k-row
-        # groups like any real table. Post-fix 150k->500k best-of:
-        # span_dup_coverage 10.5s->27.5s (local exp 0.80),
-        # shared_passages 25.1s->78.7s (0.95).
-        "deep_bend_r7": {
-            "before_500k": {"span_dup_coverage": 141.8, "shared_passages": 114.1},
-            "after_500k": {"span_dup_coverage": 27.5, "shared_passages": 78.7},
-            "causes": [
-                "string-keyed span agg (fixed: xxhash64 span_keys)",
-                "single-row-group synth parquet defeated scan splits "
-                "(fixed: row_group_size=20k)",
-            ],
-            "gc_ruled_out_s": 0.4,
-            "local_exp_150k_500k_after": {
-                "span_dup_coverage": 0.80,
-                "shared_passages": 0.95,
-            },
-        },
-        # r7 dsir attribution (VERDICT r6 item 3, protocol of
-        # scripts/ab_dsir.py — interleaved reps, best-of, 32g, 512m code
-        # cache): the r5/r6 drift over r4's 1.26s was PLAN-REAL — under
-        # the headline lane's own best-of-4 pattern the query measured
-        # 2.08-2.19s standalone; stage cells blamed the model build
-        # (raw/tgt as two aggs, each consumed twice -> 4 cache re-scans
-        # across ~5 jobs), NOT the ordered fold (plain-sum A/B
-        # identical). Fixed in operators/dsir.py (one conditional-agg
-        # pass + cached models; integer-identical values, oracle
-        # untouched): bench-pattern best-of-4 0.63-0.73s, cold 1.89s.
-        "dsir_ab_r7": {
-            "bench_pattern_bo4_before": [2.12, 2.19, 2.10, 2.08, 2.12],
-            "bench_pattern_bo4_after": [0.73, 0.70, 0.73, 0.71, 0.63],
-            "cold_full_before_best": 2.45,
-            "cold_full_after_best": 1.89,
-            "stage_db_best": 0.72,
-            "stage_w_before_best": 1.60,
-            "stage_w_after_best": 1.35,
-            "fold_ab": {"ordered_best": 2.055, "plain_sum_best": 2.16},
-            "verdict": "plan-real; one-pass conditional-agg model build "
-            "shipped (dsir.py); ordered fold exonerated",
-        },
-        # r6 k-means fix (VERDICT r5 item 2): assign+update fused inside
-        # the Arrow batch (<= k partial rows per batch return to the
-        # JVM) and the raw embedding column persisted across iterations;
-        # marginal per-iteration at 150k x 64 measured ~0.6-1.3s warm vs
-        # r5's 14.6s (the iterative lane below re-measures per round)
-        "kmeans_marginal_fix": "fused batch partials + raw persist; "
-        "~0.6s/iter at 150k x 64 (was 14.6s)",
-        # r4 flagged simhash_fingerprint 1.68->2.75s and near_dedup_pairs
-        # 1.56->2.13s vs r2. A/B at sf0.1 AND a 150k-doc 30x corpus
-        # (5 interleaved reps, best-of): the r4 per-occurrence-md5 simhash
-        # BEATS the r2 (doc_id,word) pre-agg form at both sizes —
-        # A=1.59s/3.73s vs B=2.19s/5.26s — so the rewrite stays; the r4
-        # regression was cache pressure from near_dedup's per-invocation
-        # .cache() (now routed through the keyed memo; post-fix best-of-4:
-        # near_dedup_pairs 1.59s, simhash_fingerprint 1.70s — both within
-        # 1.02x of r2).
-        "simhash_ab": {
-            "per_occurrence_md5": {"sf0.1": 1.585, "x30_150k_docs": 3.729},
-            "tokcnt_preagg": {"sf0.1": 2.192, "x30_150k_docs": 5.259},
-            "kept": "per_occurrence_md5",
-            # independently confirmed (scripts/ab_simhash.py, 5 interleaved
-            # reps, best-of, 32g heap): 2.23/3.75 vs 2.92/6.74. A sequential
-            # 8g-heap run of the same A/B had said the OPPOSITE at 150k
-            # (per-occurrence 16-46s) — that run was measuring collector
-            # thrash, not the plan; heap sizing is part of the method.
-            "confirm_32g_interleaved": {
-                "per_occurrence_md5": {"sf0.1": 2.229, "x30_150k_docs": 3.745},
-                "tokcnt_preagg": {"sf0.1": 2.916, "x30_150k_docs": 6.738},
-            },
-        },
-        # Two same-round headline refreshes can differ by up to the
-        # measured ±25% local[32] noise envelope (r4 published 31.9s then
-        # 37.9s over the same 33-query core); compare rounds on per-query
-        # best-of-N numbers, not single-run totals.
-        # (f-string, not %-format: the literal "±25%" made the old
-        # %-format parse "% r" as a repr spec and crash main() after
-        # every lane had already run — the reason r4/r5 bench runs kept
-        # dying silently right before the BENCH_DETAIL write)
-        "noise": "local[32] wall clock swings ±25% run-to-run; "
-        f"per-query values are best-of-{repeat}. r7 measured the envelope "
-        "directly: two clean same-code full runs in one session totaled "
-        "36.2s and 43.2s over the same 35 queries (1.19x), with "
-        "individual queries drawing up to 1.77x worse in the slower run "
-        "(contrastive_negatives 2.07 vs 3.51) — single-run per-query "
-        "drifts under ~1.8x are not evidence of a plan change; compare "
-        "trends across rounds, not draws",
-        # The iterative lane's logreg marginal per-iteration cost sits at
-        # the fixed job-overhead floor (~0.05-0.15s) at every trend size:
-        # one agg over a CACHED 5-column projection is cheaper than job
-        # scheduling even at 30x, so its fitted exponent is noise around
-        # zero — which IS the claim (no per-round growth), stated so the
-        # negative slope isn't misread as superlinear-in-disguise.
-        "iterative_lane": "logreg per-iter cost is at the scheduling "
-        "floor at all trend sizes; kmeans/pagerank marginals carry the "
-        "real per-scan signal",
-        "duplicate_clusters_drift": "r5 measured 5.5s vs r4's 3.35s: "
-        "decomposed to pairs ~3.0s + ~25 tiny star-round jobs of fixed "
-        "scheduling overhead over 251 edges (invariant to data, "
-        "amortizes at scale); ~1.0s attributed to the verify parallelism "
-        "floor (kept: saves 14s+ on the skew corpus), the rest "
-        "reproduces with the exact r4 plan, i.e. ambient JVM drift",
+        "rep_policy": f"best-of-{repeat} reps per lane over ONE planned "
+        "DataFrame per lane; lane_build is the construction time those "
+        "reps exclude",
     }
     if detail:
         # Honest persisted-lane timing (VERDICT r11 item 2): best-of-N

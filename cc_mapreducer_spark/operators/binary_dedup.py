@@ -12,8 +12,8 @@ payload column — the multimodal pattern); the only corpus-wide shuffle
 keys are chunk sha256s (near-uniform by construction); the per-type
 rollup is one more groupBy. Chunk rows are the standing artifact a real
 deployment materializes (the chunk index parquet); cross-corpus
-incremental dedup then reuses the Bloom-gated ingest machinery
-unchanged (streaming/ingest.gate_batch keyed on chunk shas).
+incremental dedup is then a Bloom-gated anti-join of each new wave's
+chunk shas against the shas already committed, so only new bytes land.
 
 The fixture plants the alignment story explicitly: every 5th document's
 payload is a RE-UPLOAD of the previous document's payload with a small

@@ -262,7 +262,7 @@ def _partition_dir(partition_col: str, v) -> str:
 # partition B old) with no record of which is which and — worse — the
 # old `finally: rmtree(staging)` destroyed the staged data the recovery
 # would need. The journal makes the swap a roll-forward commit protocol
-# (the miniature of Delta's commit log / snapshots.py's `_latest` flip):
+# (the miniature of Delta's commit log):
 #
 #   1. stage the merged partitions to a sibling directory,
 #   2. atomically publish a journal file (`_swap_journal_<id>.json`,

@@ -391,7 +391,7 @@ def _simhash_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     lane at 15.1s vs 2.2s committed on identical code — the 64-column
     agg was the fleet's largest codegen unit, and one cold/evicted JIT
     draw of it dominated the lane (fresh-session A/B: 21.7s cold / 3.1s
-    warm before, see BENCH_DETAIL.notes). Overflow bound: the HIGH lane
+    warm before). Overflow bound: the HIGH lane
     stores count<<32, so the signed-BIGINT sum overflows at 2^31 token
     occurrences in ONE document (~4 GB of text in a single row — still
     beyond Spark's own 2 GB string limit), so the packing is exact for

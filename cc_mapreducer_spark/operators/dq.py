@@ -332,7 +332,8 @@ _KEY_SKEW_SQL = "\nUNION ALL\n".join(_skew_sql_one(c) for c in _SKEW_COLS)
 def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-key skew diagnostics for lineitem's three join keys — the
     measurement that decides between a plain hash join, AQE skew-join
-    splitting, and explicit salting (plans/scale_patterns.py). Per key
+    splitting, and explicit salting (a random salt column on the hot
+    side, the small side exploded across every salt value). Per key
     column: key cardinality, max/p50/p99 rows-per-key, and
     skew_ratio = max/avg (1.0 = perfectly uniform; >10 = salt it).
 

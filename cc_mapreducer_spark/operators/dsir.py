@@ -109,7 +109,7 @@ def importance_weights(
     # conditional sum, not a second scan): r7's dsir A/B measured the
     # old raw/tgt two-agg shape — each consumed twice, by ratios AND
     # totals — re-reading the cached histogram 4x across ~5 small jobs,
-    # ~1s of pure job overhead at sf0.1 (scripts/ab_dsir.py). Integer
+    # ~1s of pure job overhead at sf0.1 (COVERAGE.md, Round-7). Integer
     # sums, so cr/ct/nr/nt are bit-identical to the two-pass form and
     # the DuckDB oracle needs no change. One pass over the data is also
     # the right 100 TB plan.

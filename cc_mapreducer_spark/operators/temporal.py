@@ -166,7 +166,7 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the exact count. The oracle states ``true`` — a sketch regression
     flips the boolean and fails the value hash, so the driver check is
     "approximation verifiably within bound", not "runs without error".
-    (tests/test_scale_patterns.py additionally bounds the raw estimate.)
+    (tests/test_extensions.py asserts ``within_bound`` on every row.)
     """
     e = load_table(spark, sf_dir, "events")
     agg = e.groupBy("event_type").agg(

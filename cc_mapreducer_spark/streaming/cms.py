@@ -12,9 +12,9 @@ Per micro-batch: one bounded groupBy (key space d*w, map-side combined)
 lands <= d*w cell rows in a `batch_id=N` partition under dynamic
 partition overwrite — a checkpoint-rollback replay REWRITES partition N
 with identical content instead of adding to it, so idempotence is
-structural (the agg_sink discipline). The serving read sums cells
-across all batch partitions: state is <= batches x d*w tiny rows, and
-compacting old batches is the same sum the read performs.
+structural. The serving read sums cells across all batch partitions:
+state is <= batches x d*w tiny rows, and compacting old batches is the
+same sum the read performs.
 
 Plus the sentinel: each batch partition carries one (i=-1, col=-1, c=n)
 row with the batch's occurrence count, so the stream length N — the

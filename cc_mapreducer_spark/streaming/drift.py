@@ -6,10 +6,11 @@ counts when a model ships (one B-row table), then every ingest
 micro-batch contributes its own bin counts; PSI of (reference vs
 everything streamed so far) is recomputed from the folded counts. The
 monitor must be replay-idempotent — a checkpoint rollback must not
-double-count a batch — so this reuses the agg_sink discipline: one
-`batch_id=N` partial partition per micro-batch, dynamic partition
-overwrite, counts folded at read time (addition is associative; the
-fold cannot double-count structurally).
+double-count a batch — so each micro-batch writes its partial counts
+to its own `batch_id=N` partition under dynamic partition overwrite (a
+replay rewrites N with identical content instead of adding to it), and
+counts are folded at read time (addition is associative; the fold
+cannot double-count structurally).
 
 Equality with batch is STRUCTURAL: the bin expression and the PSI
 arithmetic are imported from operators/dq.py (psi_bin_col /
@@ -17,8 +18,8 @@ psi_from_counts) — the streamed result equals the batch
 `psi_value_drift` rows exactly after a full drain, pinned in
 tests/test_streaming_drift.py.
 
-State size: B rows per batch partition; compaction folds old batches
-exactly like agg_sink.compact_partials would.
+State size: B rows per batch partition; compaction sums old batch
+partitions into one, the same fold the serving read performs.
 """
 
 from __future__ import annotations

@@ -16,9 +16,9 @@ PODS'12):
     the quantity the error bound is stated in — accretes in the same
     table as the counters;
   * the per-partition partials land unreduced in a `batch_id=N`
-    partition under dynamic partition overwrite (the agg_sink
-    discipline): replaying batch N rewrites partition N with identical
-    content instead of adding to it — idempotence is structural;
+    partition under dynamic partition overwrite: replaying batch N
+    rewrites partition N with identical content instead of adding to
+    it — idempotence is structural;
   * the serving read sums counters per item across ALL partials and
     applies ONE capacity cut (subtract the (k+1)-th largest summed
     count, drop non-positives). Every decrement anywhere in the
@@ -36,8 +36,8 @@ folds) keeps the hot path driver-free — unlike the batch kernel's
 bounded driver merge, nothing here ever collects — and makes the stored
 state strictly more accurate than per-batch cutting would be. State
 size: <= partitions x k counter rows + partitions sentinel rows per
-batch; fold old batches with agg_sink-style compaction when stream age
-outgrows that (the merge is the same sum the serving read performs).
+batch; fold old batches into one partition when stream age outgrows
+that (the merge is the same sum the serving read performs).
 
 Proven in tests/test_streaming_heavyhitters.py: 3-slice replay equals
 the batch operator exactly on the real corpus; a planted hot token

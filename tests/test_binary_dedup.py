@@ -117,55 +117,6 @@ def test_spark_report_matches_python_replica(spark):
     }
 
 
-def test_chunk_index_plugs_into_bloom_gate(spark, tmp_path):
-    """The SCALE.md claim, executed: cross-corpus incremental chunk
-    dedup reuses streaming/ingest.gate_batch unchanged, keyed on chunk
-    shas (as text_sha). Wave 1 commits all chunks; wave 2 (the same
-    artifacts re-uploaded behind new headers plus one new artifact)
-    commits ONLY the header chunks and the new artifact's chunks."""
-    from pyspark.sql import functions as F
-
-    from cc_mapreducer_spark.streaming.ingest import (
-        first_wins,
-        gate_batch,
-        init_bloom_dir,
-    )
-
-    acc = str(tmp_path / "accepted")
-    bl = str(tmp_path / "bloom")
-    init_bloom_dir(bl, expected_docs=100_000)
-
-    base = _blob(50_000, 9)
-    other = _blob(30_000, 10)
-
-    def chunk_rows(artifact_id: int, data: bytes):
-        return [
-            (artifact_id * 1000 + idx, artifact_id, sha)
-            for idx, (_, _, sha) in enumerate(chunk_payload(data))
-        ]
-
-    schema = "doc_id long, artifact_id long, text_sha string"
-    w1 = spark.createDataFrame(chunk_rows(1, base), schema)
-    n1 = gate_batch(spark, first_wins(w1), acc, bl)
-    assert n1 == w1.select("text_sha").distinct().count()
-
-    # wave 2: re-upload of `base` behind a header + one new artifact
-    reup = b"crawl-2-header" + base
-    w2 = spark.createDataFrame(
-        chunk_rows(2, reup) + chunk_rows(3, other), schema
-    )
-    n2 = gate_batch(spark, first_wins(w2), acc, bl)
-    shared = len(
-        {s for _, _, s in chunk_rows(1, base)}
-        & {s for _, _, s in chunk_rows(2, reup)}
-    )
-    new_unique = w2.select("text_sha").distinct().count() - shared
-    assert n2 == new_unique  # only the truly new bytes commit
-    assert shared > 0.8 * len({s for _, _, s in chunk_rows(1, base)})
-    # replay of wave 2 commits nothing (gate idempotence carries over)
-    assert gate_batch(spark, first_wins(w2), acc, bl) == 0
-
-
 def test_binary_dedup_suite_mirrors_components(spark):
     """The driver digest must be a pure projection of its components:
     chunk legs == suite_chunk_table rows (entity set AND count), rollup

@@ -127,3 +127,11 @@ def test_shuffle_byte_budgets_measured(spark):
     # below what shuffling text bodies (~500 x 1-2KB) would cost
     assert m["shuffle_bytes_written"] < 200_000
     assert m["spill_bytes"] == 0
+
+
+def test_q6_full_predicate_pushdown(spark):
+    from cc_mapreducer_spark import registry
+
+    plan = formatted_plan(registry.all_queries()["q6_forecast_revenue"](spark, SF_ORACLE))
+    for pushed in ["GreaterThanOrEqual(l_shipdate", "LessThan(l_quantity,24.0)"]:
+        assert pushed in plan, f"missing pushed filter {pushed}"

@@ -14,6 +14,7 @@ from cc_mapreducer_spark.operators.similarity import (
     _TOPK,
 )
 from cc_mapreducer_spark import registry
+from tests.conftest import SF_SMOKE
 
 Q = registry.all_queries()
 
@@ -225,3 +226,15 @@ def test_similar_documents_broadcasts_topk_not_docs(spark):
     rows = df.collect()
     assert len(rows) == 50  # 5 queries x top-10
     assert all(r["snippet"] is not None for r in rows)
+
+
+def test_similarity_cosine_bounds(spark):
+    rows = Q["similarity_topk_bruteforce"](spark, SF_SMOKE).collect()
+    assert all(-1.0 - 1e-9 <= r.cosine <= 1.0 + 1e-9 for r in rows)
+    # ranks are dense 1..k per query
+    from collections import defaultdict
+
+    by_q = defaultdict(list)
+    for r in rows:
+        by_q[r.query_id].append(r.rn)
+    assert all(sorted(v) == list(range(1, len(v) + 1)) for v in by_q.values())

@@ -117,3 +117,21 @@ def test_merge_touches_only_batch_buckets(spark, tmp_path):
     }
     changed = {d for d in before if before[d] != after[d]}
     assert changed == {"kb=3"}
+
+
+def test_resolve_keyed_changelog_null_key_fails_fast(spark):
+    # ADVICE r3: a null user_id hashed to a null bucket, which would
+    # stage under __HIVE_DEFAULT_PARTITION__ while the swap looked for
+    # kb=None — silently dropping that bucket's merge. The kb expression
+    # now raises executor-side instead.
+    import pytest
+    from pyspark.sql import Row
+    from cc_mapreducer_spark.streaming.cdc_sink import resolve_keyed_changelog
+
+    df = spark.createDataFrame(
+        [(None, 9, "click", 1.0, "2024-01-01 00:00:00", '{"k": 1}')],
+        "user_id long, event_id long, event_type string, value double, "
+        "ts string, props string",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    with pytest.raises(Exception, match="null user_id"):
+        resolve_keyed_changelog(df).collect()
