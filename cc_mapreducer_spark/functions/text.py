@@ -41,13 +41,16 @@ def tokens(text: Column) -> Column:
 
     Mirrors the reference reader ``_read`` (src/index.js:48-55) minus its
     apostrophe quirk. Callers filter length>1 / stop words themselves so the
-    predicate placement is visible in the plan.
+    predicate placement is visible in the plan. Splitting on the separator
+    regex directly is one regex pass per line instead of two.
     """
-    return F.split(F.regexp_replace(F.lower(text), "[^a-z]+", " "), " ")
+    return F.split(F.lower(text), "[^a-z]+")
 
 
 def anagram_signature(word: Column) -> Column:
     """word -> characters sorted ascending, rejoined (reference ``_map``,
     src/index.js:64-69). Binary string sort == JS code-unit sort on the
-    [a-z] alphabet the tokenizer guarantees, so no UDF is needed."""
-    return F.array_join(F.array_sort(F.split(word, "")), "")
+    [a-z] alphabet the tokenizer guarantees, so no UDF is needed.
+    ``sort_array`` is generated code; ``array_sort``'s default comparator
+    is a lambda Spark evaluates interpreted on every comparison."""
+    return F.array_join(F.sort_array(F.split(word, "")), "")

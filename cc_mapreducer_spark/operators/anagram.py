@@ -12,10 +12,11 @@ lacks. Zero UDFs; every expression is whole-stage-codegen'd.
 
 Scale notes (100 TB): the only shuffle key is `signature`, whose cardinality
 is huge (≈ distinct words) and near-uniform — no skew salting needed. The
-stop-word table is tiny and broadcast (left anti-join), mirroring the
-reference's stop-word broadcast (src/index.js:152) without copying it into
-every task message. AQE coalesces post-shuffle partitions at low SF and
-splits skewed ones at high SF.
+stop-word set is tiny, so it is an `InSet` filter compiled into the scan
+stage (the reference's `!stopWords.has(word)`, src/index.js:53) rather than
+a broadcast anti-join, whose lookup table cost one extra RDD job per
+execution. AQE coalesces post-shuffle partitions at low SF and splits
+skewed ones at high SF.
 """
 
 from __future__ import annotations
@@ -47,15 +48,16 @@ def op_filter_minlen(words: DataFrame) -> DataFrame:
 
 
 def op_filter_stopwords(words: DataFrame) -> DataFrame:
-    """filter_stopwords (src/index.js:53) as a broadcast LEFT ANTI join.
+    """filter_stopwords (src/index.js:53, ``!stopWords.has(word)``) as one
+    ``InSet`` predicate in the scan stage's generated code.
 
     The reference ships the stop-word set inside every Pub/Sub message
-    (src/index.js:152) — a manual broadcast. Spark broadcasts the tiny
-    dim table once per executor; the anti-join stays in the scan stage.
+    (src/index.js:152); here the set is a literal in the plan. A broadcast
+    anti-join against a ``createDataFrame`` table cost one extra RDD job
+    per execution just to collect the 63 words. Null words pass, as they
+    do through an anti-join (``NOT IN`` alone would drop them).
     """
-    spark = words.sparkSession
-    stop = spark.createDataFrame([(w,) for w in STOP_WORDS], "word string")
-    return words.join(F.broadcast(stop), "word", "left_anti")
+    return words.filter(~F.coalesce(F.col("word").isin(*STOP_WORDS), F.lit(False)))
 
 
 def op_map_signature(words: DataFrame) -> DataFrame:
@@ -71,10 +73,12 @@ def op_group_anagrams(pairs: DataFrame, min_group_size: int = 2) -> DataFrame:
     djb2 shuffler + file-count barrier (src/index.js:82-91,280-295)
     collapse into this stage boundary, minus its listing race and
     negative-hash data-loss bugs (SURVEY §2.4). min_group_size=2 is the
-    reference's HAVING (src/index.js:111); 1 keeps singleton groups."""
+    reference's HAVING (src/index.js:111); 1 keeps singleton groups.
+    ``sort_array`` is generated code; ``array_sort``'s default comparator
+    is an interpreted lambda."""
     return (
         pairs.groupBy("signature")
-        .agg(F.array_sort(F.collect_set("word")).alias("words"))
+        .agg(F.sort_array(F.collect_set("word")).alias("words"))
         .filter(F.size("words") >= min_group_size)
     )
 

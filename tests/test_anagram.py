@@ -6,7 +6,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from cc_mapreducer_spark.functions.text import STOP_WORDS
+from cc_mapreducer_spark.functions.text import STOP_WORDS, tokens
 from cc_mapreducer_spark.operators.anagram import (
     op_filter_minlen,
     op_filter_stopwords,
@@ -53,6 +53,24 @@ def test_stopword_anti_join(spark):
     got = sorted(r["word"] for r in words.collect())
     assert got == ["lazy", "quick"]
     assert "the" in STOP_WORDS
+
+
+def test_stopword_filter_keeps_null_words(spark):
+    # a LEFT ANTI join keeps null keys; the InSet filter must too
+    words = spark.createDataFrame([(None,), ("the",), ("quick",)], "word string")
+    got = sorted(op_filter_stopwords(words).collect(), key=lambda r: r["word"] or "")
+    assert [r["word"] for r in got] == [None, "quick"]
+
+
+@settings(max_examples=30, deadline=None)
+@given(text=st.text(alphabet="abcXYZ09'-., \t\n!?éÉßİ\u00a0日", max_size=40))
+def test_tokens_match_two_pass_tokenizer(spark, text):
+    """split(lower(t), '[^a-z]+') yields the same length>1 tokens as the
+    two-pass split(regexp_replace(lower(t), '[^a-z]+', ' '), ' ')."""
+    df = spark.createDataFrame([(text,)], "t string")
+    two_pass = F.split(F.regexp_replace(F.lower("t"), "[^a-z]+", " "), " ")
+    row = df.select(tokens(F.col("t")).alias("new"), two_pass.alias("old")).first()
+    assert [w for w in row["new"] if len(w) > 1] == [w for w in row["old"] if len(w) > 1]
 
 
 @settings(max_examples=20, deadline=None)

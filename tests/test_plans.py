@@ -42,14 +42,20 @@ def test_anagram_single_semantic_shuffle(spark):
     # tokenize -> filters -> signature -> groupBy: exactly ONE hash-keyed
     # Exchange (the reference's shuffler stage). The extra RoundRobin
     # exchange is spread()'s single-file-input widening, a no-op on a real
-    # multi-split table. Stop-word anti-join must broadcast.
+    # multi-split table. The stop-word filter is an INSET predicate in the
+    # scan stage: no join, and no RDD-backed lookup table whose broadcast
+    # would run one extra job per execution.
     plan = formatted_plan(Q["anagram_groups"](spark, SF_ORACLE))
     hash_exchanges = sum(
         1 for l in plan.splitlines() if "Arguments: hashpartitioning" in l
     )
     assert hash_exchanges == 1
     assert count_exchanges(Q["anagram_groups"](spark, SF_ORACLE)) <= 2
-    assert "BroadcastHashJoin" in plan
+    nodes = [l.split(" ", 1)[1] for l in plan.splitlines() if l.startswith("(")]
+    assert not [n for n in nodes if "Join" in n]
+    assert not [n for n in nodes if "RDD" in n]
+    conditions = [l for l in plan.splitlines() if l.startswith("Condition")]
+    assert any("NOT word" in c and " INSET " in c for c in conditions)
 
 
 def test_q1_partial_aggregation(spark):
