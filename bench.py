@@ -11,8 +11,11 @@ collect — executor-side evaluation only, like a real write job).
 from __future__ import annotations
 
 import json
+import math
 import os
+import statistics
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -24,6 +27,32 @@ from cc_mapreducer_spark import registry  # noqa: E402
 from cc_mapreducer_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# best-of-N per headline lane: local-mode wall clock is noisy (JIT, page
+# cache, ambient box load — measured ±25% run-to-run on identical code);
+# the minimum is the stable, load-independent estimate of plan cost.
+# Best-of-4: the codegen-heaviest query (near_dedup_pairs) measured warm
+# only from its third repetition (C2 compile of the generated minhash
+# expressions), so 3 reps could record an all-cold best.
+REPEAT = 4
+TREND_REPS = 4
+# reps=2 (vs the scale lane's 4): the skew lane's verdict is the exponent
+# staying <= 1 and the AQE/bucket evidence, not a tight timing — and the
+# lane runs the three heaviest queries at 30x, so each extra rep costs
+# minutes of the bench's total budget
+SKEW_REPS = 2
+ITER_REPS = 2
+# Marginals at or below the fixed job-scheduling floor carry no size
+# signal (an iteration cheaper than job dispatch measures the scheduler,
+# not the plan) — log-fitting through one manufactures a fake exponent
+# (r6 published PageRank 2.065 from marginals [0.001, 0.674, 0.700]; the
+# real 50k->150k signal is flat). Only points above the floor are fitted.
+ITER_FLOOR_S = 0.15
+# The deep decade of the scale lane: a 100x (=500k-doc at sf0.1) point
+# for the two span/winnow queries, reps=2 — it costs ~2 min, not another
+# full lane.
+DEEP_FACTOR = 100
+DEEP_REPS = 2
 
 # One representative per operator family (SURVEY §2 + §2.8).
 HEADLINE = [
@@ -123,38 +152,37 @@ TREND_QUERIES = [
 ]
 
 
-def _synth_corpus(out_dir: str, n_docs: int, n_vecs: int, seed: int) -> None:
-    """Write synthetic documents/embeddings parquet shaped like the driver
-    tables (same columns the trend queries touch), content seeded per
-    size so replicas are fresh draws, not copies."""
+def _vocab(rng):
+    """A 2000-word vocabulary, not the sf corpus's ~31: with a tiny
+    vocab every document resembles every other, so the TRUE near-dup
+    pair count grows quadratically and the lane would measure output
+    blowup, not operator scaling. Realistic shingle diversity keeps pair
+    density ~linear, which is the regime the 100 TB claim is about."""
     import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    rng = np.random.RandomState(seed)
-    # A 2000-word vocabulary, not the driver corpus's ~31: with a tiny
-    # vocab every document resembles every other, so the TRUE near-dup
-    # pair count grows quadratically and the lane would measure output
-    # blowup, not operator scaling. Realistic shingle diversity keeps
-    # pair density ~linear, which is the regime the 100 TB claim is about.
     letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
-    vocab = np.array(
+    return np.array(
         [
             "".join(letters[rng.randint(0, 26, rng.randint(3, 9))])
             for _ in range(2000)
         ]
     )
-    texts = []
-    for i in range(n_docs):
-        words = vocab[rng.randint(0, len(vocab), rng.randint(40, 120))]
-        texts.append(" ".join(words.tolist()))
+
+
+def _write_docs(out_dir: str, texts: list[str], rng) -> None:
+    """documents.parquet with the sf table's columns the trend
+    queries touch. The acquisition/extraction/kmv lanes key on source:
+    20 values like the sf corpus, assignment drawn from ``rng``
+    after the texts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n_docs = len(texts)
     docs = pa.table(
         {
             "doc_id": pa.array(range(n_docs), pa.int64()),
             "text": pa.array(texts, pa.string()),
             "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-            # the acquisition/extraction/kmv lanes key on source; 20
-            # values like the driver corpus, assignment seeded
             "source": pa.array(
                 [f"src{i}" for i in rng.randint(0, 20, n_docs)],
                 pa.string(),
@@ -167,6 +195,23 @@ def _synth_corpus(out_dir: str, n_docs: int, n_vecs: int, seed: int) -> None:
     # lane's "bend" was this harness artifact, not the operators (a real
     # 100 TB table arrives as thousands of row groups/files)
     pq.write_table(docs, f"{out_dir}/documents.parquet", row_group_size=20_000)
+
+
+def _synth_corpus(out_dir: str, n_docs: int, n_vecs: int, seed: int) -> None:
+    """Write synthetic documents/embeddings parquet shaped like the sf
+    tables (same columns the trend queries touch), content seeded per
+    size so replicas are fresh draws, not copies."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.RandomState(seed)
+    vocab = _vocab(rng)
+    texts = []
+    for i in range(n_docs):
+        words = vocab[rng.randint(0, len(vocab), rng.randint(40, 120))]
+        texts.append(" ".join(words.tolist()))
+    _write_docs(out_dir, texts, rng)
     vecs = rng.randn(n_vecs, 64).astype(np.float64)
     emb = pa.table(
         {
@@ -188,17 +233,9 @@ def _synth_corpus_zipf(out_dir: str, n_docs: int, seed: int) -> None:
     a super-linear fitted exponent can only come from the operator
     mishandling the skew, never from quadratic true-duplicate output."""
     import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     rng = np.random.RandomState(seed)
-    letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
-    vocab = np.array(
-        [
-            "".join(letters[rng.randint(0, 26, rng.randint(3, 9))])
-            for _ in range(2000)
-        ]
-    )
+    vocab = _vocab(rng)
     cluster_size = 200
     n_clusters = max(1, n_docs // (cluster_size * 10))  # ~10% of docs clustered
     # 120 boilerplate tokens vs a 5-20-token unique tail: the shared
@@ -226,19 +263,84 @@ def _synth_corpus_zipf(out_dir: str, n_docs: int, seed: int) -> None:
             words = vocab[(rng.zipf(1.2, rng.randint(40, 120)) - 1) % len(vocab)]
             body = " ".join(words.tolist())
         texts.append(body)
-    docs = pa.table(
-        {
-            "doc_id": pa.array(range(n_docs), pa.int64()),
-            "text": pa.array(texts, pa.string()),
-            "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-            "source": pa.array(
-                [f"src{i}" for i in rng.randint(0, 20, n_docs)],
-                pa.string(),
-            ),
-        }
+    _write_docs(out_dir, texts, rng)
+
+
+def _corpora(tmp: str, factors, write) -> dict[int, str]:
+    """Materialize one corpus per size factor up front, via
+    ``write(dir, k)``; returns {k: dir}."""
+    dirs = {}
+    for k in factors:
+        dirs[k] = f"{tmp}/x{k}"
+        os.makedirs(dirs[k], exist_ok=True)
+        write(dirs[k], k)
+    return dirs
+
+
+def _noop(df) -> None:
+    """Materialize ``df`` executor-side through the noop sink."""
+    df.write.mode("overwrite").format("noop").save()
+
+
+def _time_cells(spark, reps: int, dirs: dict, jobs: dict) -> dict:
+    """Time every (job, size) cell ``reps`` times; returns
+    {(job, size): [secs, ...]}. ``jobs`` maps a name to a callable that
+    does its whole work on one corpus dir.
+
+    Noise control (r3 lesson: a 3.4x outlier at the 10x size — all reps
+    of one (size, query) cell slow while the 30x cell was fast — showed
+    the noise is CORRELATED within a cell when reps run back-to-back):
+    reps run ROUND-ROBIN across cells, so a transient GC/load spike lands
+    on one rep of many cells instead of every rep of one cell and the
+    per-cell min stays clean; a forced full GC precedes each pass and the
+    cache is cleared after every cell."""
+    cells: dict = {}
+    for _ in range(reps):
+        spark.sparkContext._jvm.System.gc()
+        for k, d in dirs.items():
+            for name, job in jobs.items():
+                t0 = time.perf_counter()
+                job(d)
+                cells.setdefault((name, k), []).append(time.perf_counter() - t0)
+                spark.catalog.clearCache()
+    return cells
+
+
+def _query_jobs(spark, queries: dict, names) -> dict:
+    """Cell jobs that build a query over a corpus dir and noop-save it."""
+    return {n: (lambda d, fn=queries[n]: _noop(fn(spark, d))) for n in names}
+
+
+def _loglog_fit(xs, ys) -> tuple[float, float]:
+    """Least-squares line through (log x, log y), ys clamped at 1 ms:
+    (slope, max abs residual), both rounded to 3 places. The residual is
+    in log units (e^resid = multiplicative miss) — small residuals make
+    the exponent citable; big ones mean "noise, rerun"."""
+    lx = [math.log(x) for x in xs]
+    ly = [math.log(max(y, 1e-3)) for y in ys]
+    n = len(lx)
+    mx, my = sum(lx) / n, sum(ly) / n
+    slope = sum((x - mx) * (y - my) for x, y in zip(lx, ly)) / sum(
+        (x - mx) ** 2 for x in lx
     )
-    # multiple row groups for real scan parallelism (see _synth_corpus)
-    pq.write_table(docs, f"{out_dir}/documents.parquet", row_group_size=20_000)
+    resid = max(abs(y - (my + slope * (x - mx))) for x, y in zip(lx, ly))
+    return round(slope, 3), round(resid, 3)
+
+
+def _trend_query(cells: dict, name: str, sizes: list[int]) -> dict:
+    """Per-size min and median of one query's cells plus the log-log fit
+    of the mins — the min is the load-independent plan-cost estimate,
+    the median shows the spread."""
+    secs = [round(min(cells[(name, k)]), 3) for k in TREND_FACTORS]
+    slope, resid = _loglog_fit(sizes, secs)
+    return {
+        "secs": secs,
+        "median_secs": [
+            round(statistics.median(cells[(name, k)]), 3) for k in TREND_FACTORS
+        ],
+        "exponent": slope,
+        "max_log_resid": resid,
+    }
 
 
 def skew_trend(spark, queries) -> dict:
@@ -249,11 +351,6 @@ def skew_trend(spark, queries) -> dict:
     MinHash band bucket (the hot-band pathology SCALE.md names) — and
     the AQE skewed-partition counters from the executed plan, so 'the
     skew story holds' is measured, not argued."""
-    import math
-    import shutil
-    import statistics
-    import tempfile
-
     import pyarrow.parquet as pq
 
     from cc_mapreducer_spark.operators.dedup import (
@@ -261,50 +358,31 @@ def skew_trend(spark, queries) -> dict:
         near_dedup_minhash,
         shingle_sets,
     )
+    from cc_mapreducer_spark.plans.inspect import execution_metrics
 
     names = ["near_dedup_minhash", "shared_passages", "duplicate_clusters"]
-    timed = dict(queries)
-    timed["near_dedup_minhash"] = near_dedup_minhash
+    timed = {**queries, "near_dedup_minhash": near_dedup_minhash}
 
     base_docs = pq.read_metadata(f"{SF_DIR}/documents.parquet").num_rows
-    # reps=2 (vs scale_trend's 4): the skew lane's verdict is the
-    # exponent staying <= 1 and the AQE/bucket evidence, not a tight
-    # timing — and the lane runs the three heaviest queries at 30x, so
-    # each extra rep costs minutes of the bench's total budget
-    reps = int(os.environ.get("SPARK_GRAFT_SKEW_REPS", "2"))
-    tmp = tempfile.mkdtemp(prefix="cc_mr_spark_skew_")
-    cells: dict[tuple[str, int], list[float]] = {}
-    out: dict = {"sizes": [base_docs * k for k in TREND_FACTORS], "reps": reps}
-    try:
-        for k in TREND_FACTORS:
-            d = f"{tmp}/x{k}"
-            os.makedirs(d, exist_ok=True)
-            _synth_corpus_zipf(d, base_docs * k, seed=2000 + k)
-        for _ in range(reps):
-            spark.sparkContext._jvm.System.gc()
-            for k in TREND_FACTORS:
-                d = f"{tmp}/x{k}"
-                for name in names:
-                    t0 = time.perf_counter()
-                    timed[name](spark, d).write.mode("overwrite").format("noop").save()
-                    cells.setdefault((name, k), []).append(
-                        time.perf_counter() - t0
-                    )
-                    spark.catalog.clearCache()
-        # data-level skew at the 30x point: docs per (band, sig) bucket
-        big = f"{tmp}/x{TREND_FACTORS[-1]}"
-        sets = shingle_sets(spark, big).filter("size(ss) > 0")
-        bucket = (
-            minhash_bands(sets)
-            .groupBy("band", "sig")
-            .count()
+    sizes = [base_docs * k for k in TREND_FACTORS]
+    out: dict = {"sizes": sizes, "reps": SKEW_REPS}
+    with tempfile.TemporaryDirectory(
+        prefix="cc_mr_spark_skew_", ignore_cleanup_errors=True
+    ) as tmp:
+        dirs = _corpora(
+            tmp,
+            TREND_FACTORS,
+            lambda d, k: _synth_corpus_zipf(d, base_docs * k, seed=2000 + k),
         )
+        cells = _time_cells(spark, SKEW_REPS, dirs, _query_jobs(spark, timed, names))
+        # data-level skew at the 30x point: docs per (band, sig) bucket
+        big = dirs[TREND_FACTORS[-1]]
+        sets = shingle_sets(spark, big).filter("size(ss) > 0")
+        bucket = minhash_bands(sets).groupBy("band", "sig").count()
         mx = bucket.agg({"count": "max"}).collect()[0][0]
         med = bucket.approxQuantile("count", [0.5], 0.01)[0]
         out["band_bucket_docs_30x"] = {"max": int(mx), "median": med}
         # AQE runtime skew counters on the hottest join of the family
-        from cc_mapreducer_spark.plans.inspect import execution_metrics
-
         m = execution_metrics(timed["near_dedup_minhash"](spark, big))
         out["near_dedup_minhash_30x_metrics"] = {
             "skewed_partitions": m.get("skewed_partitions", 0),
@@ -312,28 +390,7 @@ def skew_trend(spark, queries) -> dict:
             "spill_mb": round(m["spill_bytes"] / 1e6, 3),
         }
         spark.catalog.clearCache()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    ln = [math.log(base_docs * k) for k in TREND_FACTORS]
-    out["queries"] = {}
-    for name in names:
-        secs = [round(min(cells[(name, k)]), 3) for k in TREND_FACTORS]
-        med = [
-            round(statistics.median(cells[(name, k)]), 3)
-            for k in TREND_FACTORS
-        ]
-        lt = [math.log(max(s, 1e-3)) for s in secs]
-        n = len(ln)
-        mx_, my = sum(ln) / n, sum(lt) / n
-        denom = sum((x - mx_) ** 2 for x in ln)
-        slope = sum((x - mx_) * (y - my) for x, y in zip(ln, lt)) / denom
-        resid = max(abs(y - (my + slope * (x - mx_))) for x, y in zip(ln, lt))
-        out["queries"][name] = {
-            "secs": secs,
-            "median_secs": med,
-            "exponent": round(slope, 3),
-            "max_log_resid": round(resid, 3),
-        }
+    out["queries"] = {name: _trend_query(cells, name, sizes) for name in names}
     return out
 
 
@@ -348,10 +405,6 @@ def iterative_trend(spark) -> dict:
     log-log exponent across sizes must track the per-scan cost (<= ~1).
     A superlinear exponent or a marginal cost that exceeds the
     whole-job average would falsify "N bounded aggs"."""
-    import math
-    import shutil
-    import tempfile
-
     import pyarrow.parquet as pq
 
     from pyspark.sql import functions as F
@@ -366,7 +419,6 @@ def iterative_trend(spark) -> dict:
 
     base_docs = pq.read_metadata(f"{SF_DIR}/documents.parquet").num_rows
     base_vecs = pq.read_metadata(f"{SF_DIR}/embeddings.parquet").num_rows
-    reps = int(os.environ.get("SPARK_GRAFT_ITER_REPS", "2"))
     # (2, 6): four isolated iterations in the marginal — enough signal
     # for the exponent, and two fewer k-means assignment scans per cell
     # at the 30x size (the lane's dominant cost)
@@ -400,79 +452,59 @@ def iterative_trend(spark) -> dict:
             ).alias("dst"),
             F.lit(1.0).alias("weight"),
         )
-        pagerank(edges, iterations=iters).write.mode("overwrite").format(
-            "noop"
-        ).save()
+        _noop(pagerank(edges, iterations=iters))
 
     fams = {"logreg_gd": run_logreg, "kmeans": run_kmeans, "pagerank": run_pagerank}
-    tmp = tempfile.mkdtemp(prefix="cc_mr_spark_iter_")
-    cells: dict[tuple[str, int, int], list[float]] = {}
-    try:
-        for k in TREND_FACTORS:
-            d = f"{tmp}/x{k}"
-            os.makedirs(d, exist_ok=True)
-            _synth_corpus(d, base_docs * k, base_vecs * k, seed=3000 + k)
+    jobs = {
+        (name, iters): (lambda d, fn=fn, iters=iters: fn(d, iters))
+        for name, fn in fams.items()
+        for iters in (lo, hi)
+    }
+    with tempfile.TemporaryDirectory(
+        prefix="cc_mr_spark_iter_", ignore_cleanup_errors=True
+    ) as tmp:
+        dirs = _corpora(
+            tmp,
+            TREND_FACTORS,
+            lambda d, k: _synth_corpus(
+                d, base_docs * k, base_vecs * k, seed=3000 + k
+            ),
+        )
         # untimed warmup at the smallest size: the first-ever execution
         # of each lineage pays whole-stage-codegen JIT + Arrow init
         # (measured 95s vs 1s warm on the GD feature expressions) —
         # that's session cost, not iteration cost
-        for name, fn in fams.items():
-            fn(f"{tmp}/x{TREND_FACTORS[0]}", lo)
+        for fn in fams.values():
+            fn(dirs[TREND_FACTORS[0]], lo)
             spark.catalog.clearCache()
-        for _ in range(reps):
-            spark.sparkContext._jvm.System.gc()
-            for k in TREND_FACTORS:
-                d = f"{tmp}/x{k}"
-                for name, fn in fams.items():
-                    for iters in (lo, hi):
-                        t0 = time.perf_counter()
-                        fn(d, iters)
-                        cells.setdefault((name, k, iters), []).append(
-                            time.perf_counter() - t0
-                        )
-                        spark.catalog.clearCache()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        cells = _time_cells(spark, ITER_REPS, dirs, jobs)
     sizes = [base_docs * k for k in TREND_FACTORS]
-    ln = [math.log(s) for s in sizes]
-    out = {"sizes": sizes, "reps": reps, "iters": [lo, hi], "families": {}}
-    # Marginals at or below the fixed job-scheduling floor carry no
-    # size signal (an iteration cheaper than job dispatch measures the
-    # scheduler, not the plan) — log-fitting through one manufactures a
-    # fake exponent (r6 published PageRank 2.065 from marginals
-    # [0.001, 0.674, 0.700]; the real 50k->150k signal is flat). Fit
-    # only points above the floor; with <2 such points the honest
-    # answer is "at the floor everywhere", not a number.
-    floor_s = float(os.environ.get("SPARK_GRAFT_ITER_FLOOR_S", "0.15"))
-    out["marginal_floor_s"] = floor_s
+    out = {
+        "sizes": sizes,
+        "reps": ITER_REPS,
+        "iters": [lo, hi],
+        "families": {},
+        "marginal_floor_s": ITER_FLOOR_S,
+    }
     for name in fams:
-        t_lo = [round(min(cells[(name, k, lo)]), 3) for k in TREND_FACTORS]
-        t_hi = [round(min(cells[(name, k, hi)]), 3) for k in TREND_FACTORS]
+        t_lo = [round(min(cells[((name, lo), k)]), 3) for k in TREND_FACTORS]
+        t_hi = [round(min(cells[((name, hi), k)]), 3) for k in TREND_FACTORS]
         per_iter = [
             round(max((h - l) / (hi - lo), 1e-3), 3)
             for l, h in zip(t_lo, t_hi)
         ]
-        pts = [
-            (x, math.log(p))
-            for x, p in zip(ln, per_iter)
-            if p > floor_s
-        ]
+        above = [(s, p) for s, p in zip(sizes, per_iter) if p > ITER_FLOOR_S]
         fam = {
             f"wall_iters{lo}": t_lo,
             f"wall_iters{hi}": t_hi,
             "per_iter_marginal": per_iter,
-            "points_below_floor": sum(1 for p in per_iter if p <= floor_s),
+            "points_below_floor": len(per_iter) - len(above),
         }
-        if len(pts) >= 2:
-            n = len(pts)
-            mx = sum(x for x, _ in pts) / n
-            my = sum(y for _, y in pts) / n
-            fam["exponent"] = round(
-                sum((x - mx) * (y - my) for x, y in pts)
-                / sum((x - mx) ** 2 for x, _ in pts),
-                3,
-            )
-            fam["exponent_points"] = n
+        # with <2 points above the floor the honest answer is "at the
+        # floor everywhere", not a number
+        if len(above) >= 2:
+            fam["exponent"] = _loglog_fit(*zip(*above))[0]
+            fam["exponent_points"] = len(above)
         else:
             fam["exponent"] = None
             fam["exponent_note"] = (
@@ -492,7 +524,6 @@ def streaming_bench(spark) -> dict:
     snapshot buckets) must not make batch 8 slower than batch 1 beyond
     the data each batch itself carries."""
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -638,338 +669,161 @@ def streaming_bench(spark) -> dict:
 
 
 def scale_trend(spark, queries) -> dict:
-    """Time the dedup/similarity family at 1x/10x/30x and fit log-log
-    scaling exponents.
-
-    Noise control (r3 lesson: a 3.4x outlier at the 10x size — all reps
-    of one (size, query) cell slow while the 30x cell was fast — showed
-    the noise is CORRELATED within a cell when reps run back-to-back):
-      * all corpora are materialized up front, then reps run ROUND-ROBIN
-        across (size, query) cells — a transient GC/load spike now lands
-        on one rep of many cells instead of every rep of one cell, so
-        the per-cell min stays clean;
-      * min AND median are both reported (median shows the spread; the
-        exponent fits the min — the load-independent plan-cost estimate);
-      * forced full GC before each pass, cache cleared between reps.
-    """
-    import math
-    import shutil
-    import statistics
-    import tempfile
-
+    """Time the dedup/similarity family at 1x/10x/30x (round-robin cells,
+    see _time_cells) and fit log-log scaling exponents; min AND median
+    are both reported per cell."""
     import pyarrow.parquet as pq
 
     from cc_mapreducer_spark.operators.dedup import near_dedup_minhash
+    from cc_mapreducer_spark.operators.incremental import (
+        build_minhash_index,
+        incremental_near_dups,
+    )
     from cc_mapreducer_spark.operators.kmv import kmv_overlap_sketch_only
-
-    queries = dict(queries)
-    queries.setdefault("near_dedup_minhash", near_dedup_minhash)
-    queries.setdefault("kmv_overlap_sketch_only", kmv_overlap_sketch_only)
 
     base_docs = pq.read_metadata(f"{SF_DIR}/documents.parquet").num_rows
     base_vecs = pq.read_metadata(f"{SF_DIR}/embeddings.parquet").num_rows
-    reps = int(os.environ.get("SPARK_GRAFT_TREND_REPS", "4"))
-    tmp = tempfile.mkdtemp(prefix="cc_mr_spark_trend_")
     sizes = [base_docs * k for k in TREND_FACTORS]
-    cells: dict[tuple[str, int], list[float]] = {
-        (name, k): [] for name in TREND_QUERIES for k in TREND_FACTORS
+
+    def probe(sp, d):
+        # incremental-ingest lane: the x{k} corpus is indexed once
+        # (untimed — at scale the index is a standing artifact); the
+        # timed query probes a FIXED-size batch — the last base_docs ids
+        # of THIS corpus — against the full index of the same corpus.
+        # Self-matches of the batch against its own indexed rows are part
+        # of the work, as in a real re-ingest check. Claim under test:
+        # probe cost is O(batch + index scan), never O(re-shingle corpus).
+        n = int(d.rstrip("/").rsplit("x", 1)[-1]) * base_docs
+        return incremental_near_dups(
+            sp, d, f"{d}/mh_index", min_doc_id=n - base_docs
+        )
+
+    timed = {
+        "near_dedup_minhash": near_dedup_minhash,
+        "kmv_overlap_sketch_only": kmv_overlap_sketch_only,
+        **queries,
+        "incremental_probe_fixed_batch": probe,
     }
-    try:
-        for k in TREND_FACTORS:
-            d = f"{tmp}/x{k}"
-            os.makedirs(d, exist_ok=True)
-            _synth_corpus(d, base_docs * k, base_vecs * k, seed=1000 + k)
-        # incremental-ingest lane: index the x{k} corpus once (untimed —
-        # at scale the index is a standing artifact), then the timed query
-        # probes a FIXED-size batch (the x1 corpus's docs, relabeled past
-        # the index id range) against it. Claim under test: probe cost is
-        # O(batch + index scan), never O(re-shingle corpus).
-        from cc_mapreducer_spark.operators.incremental import (
-            build_minhash_index,
-            incremental_near_dups,
+    names = TREND_QUERIES + ["incremental_probe_fixed_batch"]
+    # One more decade for the steepest curves (VERDICT r6 item 4): the
+    # two span/winnow queries fitted closest to linear-in-docs (exp
+    # ~0.7) on the 3-point lane; a DEEP_FACTOR point either confirms the
+    # exponent on a 4-point fit or exposes the bend a 3-point fit cannot
+    # see.
+    deep_queries = ["shared_passages", "span_dup_coverage"]
+    with tempfile.TemporaryDirectory(
+        prefix="cc_mr_spark_trend_", ignore_cleanup_errors=True
+    ) as tmp:
+        dirs = _corpora(
+            tmp,
+            TREND_FACTORS,
+            lambda d, k: _synth_corpus(
+                d, base_docs * k, base_vecs * k, seed=1000 + k
+            ),
         )
-
-        for k in TREND_FACTORS:
-            build_minhash_index(spark, f"{tmp}/x{k}", f"{tmp}/x{k}/mh_index")
-
-        def probe(sp, d):
-            # batch = the last base_docs ids of THIS corpus (fixed size at
-            # every k), probed against the full index of the same corpus;
-            # self-matches of the batch against its own indexed rows are
-            # part of the work, as in a real re-ingest check.
-            n = int(d.rstrip("/").rsplit("x", 1)[-1]) * base_docs
-            return incremental_near_dups(
-                sp, d, f"{d}/mh_index", min_doc_id=n - base_docs
+        for d in dirs.values():
+            build_minhash_index(spark, d, f"{d}/mh_index")
+        cells = _time_cells(spark, TREND_REPS, dirs, _query_jobs(spark, timed, names))
+        # n_vecs stays tiny: neither deep query reads embeddings
+        deep_dirs = _corpora(
+            tmp,
+            [DEEP_FACTOR],
+            lambda d, k: _synth_corpus(d, base_docs * k, 1000, seed=1000 + k),
+        )
+        cells.update(
+            _time_cells(
+                spark, DEEP_REPS, deep_dirs, _query_jobs(spark, timed, deep_queries)
             )
-
-        timed = dict(queries)
-        timed["incremental_probe_fixed_batch"] = probe
-        names = TREND_QUERIES + ["incremental_probe_fixed_batch"]
-        for _ in range(reps):
-            spark.sparkContext._jvm.System.gc()
-            for k in TREND_FACTORS:
-                d = f"{tmp}/x{k}"
-                for name in names:
-                    t0 = time.perf_counter()
-                    timed[name](spark, d).write.mode("overwrite").format("noop").save()
-                    cells.setdefault((name, k), []).append(
-                        time.perf_counter() - t0
-                    )
-                    spark.catalog.clearCache()
-        # One more decade for the steepest curves (VERDICT r6 item 4):
-        # the two span/winnow queries fitted closest to linear-in-docs
-        # (exp ~0.7) on the 3-point lane; a 100x (=500k-doc) point either
-        # confirms the exponent on a 4-point fit or exposes the bend a
-        # 3-point fit cannot see. reps=2 and only these two queries —
-        # the point costs ~2 min, not another full lane.
-        deep_factor = int(os.environ.get("SPARK_GRAFT_DEEP_FACTOR", "100"))
-        deep_queries = ["shared_passages", "span_dup_coverage"]
-        deep_cells: dict[str, list[float]] = {}
-        if os.environ.get("SPARK_GRAFT_DEEP_TREND", "1") != "0":
-            deep_reps = int(os.environ.get("SPARK_GRAFT_DEEP_REPS", "2"))
-            dd = f"{tmp}/x{deep_factor}"
-            os.makedirs(dd, exist_ok=True)
-            # n_vecs stays tiny: neither deep query reads embeddings
-            _synth_corpus(
-                dd, base_docs * deep_factor, 1000, seed=1000 + deep_factor
-            )
-            for _ in range(deep_reps):
-                spark.sparkContext._jvm.System.gc()
-                for name in deep_queries:
-                    t0 = time.perf_counter()
-                    timed[name](spark, dd).write.mode("overwrite").format(
-                        "noop"
-                    ).save()
-                    deep_cells.setdefault(name, []).append(
-                        time.perf_counter() - t0
-                    )
-                    spark.catalog.clearCache()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    out = {"sizes": sizes, "reps": reps, "queries": {}}
-    ln = [math.log(s) for s in sizes]
+        )
+    out = {"sizes": sizes, "reps": TREND_REPS, "queries": {}}
     for name in names:
-        secs = [round(min(cells[(name, k)]), 3) for k in TREND_FACTORS]
-        med = [
-            round(statistics.median(cells[(name, k)]), 3)
-            for k in TREND_FACTORS
-        ]
-        lt = [math.log(max(s, 1e-3)) for s in secs]
-        n = len(ln)
-        mx, my = sum(ln) / n, sum(lt) / n
-        denom = sum((x - mx) ** 2 for x in ln)
-        slope = sum((x - mx) * (y - my) for x, y in zip(ln, lt)) / denom
-        # fit quality: max abs residual of the log-log line, in log units
-        # (e^resid = multiplicative miss) — small residuals make the
-        # exponent citable; big ones mean "noise, rerun", stated honestly
-        resid = max(
-            abs(y - (my + slope * (x - mx))) for x, y in zip(ln, lt)
-        )
-        out["queries"][name] = {
-            "secs": secs,
-            "median_secs": med,
-            "exponent": round(slope, 3),
-            "max_log_resid": round(resid, 3),
-        }
-        if name in deep_cells:
-            # 4-point fit: the three lane points + the 100x decade
-            xs = ln + [math.log(base_docs * deep_factor)]
-            ys = lt + [math.log(max(min(deep_cells[name]), 1e-3))]
-            n4 = len(xs)
-            mx4, my4 = sum(xs) / n4, sum(ys) / n4
-            s4 = sum(
-                (x - mx4) * (y - my4) for x, y in zip(xs, ys)
-            ) / sum((x - mx4) ** 2 for x in xs)
-            r4_ = max(
-                abs(y - (my4 + s4 * (x - mx4))) for x, y in zip(xs, ys)
+        q = out["queries"][name] = _trend_query(cells, name, sizes)
+        if name in deep_queries:
+            deep = cells[(name, DEEP_FACTOR)]
+            slope, resid = _loglog_fit(
+                sizes + [base_docs * DEEP_FACTOR], q["secs"] + [min(deep)]
             )
-            out["queries"][name]["deep"] = {
-                "size": base_docs * deep_factor,
-                "sec": round(min(deep_cells[name]), 3),
-                "median_sec": round(statistics.median(deep_cells[name]), 3),
-                "exponent_4pt": round(s4, 3),
-                "max_log_resid_4pt": round(r4_, 3),
+            q["deep"] = {
+                "size": base_docs * DEEP_FACTOR,
+                "sec": round(min(deep), 3),
+                "median_sec": round(statistics.median(deep), 3),
+                "exponent_4pt": slope,
+                "max_log_resid_4pt": resid,
             }
     return out
 
 
-def _headline_vs_prev(timings: dict) -> dict | None:
-    """Machine-generated round-over-round comparison (VERDICT r5 item 5):
-    built inside the SAME run that writes the headline, from the SAME
-    timings dict, so the note can never disagree with the published
-    numbers. Compares against the newest BENCH_r{N}.json on disk:
-    comparable-subset totals, per-query drifts beyond the ±25% local
-    noise envelope, and the new/dropped query lists."""
-    import glob
-    import re
-
-    # Skip artifacts of the CURRENT round (ADVICE r6): the driver writes
-    # BENCH_r{N}.json mid-round, so a bench re-run within round N would
-    # otherwise compare against its own round's earlier snapshot. The
-    # current round number comes from PROGRESS.jsonl's last entry.
-    cur_round = None
-    try:
-        last = (REPO / "PROGRESS.jsonl").read_text().strip().splitlines()[-1]
-        cur_round = int(json.loads(last)["round"])
-    except Exception:
-        pass  # no/invalid progress log -> fall back to newest-on-disk
-    prevs = sorted(
-        glob.glob(str(REPO / "BENCH_r*.json")),
-        key=lambda p: int(re.search(r"BENCH_r(\d+)", p).group(1)),
-    )
-    if cur_round is not None:
-        prevs = [
-            p
-            for p in prevs
-            if int(re.search(r"BENCH_r(\d+)", p).group(1)) < cur_round
-        ]
-    if not prevs:
-        return None
-    prev_path = prevs[-1]
-    try:
-        prev = json.loads(open(prev_path).read())
-    except Exception:
-        return {"prev_artifact": os.path.basename(prev_path), "error": "unreadable"}
-    # the driver wraps the bench's headline line: {"parsed": {...}, ...};
-    # a raw bench.py artifact carries "queries" at top level
-    if "queries" not in prev and isinstance(prev.get("parsed"), dict):
-        prev = prev["parsed"]
-    pq_ = prev.get("queries", {})
-    common = [k for k in timings if k in pq_]
-    cur_total = round(sum(timings[k] for k in common), 3)
-    prev_total = round(sum(pq_[k] for k in common), 3)
-    drifts = {
-        k: {
-            "prev": pq_[k],
-            "cur": timings[k],
-            "ratio": round(timings[k] / max(pq_[k], 1e-9), 2),
-        }
-        for k in common
-        if timings[k] > pq_[k] * 1.25 or timings[k] < pq_[k] * 0.75
-    }
-    return {
-        "prev_artifact": os.path.basename(prev_path),
-        "n_comparable": len(common),
-        "comparable_total_cur": cur_total,
-        "comparable_total_prev": prev_total,
-        "comparable_ratio": round(cur_total / max(prev_total, 1e-9), 3),
-        "new_queries": sorted(k for k in timings if k not in pq_),
-        "dropped_queries": sorted(k for k in pq_ if k not in timings),
-        "drifts_beyond_25pct": drifts,
-    }
+# Components of the digest suites, timed one by one in the
+# suite_legs lane. Every component a suite calls is either here or a
+# HEADLINE lane, except domain_pagerank (see the HEADLINE comment).
+SUITE_LEGS = {
+    "sketches_suite": [
+        "cms_word_counts",
+        "heavy_hitter_words",
+        "approx_quantile_contract",
+        "item_triangle_stats",
+        "adpcm_codec_stats",
+        "kmv_shingle_cardinality",
+    ],
+    "features_suite": [
+        "price_percent_rank",
+        "target_encoded_orders",
+        "event_type_topk_rollup",
+    ],
+    "mining_suite": [
+        "tfidf_doc_keywords",
+        "classifier_eval_metrics",
+        "embedding_drift_psi",
+        "record_linkage_parts",
+        "contrastive_negatives",
+        "span_dup_coverage_multi",
+        "span_removal",
+        "span_removal_l32",
+        "span_decontamination",
+        "dedup_rate_by_source",
+    ],
+    "acquisition_suite": [
+        "html_strip_stats",
+        "url_canonical_stats",
+        "domain_acquisition_rollup",
+        "acquisition_chain_profile",
+        "acquisition_chain_rollup",
+        "warc_response_stats",
+        "warc_acquisition_chain",
+        "warc_revisit_resolution",
+        "wet_export_roundtrip",
+        "acquisition_policy_filter",
+        "robots_policy_filter",
+        "robots_wildcard_filter",
+        "crawl_admission_report",
+        "crawl_frontier_schedule",
+        "content_yield_by_source",
+        "c4_filter_funnel",
+        "sitemap_roundtrip_stats",
+        "robots_txt_directives",
+    ],
+    "image_dedup_suite": [
+        "image_dhash_fingerprint",
+        "image_near_dup_pairs",
+        "image_dup_clusters",
+    ],
+}
 
 
-def suite_leg_timings(spark) -> dict:
-    """Per-leg wall times for the three driver digest suites (VERDICT r5
-    item 7): a digest UNIONs many components, so one slow component hides
+def suite_leg_timings(spark, queries) -> dict:
+    """Per-leg wall times for the digest suites (VERDICT r5 item
+    7): a digest UNIONs many components, so one slow component hides
     inside one key's timing — time each component query separately
-    (best-of-2, cache cleared between) so a leg regression is
-    attributable."""
-    from cc_mapreducer_spark.operators.classifier import classifier_eval_metrics
-    from cc_mapreducer_spark.operators.contrastive import contrastive_negatives
-    from cc_mapreducer_spark.operators.dedup import dedup_rate_by_source
-    from cc_mapreducer_spark.operators.dq import (
-        approx_quantile_contract,
-        embedding_drift_psi,
-    )
-    from cc_mapreducer_spark.operators.features import (
-        price_percent_rank,
-        target_encoded_orders,
-    )
-    from cc_mapreducer_spark.operators.heavyhitters import (
-        event_type_topk_rollup,
-        heavy_hitter_words,
-    )
-    from cc_mapreducer_spark.operators.linkage import record_linkage_parts
-    from cc_mapreducer_spark.operators.search import tfidf_doc_keywords
-    from cc_mapreducer_spark.operators.sketches import cms_word_counts
-    from cc_mapreducer_spark.operators.spans import (
-        span_decontamination,
-        span_dup_coverage_multi,
-        span_removal,
-        span_removal_l32,
-    )
-    from cc_mapreducer_spark.operators.acquisition import (
-        acquisition_chain_profile,
-        acquisition_chain_rollup,
-        acquisition_policy_filter,
-        crawl_admission_report,
-        crawl_frontier_schedule,
-        domain_acquisition_rollup,
-        html_strip_stats,
-        robots_policy_filter,
-        robots_wildcard_filter,
-        url_canonical_stats,
-    )
-    from cc_mapreducer_spark.operators.warc_ingest import (
-        warc_acquisition_chain,
-        warc_response_stats,
-        warc_revisit_resolution,
-        wet_export_roundtrip,
-    )
-    from cc_mapreducer_spark.operators.image_dedup import (
-        image_dhash_fingerprint,
-        image_dup_clusters,
-        image_near_dup_pairs,
-    )
-    from cc_mapreducer_spark.operators.graph import item_triangle_stats
-    from cc_mapreducer_spark.operators.multimodal import adpcm_codec_stats
-
-    legs = {
-        "sketches_suite": {
-            "cms_word_counts": cms_word_counts,
-            "heavy_hitter_words": heavy_hitter_words,
-            "approx_quantile_contract": approx_quantile_contract,
-            "item_triangle_stats": item_triangle_stats,
-            "adpcm_codec_stats": adpcm_codec_stats,
-        },
-        "features_suite": {
-            "price_percent_rank": price_percent_rank,
-            "target_encoded_orders": target_encoded_orders,
-            "event_type_topk_rollup": event_type_topk_rollup,
-        },
-        "mining_suite": {
-            "tfidf_doc_keywords": tfidf_doc_keywords,
-            "classifier_eval_metrics": classifier_eval_metrics,
-            "embedding_drift_psi": embedding_drift_psi,
-            "record_linkage_parts": record_linkage_parts,
-            "contrastive_negatives": contrastive_negatives,
-            "span_dup_coverage_multi": span_dup_coverage_multi,
-            "span_removal": span_removal,
-            "span_removal_l32": span_removal_l32,
-            "span_decontamination": span_decontamination,
-            "dedup_rate_by_source": dedup_rate_by_source,
-        },
-        "acquisition_suite": {
-            "html_strip_stats": html_strip_stats,
-            "url_canonical_stats": url_canonical_stats,
-            "domain_acquisition_rollup": domain_acquisition_rollup,
-            "acquisition_chain_profile": acquisition_chain_profile,
-            "acquisition_chain_rollup": acquisition_chain_rollup,
-            "warc_response_stats": warc_response_stats,
-            "warc_acquisition_chain": warc_acquisition_chain,
-            "warc_revisit_resolution": warc_revisit_resolution,
-            "wet_export_roundtrip": wet_export_roundtrip,
-            "acquisition_policy_filter": acquisition_policy_filter,
-            "robots_policy_filter": robots_policy_filter,
-            "robots_wildcard_filter": robots_wildcard_filter,
-            "crawl_admission_report": crawl_admission_report,
-            "crawl_frontier_schedule": crawl_frontier_schedule,
-        },
-        "image_dedup_suite": {
-            "image_dhash_fingerprint": image_dhash_fingerprint,
-            "image_near_dup_pairs": image_near_dup_pairs,
-            "image_dup_clusters": image_dup_clusters,
-        },
-    }
+    (best-of-2 of build + execution, cache cleared between legs) so a
+    leg regression is attributable."""
     out: dict = {}
-    for suite, comps in legs.items():
+    for suite, legs in SUITE_LEGS.items():
         out[suite] = {}
-        for name, fn in comps.items():
+        for name in legs:
             best = float("inf")
             for _ in range(2):
                 t0 = time.perf_counter()
-                fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
+                _noop(queries[name](spark, SF_DIR))
                 best = min(best, time.perf_counter() - t0)
             out[suite][name] = round(best, 3)
             spark.catalog.clearCache()
@@ -1002,6 +856,95 @@ def _jvm_counters(spark) -> dict:
         return {}
 
 
+def warm_up(spark, queries) -> None:
+    """Warm the JVM + parquet footers so the first lane doesn't pay
+    session startup."""
+    _noop(queries["q1_pricing_summary"](spark, SF_DIR))
+
+
+def time_lane(spark, queries, name) -> tuple[float, list[float]]:
+    """Time one lane: build ONE DataFrame, execute it REPEAT times through
+    the noop sink, then evict the caches it populated. Returns
+    (build secs, [rep secs]).
+
+    ONE DataFrame per lane, executed REPEAT times: rebuilding the query
+    per rep creates a fresh plan instance whose generated code misses
+    the codegen cache, so every rep RE-COMPILES the lane (lane_jit showed
+    lm_perplexity — the fleet's widest plan, 19 exchanges — paying ~9s of
+    JIT per rep mid-run and never warming: 4x10.6s reps vs 2.2s warm in
+    isolation). Reusing the plan is also what a production job does:
+    plan once, execute. Rep 0 pays analysis+compile; best-of-N reads the
+    warm reps.
+
+    CONSTRUCTION IS TIMED TOO (ADVICE r9): some lanes do real eager work
+    while BUILDING the DataFrame (localCheckpoint iterations in
+    duplicate_clusters, trainer collect loops in the tokenizer stats, the
+    WARC mapInPandas checkpoint in crawl_e2e_funnel) — that cost is
+    outside the reps by design (it is the train-once / materialize-once
+    artifact cost a production pipeline amortizes across many
+    executions), but it must be VISIBLE, not silently excluded.
+
+    The cache eviction: within-lane reps legitimately reuse what a query
+    persisted (near-dedup shingle sets, simhash fingerprints), but a
+    later lane must not pay the eviction/GC pressure of an earlier
+    lane's cache — measured multi-second inflation on the tail of the
+    run without it."""
+    t0 = time.perf_counter()
+    df = queries[name](spark, SF_DIR)
+    build = round(time.perf_counter() - t0, 3)
+    reps = []
+    for _ in range(REPEAT):
+        t0 = time.perf_counter()
+        _noop(df)
+        reps.append(round(time.perf_counter() - t0, 3))
+    spark.catalog.clearCache()
+    return build, reps
+
+
+def shuffle_lane(spark, queries) -> dict:
+    """Measured (not inferred) shuffle/spill per headline query from the
+    post-AQE plan's SQLMetrics — the number that explodes first when a
+    plan regresses at scale — plus a plan fingerprint."""
+    from cc_mapreducer_spark.plans.inspect import (
+        count_exchanges,
+        execution_metrics,
+        formatted_plan,
+    )
+
+    shuffle = {}
+    # iterative queries truncate lineage per round (localCheckpoint),
+    # so the final plan's metrics would under-report their per-round
+    # shuffles — exclude rather than publish a misleading number
+    # (unigram trains EM inside the builder; only its final Viterbi
+    # encode would be metered)
+    skip_shuffle = {"duplicate_clusters", "unigram_token_stats"}
+    for name in [h for h in HEADLINE if h not in skip_shuffle]:
+        try:
+            df = queries[name](spark, SF_DIR)
+            # plan fingerprint BEFORE metrics: a structural diff of
+            # these counts between rounds is the earliest regression
+            # signal (an extra Exchange / lost broadcast shows up
+            # here before any timing moves)
+            plan = formatted_plan(df)
+            m = execution_metrics(df)
+            shuffle[name] = {
+                "written_mb": round(m["shuffle_bytes_written"] / 1e6, 3),
+                "records": m["shuffle_records_written"],
+                "spill_mb": round(m["spill_bytes"] / 1e6, 3),
+                "plan": {
+                    "exchanges": count_exchanges(df),
+                    "broadcasts": plan.count("BroadcastExchange"),
+                    "scans": plan.count("Scan parquet"),
+                    "py_evals": plan.count("EvalPython")
+                    + plan.count("MapInPandas"),
+                },
+            }
+        except Exception as e:  # metrics must never fail the bench
+            shuffle[name] = {"error": str(e)[:120]}
+        spark.catalog.clearCache()
+    return shuffle
+
+
 def main() -> None:
     # local[32] runs all 32 "executors" in ONE JVM: size the heap like the
     # aggregate executor memory a real cluster would have, or the trend
@@ -1010,66 +953,23 @@ def main() -> None:
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
     spark = get_spark("cc-mapreducer-spark-bench")
     queries = registry.all_queries()
-    # warm the JVM + parquet footers so query 1 doesn't pay session startup
-    queries["q1_pricing_summary"](spark, SF_DIR).write.mode("overwrite").format("noop").save()
+    warm_up(spark, queries)
 
-    # best-of-N per query: local-mode wall clock is noisy (JIT, page cache,
-    # ambient box load — measured ±25% run-to-run on identical code); the
-    # minimum is the stable, load-independent estimate of plan cost.
-    # Best-of-4: the codegen-heaviest query (near_dedup_pairs) measured
-    # warm only from its third repetition (C2 compile of the generated
-    # minhash expressions), so 3 reps could record an all-cold best.
-    repeat = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "4"))
     timings: dict[str, float] = {}
     lane_jit: dict[str, dict] = {}
     lane_reps: dict[str, list[float]] = {}
     lane_build: dict[str, float] = {}
     for name in HEADLINE:
-        best = float("inf")
-        reps: list[float] = []
         j0 = _jvm_counters(spark)
-        # ONE DataFrame per lane, executed `repeat` times: rebuilding the
-        # query per rep creates a fresh plan instance whose generated
-        # code misses the codegen cache, so every rep RE-COMPILES the
-        # lane (lane_jit showed lm_perplexity — the fleet's widest plan,
-        # 19 exchanges — paying ~9s of JIT per rep mid-run and never
-        # warming: 4x10.6s reps vs 2.2s warm in isolation). Reusing the
-        # plan is also what a production job does: plan once, execute.
-        # Rep 0 pays analysis+compile; best-of-N reads the warm reps.
-        #
-        # CONSTRUCTION IS TIMED TOO (ADVICE r9): some lanes do real
-        # eager work while BUILDING the DataFrame (localCheckpoint
-        # iterations in duplicate_clusters, trainer collect loops in the
-        # tokenizer stats, the WARC mapInPandas checkpoint in
-        # crawl_e2e_funnel) — that cost is outside the reps by design
-        # (it is the train-once / materialize-once artifact cost a
-        # production pipeline amortizes across many executions), but it
-        # must be VISIBLE, not silently excluded: lane_build records it
-        # per lane and notes.eager_lanes names the lanes where it is
-        # material.
-        tb0 = time.perf_counter()
-        df = queries[name](spark, SF_DIR)
-        lane_build[name] = round(time.perf_counter() - tb0, 3)
-        for _ in range(repeat):
-            t0 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            reps.append(round(time.perf_counter() - t0, 3))
-            best = min(best, reps[-1])
+        lane_build[name], lane_reps[name] = time_lane(spark, queries, name)
         j1 = _jvm_counters(spark)
-        timings[name] = round(best, 3)
-        lane_reps[name] = reps
+        timings[name] = min(lane_reps[name])
         if j0 and j1:
             lane_jit[name] = {
                 "comp_ms": j1["comp_ms"] - j0["comp_ms"],
                 "gc_ms": j1["gc_ms"] - j0["gc_ms"],
                 "codecache_used_mb": j1["codecache_used_mb"],
             }
-        # Evict caches a query populated (near-dedup shingle sets, simhash
-        # fingerprints): within-query reps legitimately reuse them, but a
-        # later query must not pay the eviction/GC pressure of an earlier
-        # query's cache — measured multi-second inflation on the tail of
-        # the run without this.
-        spark.catalog.clearCache()
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     out = {
@@ -1079,71 +979,27 @@ def main() -> None:
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    # The shuffle and scale-trend lanes are DETAIL: they print as their own
-    # earlier lines and land in BENCH_DETAIL.json next to this script, so
-    # the headline line stays compact. The driver records only the LAST
-    # ~2000 chars of output — in r3 the detail blocks rode on the headline
-    # line, grew it past that window, and every per-query timing was lost.
-    detail: dict = {}
-    if os.environ.get("SPARK_GRAFT_SHUFFLE_LANE", "1") != "0":
-        # measured (not inferred) shuffle/spill per headline query from
-        # the post-AQE plan's SQLMetrics — the number that explodes
-        # first when a plan regresses at scale
-        from cc_mapreducer_spark.plans.inspect import execution_metrics
-
-        from cc_mapreducer_spark.plans.inspect import (
-            count_exchanges,
-            formatted_plan,
-        )
-
-        shuffle = {}
-        # iterative queries truncate lineage per round (localCheckpoint),
-        # so the final plan's metrics would under-report their per-round
-        # shuffles — exclude rather than publish a misleading number
-        # (unigram trains EM inside the builder; only its final Viterbi
-        # encode would be metered)
-        skip_shuffle = {"duplicate_clusters", "unigram_token_stats"}
-        for name in [h for h in HEADLINE if h not in skip_shuffle]:
-            try:
-                df = queries[name](spark, SF_DIR)
-                # plan fingerprint BEFORE metrics: a structural diff of
-                # these counts between rounds is the earliest regression
-                # signal (an extra Exchange / lost broadcast shows up
-                # here before any timing moves)
-                plan = formatted_plan(df)
-                m = execution_metrics(df)
-                shuffle[name] = {
-                    "written_mb": round(m["shuffle_bytes_written"] / 1e6, 3),
-                    "records": m["shuffle_records_written"],
-                    "spill_mb": round(m["spill_bytes"] / 1e6, 3),
-                    "plan": {
-                        "exchanges": count_exchanges(df),
-                        "broadcasts": plan.count("BroadcastExchange"),
-                        "scans": plan.count("Scan parquet"),
-                        "py_evals": plan.count("EvalPython")
-                        + plan.count("MapInPandas"),
-                    },
-                }
-            except Exception as e:  # metrics must never fail the bench
-                shuffle[name] = {"error": str(e)[:120]}
-            spark.catalog.clearCache()
-        detail["shuffle"] = shuffle
-        print(json.dumps({"detail": "shuffle", **{"shuffle": shuffle}}))
+    # The detail lanes print as their own earlier lines and land in
+    # BENCH_DETAIL.json next to this script, so the headline line stays
+    # compact. The run recorder keeps only the LAST ~2000 chars of output —
+    # in r3 the detail blocks rode on the headline line, grew it past
+    # that window, and every per-query timing was lost.
+    #
     # A lane exception must never cost the headline artifact: two r5 runs
     # died between the last lane and the final print (a %-format bug and
     # an external timeout) and the whole bench's evidence was lost with
-    # them — every lane is fenced, and the headline prints even if every
-    # lane fails.
+    # them — every trend lane is fenced, and the headline prints even if
+    # every lane fails.
+    detail: dict = {"shuffle": shuffle_lane(spark, queries)}
+    print(json.dumps({"detail": "shuffle", "shuffle": detail["shuffle"]}))
     lanes = [
-        ("scale_trend", "SPARK_GRAFT_SCALE_TREND", lambda: scale_trend(spark, queries)),
-        ("skew_trend", "SPARK_GRAFT_SKEW_TREND", lambda: skew_trend(spark, queries)),
-        ("iterative_trend", "SPARK_GRAFT_ITER_TREND", lambda: iterative_trend(spark)),
-        ("streaming", "SPARK_GRAFT_STREAMING_LANE", lambda: streaming_bench(spark)),
-        ("suite_legs", "SPARK_GRAFT_SUITE_LEGS", lambda: suite_leg_timings(spark)),
+        ("scale_trend", lambda: scale_trend(spark, queries)),
+        ("skew_trend", lambda: skew_trend(spark, queries)),
+        ("iterative_trend", lambda: iterative_trend(spark)),
+        ("streaming", lambda: streaming_bench(spark)),
+        ("suite_legs", lambda: suite_leg_timings(spark, queries)),
     ]
-    for lane_name, env, fn in lanes:
-        if os.environ.get(env, "1") == "0":
-            continue
+    for lane_name, fn in lanes:
         try:
             detail[lane_name] = fn()
         except Exception as e:  # lane evidence is best-effort, headline is not
@@ -1152,7 +1008,6 @@ def main() -> None:
     # Context the headline numbers need, all computed from this run: a
     # hand-written note can disagree with the numbers it sits next to.
     detail["notes"] = {
-        "headline_vs_prev": _headline_vs_prev(timings),
         # Per-lane JIT/GC attribution (VERDICT r8 items 1/6): every
         # headline lane records its rep times plus the JVM's
         # compile-time/GC-time deltas and code-cache occupancy across
@@ -1178,33 +1033,30 @@ def main() -> None:
             k for k, v in lane_build.items() if v >= 1.0
         ),
         "jvm_final": _jvm_counters(spark),
-        "rep_policy": f"best-of-{repeat} reps per lane over ONE planned "
+        "rep_policy": f"best-of-{REPEAT} reps per lane over ONE planned "
         "DataFrame per lane; lane_build is the construction time those "
         "reps exclude",
     }
-    if detail:
-        # Honest persisted-lane timing (VERDICT r11 item 2): best-of-N
-        # reads the warm reps, so lanes that materialize a memoized
-        # frame inside rep 1 report the InMemory-read figure. rep1_cold
-        # is that first execution — plan already compiled, every cache
-        # cold, materialization included — published PER LANE alongside
-        # best-of-N so a persisted lane's steady-state and cold costs
-        # are separable in the artifact itself. A COPY of `out` so the
-        # one-line contract JSON printed below stays byte-unchanged.
-        detail["headline"] = {
-            **out,
-            "rep1_cold": {
-                name: reps[0] for name, reps in lane_reps.items() if reps
-            },
-            "rep1_cold_total": round(
-                sum(reps[0] for reps in lane_reps.values() if reps), 3
-            ),
-        }
-        try:
-            (REPO / "BENCH_DETAIL.json").write_text(json.dumps(detail, indent=2) + "\n")
-        except Exception:
-            pass  # neither a read-only checkout nor a serialization
-            #       surprise may cost the headline line below
+    # Honest persisted-lane timing (VERDICT r11 item 2): best-of-N
+    # reads the warm reps, so lanes that materialize a memoized
+    # frame inside rep 1 report the InMemory-read figure. rep1_cold
+    # is that first execution — plan already compiled, every cache
+    # cold, materialization included — published PER LANE alongside
+    # best-of-N so a persisted lane's steady-state and cold costs
+    # are separable in the artifact itself. A COPY of `out` so the
+    # one-line contract JSON printed below stays byte-unchanged.
+    detail["headline"] = {
+        **out,
+        "rep1_cold": {name: reps[0] for name, reps in lane_reps.items()},
+        "rep1_cold_total": round(
+            sum(reps[0] for reps in lane_reps.values()), 3
+        ),
+    }
+    try:
+        (REPO / "BENCH_DETAIL.json").write_text(json.dumps(detail, indent=2) + "\n")
+    except Exception:
+        pass  # neither a read-only checkout nor a serialization
+        #       surprise may cost the headline line below
     # LAST line = the compact headline JSON the driver parses
     print(json.dumps(out))
     spark.stop()

@@ -8,8 +8,9 @@ the scan output with no Python round-trip.
 Tokenizer semantics (documented divergence from the reference): a token is
 a maximal run of ``[a-z]`` in the lower-cased text. The reference's
 first-apostrophe-only removal (``src/index.js:50``, missing ``g`` regex
-flag) is a bug we do not replicate — here every non-letter, apostrophes
-included, is a word break.
+flag) is a bug ``tokens`` does not replicate — there every non-letter,
+apostrophes included, is a word break. ``faithful_tokens`` reproduces it
+for the reader's faithful mode.
 """
 
 from __future__ import annotations
@@ -36,6 +37,11 @@ def stop_words_sql_list() -> str:
     return "(" + ", ".join(f"'{w}'" for w in STOP_WORDS) + ")"
 
 
+def sql_quote(s: str) -> str:
+    """``s`` with its single quotes doubled, for a SQL string literal."""
+    return s.replace("'", "''")
+
+
 def tokens(text: Column) -> Column:
     """text -> array<string> of [a-z]+ tokens (may contain '' edge tokens).
 
@@ -45,6 +51,21 @@ def tokens(text: Column) -> Column:
     regex directly is one regex pass per line instead of two.
     """
     return F.split(F.lower(text), "[^a-z]+")
+
+
+def faithful_tokens(text: Column) -> Column:
+    """text -> array<string> under the reference's first-apostrophe-only
+    reader (src/index.js:50's missing ``g`` flag): the FIRST apostrophe
+    is removed, joining its neighbours — prefix before it + remainder
+    after — and every later non-letter is a word break (may contain ''
+    edge tokens). Spark's 4-arg regexp_replace position argument does
+    NOT mean first-match-only — it replaces all matches from that
+    position — so the prefix/remainder split does the removal."""
+    lowered = F.lower(text)
+    head = F.substring_index(lowered, "'", 1)
+    # length 2**31 - 1 = to the end, as SQL's two-argument substring
+    stripped = F.concat(head, F.substring(lowered, F.length(head) + 2, 2**31 - 1))
+    return F.split(F.regexp_replace(stripped, "[^a-z]+", " "), " ")
 
 
 def anagram_signature(word: Column) -> Column:

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.functions.text import sql_quote
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
 
@@ -121,14 +122,10 @@ def _html_fixture_col() -> Column:
     )
 
 
-def _q(s: str) -> str:
-    return s.replace("'", "''")
-
-
 _HTML_FIXTURE_SQL = (
-    f"'{_q(_HTML_P1)}' || source || '{_q(_HTML_P2)}' || "
-    f"CAST(doc_id AS VARCHAR) || '{_q(_HTML_P3)}' || "
-    f"CAST(doc_id AS VARCHAR) || '{_q(_HTML_P4)}' || text || '{_q(_HTML_P5)}'"
+    f"'{sql_quote(_HTML_P1)}' || source || '{sql_quote(_HTML_P2)}' || "
+    f"CAST(doc_id AS VARCHAR) || '{sql_quote(_HTML_P3)}' || "
+    f"CAST(doc_id AS VARCHAR) || '{sql_quote(_HTML_P4)}' || text || '{sql_quote(_HTML_P5)}'"
 )
 
 _HTML_STRIP_SQL = f"""

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from cc_mapreducer_spark.functions.text import (
     STOP_WORDS,
     anagram_signature,
+    faithful_tokens,
     stop_words_sql_list,
     tokens,
 )
@@ -207,19 +208,9 @@ def q_tokenize_wordcount_faithful(spark: SparkSession, sf_dir: str) -> DataFrame
     agree on the driver's apostrophe-free corpus and diverge exactly as
     the reference does on real text (unit-tested)."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    # remove ONLY the first apostrophe: prefix before it + remainder after.
-    # (Spark's 4-arg regexp_replace position arg does NOT mean
-    # first-match-only — it replaces all matches from that position.)
-    stripped = F.expr(
-        "concat(substring_index(lower(text), \"'\", 1),"
-        " substring(lower(text), length(substring_index(lower(text), \"'\", 1)) + 2))"
-    )
-    words = (
-        docs.select(
-            F.explode(F.split(F.regexp_replace(stripped, "[^a-z]+", " "), " ")).alias("word")
-        )
-        .filter(F.length("word") > 1)
-    )
+    words = docs.select(
+        F.explode(faithful_tokens(F.col("text"))).alias("word")
+    ).filter(F.length("word") > 1)
     words = op_filter_stopwords(words)
     return words.groupBy("word").agg(F.count("*").alias("cnt"))
 
@@ -290,19 +281,15 @@ def q_word_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     one mode naturally gets 0 in the other (what the outer join's
     coalesce did)."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    # faithful mode: remove ONLY the first apostrophe — prefix before it
-    # + remainder after (src/index.js:50's missing `g` flag).
-    stripped = F.expr(
-        "concat(substring_index(lower(text), \"'\", 1),"
-        " substring(lower(text), length(substring_index(lower(text), \"'\", 1)) + 2))"
-    )
-    faithful_toks = F.split(F.regexp_replace(stripped, "[^a-z]+", " "), " ")
     tag = lambda arr, flag: F.transform(  # noqa: E731
         arr, lambda w: F.struct(F.lit(flag).alias("sane"), w.alias("word"))
     )
     tagged = docs.select(
         F.explode(
-            F.concat(tag(tokens(F.col("text")), 1), tag(faithful_toks, 0))
+            F.concat(
+                tag(tokens(F.col("text")), 1),
+                tag(faithful_tokens(F.col("text")), 0),
+            )
         ).alias("t")
     ).select(F.col("t.sane").alias("sane"), F.col("t.word").alias("word"))
     words = op_filter_stopwords(tagged.filter(F.length("word") > 1))

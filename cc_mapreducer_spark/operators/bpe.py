@@ -76,11 +76,29 @@ _MERGE_FOLD = (
 )
 
 
-def _apply_merge(syms_df: DataFrame, a: str, b: str) -> DataFrame:
+# Every adjacent (a, b) symbol pair of a word, for explode. Guard:
+# sequence(1, 0) is DESCENDING in Spark, so a fully merged single-symbol
+# word must yield an empty pair array, not an out-of-bounds probe.
+_ADJACENT_PAIRS = (
+    "IF(size(syms) < 2, "
+    "cast(array() as array<struct<a: string, b: string>>), "
+    "transform(sequence(1, size(syms) - 1), "
+    "i -> struct(element_at(syms, i) as a, "
+    "element_at(syms, i + 1) as b)))"
+)
+
+
+def _merge_expr(a: str, b: str, ab: str) -> str:
+    """_MERGE_FOLD fusing (a, b) into ab, each a Spark SQL literal."""
+
     def q(s: str) -> str:
         return s.replace("\\", "\\\\").replace("'", "\\'")
 
-    expr = _MERGE_FOLD.format(a=q(a), b=q(b), ab=q(a + b))
+    return _MERGE_FOLD.format(a=q(a), b=q(b), ab=q(ab))
+
+
+def _apply_merge(syms_df: DataFrame, a: str, b: str) -> DataFrame:
+    expr = _merge_expr(a, b, a + b)
     return syms_df.select("word", "cnt", F.expr(expr).alias("syms"))
 
 
@@ -96,18 +114,7 @@ def train_bpe(
     for _ in range(n_merges):
         pairs = syms.select(
             "cnt",
-            # guard: sequence(1, 0) is DESCENDING in Spark, so a fully
-            # merged single-symbol word must yield an empty pair array,
-            # not an out-of-bounds probe
-            F.explode(
-                F.expr(
-                    "IF(size(syms) < 2, "
-                    "cast(array() as array<struct<a: string, b: string>>), "
-                    "transform(sequence(1, size(syms) - 1), "
-                    "i -> struct(element_at(syms, i) as a, "
-                    "element_at(syms, i + 1) as b)))"
-                )
-            ).alias("p"),
+            F.explode(F.expr(_ADJACENT_PAIRS)).alias("p"),
         ).groupBy("p.a", "p.b").agg(F.sum("cnt").alias("n"))
         # deterministic argmax: count desc, then pair lexicographic
         top = pairs.orderBy(F.desc("n"), "a", "b").take(1)

@@ -123,7 +123,7 @@ def train_byte_bpe(
     the char-BPE trainer's loop (operators/bpe.py) with the byte
     alphabet and NO end-of-word marker (byte-level BPE carries word
     boundaries in the Ġ space symbol instead)."""
-    from cc_mapreducer_spark.operators.bpe import _apply_merge
+    from cc_mapreducer_spark.operators.bpe import _ADJACENT_PAIRS, _apply_merge
 
     syms = byte_word_freq_table(docs).select(
         "word", "cnt", F.split(F.col("word"), "").alias("syms")
@@ -132,15 +132,7 @@ def train_byte_bpe(
     for _ in range(n_merges):
         pairs = syms.select(
             "cnt",
-            F.explode(
-                F.expr(
-                    "IF(size(syms) < 2, "
-                    "cast(array() as array<struct<a: string, b: string>>), "
-                    "transform(sequence(1, size(syms) - 1), "
-                    "i -> struct(element_at(syms, i) as a, "
-                    "element_at(syms, i + 1) as b)))"
-                )
-            ).alias("p"),
+            F.explode(F.expr(_ADJACENT_PAIRS)).alias("p"),
         ).groupBy("p.a", "p.b").agg(F.sum("cnt").alias("n"))
         top = pairs.orderBy(F.desc("n"), "a", "b").take(1)
         if not top or top[0]["n"] < min_pair_count:

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.functions.text import sql_quote
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
 
@@ -96,10 +97,6 @@ def c4_clean(df: DataFrame, text_col: str = "page_text") -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _q(s: str) -> str:
-    return s.replace("'", "''")
-
-
 _L_JS = "please enable javascript and cookies to view this site."
 _L_NAV = "home menu search"
 _L_CLOSE = "readers can find the full archive at the library desk every day."
@@ -131,15 +128,15 @@ def _page_text_col() -> Column:
 
 
 _PAGE_TEXT_SQL = (
-    f"'{_q(_L_JS)}' || chr(10) || text || '.' || chr(10) || "
-    f"'{_q(_L_NAV)}' || chr(10) || "
+    f"'{sql_quote(_L_JS)}' || chr(10) || text || '.' || chr(10) || "
+    f"'{sql_quote(_L_NAV)}' || chr(10) || "
     f"'story ' || CAST(doc_id AS VARCHAR) || ' was filed under ' || source "
     f"|| ' for the archive today!' || chr(10) || "
-    f"'{_q(_L_CLOSE)}' || chr(10) || "
+    f"'{sql_quote(_L_CLOSE)}' || chr(10) || "
     f"'copyright ' || source || "
-    f"CASE WHEN doc_id % 17 = 0 THEN chr(10) || '{_q(_L_CODE)}' ELSE '' END || "
-    f"CASE WHEN doc_id % 19 = 0 THEN chr(10) || '{_q(_L_BAD)}' ELSE '' END || "
-    f"CASE WHEN doc_id % 23 = 0 THEN chr(10) || '{_q(_L_LOREM)}' ELSE '' END"
+    f"CASE WHEN doc_id % 17 = 0 THEN chr(10) || '{sql_quote(_L_CODE)}' ELSE '' END || "
+    f"CASE WHEN doc_id % 19 = 0 THEN chr(10) || '{sql_quote(_L_BAD)}' ELSE '' END || "
+    f"CASE WHEN doc_id % 23 = 0 THEN chr(10) || '{sql_quote(_L_LOREM)}' ELSE '' END"
 )
 
 _LINE_KEPT_SQL = (

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.functions.text import sql_quote
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
 
@@ -113,10 +114,6 @@ def extract_main_content(
 # --------------------------------------------------------------------------
 
 
-def _q(s: str) -> str:
-    return s.replace("'", "''")
-
-
 _PG_HEAD = "<html><head><title>Doc "
 _PG_HEADER = (
     '</title></head>\n<body>\n<header><a href="/">Home</a> '
@@ -151,13 +148,13 @@ def _page_fixture_col() -> Column:
 
 
 _PAGE_FIXTURE_SQL = (
-    f"'{_q(_PG_HEAD)}' || CAST(doc_id AS VARCHAR) || "
-    f"'{_q(_PG_HEADER)}' || text || "
-    f"'{_q(_PG_MID)}' || source || "
-    f"'{_q(_PG_MID2)}' || CAST(doc_id AS VARCHAR) || "
-    f"'{_q(_PG_ASIDE)}' || CAST(doc_id AS VARCHAR) || "
-    f"'{_q(_PG_FOOT)}' || source || "
-    f"'{_q(_PG_TAIL)}'"
+    f"'{sql_quote(_PG_HEAD)}' || CAST(doc_id AS VARCHAR) || "
+    f"'{sql_quote(_PG_HEADER)}' || text || "
+    f"'{sql_quote(_PG_MID)}' || source || "
+    f"'{sql_quote(_PG_MID2)}' || CAST(doc_id AS VARCHAR) || "
+    f"'{sql_quote(_PG_ASIDE)}' || CAST(doc_id AS VARCHAR) || "
+    f"'{sql_quote(_PG_FOOT)}' || source || "
+    f"'{sql_quote(_PG_TAIL)}'"
 )
 
 # The oracle runs the SAME block pipeline in DuckDB's list lambdas —

@@ -38,16 +38,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.functions.text import sql_quote
 from cc_mapreducer_spark.operators.graph import pagerank
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
 
 _HREF_RE = 'href="(https?://[^"]*)"'
 _DOMAIN_RE = r"^https?://(?:www\.)?([^/?#:]*)"
-
-
-def _q(s: str) -> str:
-    return s.replace("'", "''")
 
 
 # page fixture: two cross-domain links (residue-derived targets), one
@@ -84,11 +81,11 @@ def _page_links_col() -> Column:
 
 
 _PAGE_LINKS_SQL = (
-    f"'{_q(_LG_P1)}' || 'src' || CAST((doc_id + 1) % 20 AS VARCHAR) || "
-    f"'{_q(_LG_P2)}' || 'src' || CAST((doc_id * doc_id + 3) % 20 AS VARCHAR) || "
-    f"'{_q(_LG_P3)}' || source || "
-    f"'{_q(_LG_P4)}' || text || "
-    f"'{_q(_LG_P5)}'"
+    f"'{sql_quote(_LG_P1)}' || 'src' || CAST((doc_id + 1) % 20 AS VARCHAR) || "
+    f"'{sql_quote(_LG_P2)}' || 'src' || CAST((doc_id * doc_id + 3) % 20 AS VARCHAR) || "
+    f"'{sql_quote(_LG_P3)}' || source || "
+    f"'{sql_quote(_LG_P4)}' || text || "
+    f"'{sql_quote(_LG_P5)}'"
 )
 
 

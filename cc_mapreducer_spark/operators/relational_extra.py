@@ -8,15 +8,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.operators.relational import DEC, _dec
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table
-
-DEC = "decimal(12,2)"
-
-
-def _dec(c: str) -> F.Column:
-    return F.col(c).cast(DEC)
-
 
 # --------------------------------------------------------------------------
 # outer / cross joins

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.functions.text import sql_quote
 from cc_mapreducer_spark.operators.acquisition import (
     _ROBOTS_FILTER_SQL,
     _URL_FIXTURE_SQL,
@@ -35,10 +36,6 @@ from cc_mapreducer_spark.operators.acquisition import (
 )
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
-
-
-def _q(s: str) -> str:
-    return s.replace("'", "''")
 
 
 # fixture file text per domain — mirrors _ROBOTS_RULES exactly, so the
@@ -69,11 +66,11 @@ def build_robots_txt(domain: Column) -> Column:
 
 
 _ROBOTS_TXT_SQL_EXPR = (
-    f"'{_q(_RB_P1)}' || domain || '{_q(_RB_P2)}' || "
-    f"CASE WHEN domain LIKE '%.com' THEN '{_q(_RB_COM)}' "
-    f"     WHEN domain = 'src7.org' THEN '{_q(_RB_SRC7)}' ELSE '' END || "
-    f"'{_q(_RB_P3)}' || CAST(1 + length(domain) % 3 AS VARCHAR) || "
-    f"'{_q(_RB_P4)}' || domain || '{_q(_RB_P5)}'"
+    f"'{sql_quote(_RB_P1)}' || domain || '{sql_quote(_RB_P2)}' || "
+    f"CASE WHEN domain LIKE '%.com' THEN '{sql_quote(_RB_COM)}' "
+    f"     WHEN domain = 'src7.org' THEN '{sql_quote(_RB_SRC7)}' ELSE '' END || "
+    f"'{sql_quote(_RB_P3)}' || CAST(1 + length(domain) % 3 AS VARCHAR) || "
+    f"'{sql_quote(_RB_P4)}' || domain || '{sql_quote(_RB_P5)}'"
 )
 
 _RULE_LINE = "^(Allow|Disallow): *([^ ].*?) *$"

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from cc_mapreducer_spark.operators.relational import DEC, _dec
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table
 
@@ -37,13 +38,6 @@ from cc_mapreducer_spark.operators.tpch_more import (  # noqa: E402
     q7_nation_volume,
     q10_returned_items,
 )
-
-DEC = "decimal(12,2)"
-
-
-def _dec(c: str) -> F.Column:
-    return F.col(c).cast(DEC)
-
 
 _REVENUE = "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))"
 

@@ -7,15 +7,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.operators.relational import DEC, _dec
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table
-
-DEC = "decimal(12,2)"
-
-
-def _dec(c: str) -> F.Column:
-    return F.col(c).cast(DEC)
-
 
 _Q6_SQL = """
 SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS revenue,

@@ -41,7 +41,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cc_mapreducer_spark.memo import value
-from cc_mapreducer_spark.operators.bpe import word_freq_table
+from cc_mapreducer_spark.operators.bpe import (
+    _ADJACENT_PAIRS,
+    _merge_expr,
+    word_freq_table,
+)
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
 
@@ -65,14 +69,6 @@ def _initial_symbols(freq: DataFrame) -> DataFrame:
     )
 
 
-_MERGE_FOLD = (
-    "aggregate(syms, cast(array() as array<string>), (out, x) -> "
-    "IF(size(out) > 0 AND element_at(out, -1) = '{a}' AND x = '{b}', "
-    "   concat(slice(out, 1, size(out) - 1), array('{ab}')), "
-    "   concat(out, array(x))))"
-)
-
-
 def _merged_symbol(a: str, b: str) -> str:
     """Fusing a pair drops the right side's continuation prefix; the
     left side's prefix (or absence) is the fused symbol's position."""
@@ -80,10 +76,7 @@ def _merged_symbol(a: str, b: str) -> str:
 
 
 def _apply_merge(syms_df: DataFrame, a: str, b: str) -> DataFrame:
-    def q(s: str) -> str:
-        return s.replace("\\", "\\\\").replace("'", "\\'")
-
-    expr = _MERGE_FOLD.format(a=q(a), b=q(b), ab=q(_merged_symbol(a, b)))
+    expr = _merge_expr(a, b, _merged_symbol(a, b))
     return syms_df.select("word", "cnt", F.expr(expr).alias("syms"))
 
 
@@ -108,15 +101,7 @@ def train_wordpiece(
         exploded = syms.select(
             "cnt",
             "syms",
-            F.explode(
-                F.expr(
-                    "IF(size(syms) < 2, "
-                    "cast(array() as array<struct<a: string, b: string>>), "
-                    "transform(sequence(1, size(syms) - 1), "
-                    "i -> struct(element_at(syms, i) as a, "
-                    "element_at(syms, i + 1) as b)))"
-                )
-            ).alias("p"),
+            F.explode(F.expr(_ADJACENT_PAIRS)).alias("p"),
         )
         pairs = exploded.groupBy("p.a", "p.b").agg(F.sum("cnt").alias("n_ab"))
         sym_counts = (

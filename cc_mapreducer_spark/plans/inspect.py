@@ -39,7 +39,8 @@ def execution_metrics(df: DataFrame) -> dict:
     This is measured evidence, not plan-shape inference — the number
     that proves 'the dims broadcast and only 5 aggregated rows crossed
     the wire', and the one that explodes first when a plan regresses at
-    scale. Used by bench.py's shuffle lane and the shuffle-budget tests.
+    scale. Used by bench.py's shuffle and skew lanes and by
+    tests/test_plans.py::test_shuffle_byte_budgets_measured.
 
     Execution runs executor-side through the QueryExecution's own RDD
     (count of InternalRows) — NOT collect(): the bench's no-driver-

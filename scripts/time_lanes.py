@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
-"""Time individual lanes with the bench's exact policy (plan once,
-best-of-N noop reps, clearCache between lanes), without the full bench.
+"""Time individual lanes with the bench's exact policy (bench.time_lane:
+plan once, best-of-N noop reps, clearCache between lanes), without the
+full bench.
 
 Usage: python scripts/time_lanes.py <query> [query ...]
-Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_REPEAT.
 Prints one JSON line: {"queries": {name: best}, "reps": {...},
 "build": {...}}.
 """
@@ -13,7 +13,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -21,34 +20,19 @@ sys.path.insert(0, str(REPO))
 
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
 
+from bench import time_lane, warm_up  # noqa: E402
 from cc_mapreducer_spark import registry  # noqa: E402
 from cc_mapreducer_spark.session import get_spark  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def main() -> None:
-    names = sys.argv[1:]
-    repeat = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "4"))
     spark = get_spark("cc-mapreducer-spark-lane-ab")
     queries = registry.all_queries()
-    # same warmup the bench does
-    queries["q1_pricing_summary"](spark, SF_DIR).write.mode(
-        "overwrite"
-    ).format("noop").save()
+    warm_up(spark, queries)
     out: dict = {"queries": {}, "reps": {}, "build": {}}
-    for name in names:
-        tb0 = time.perf_counter()
-        df = queries[name](spark, SF_DIR)
-        out["build"][name] = round(time.perf_counter() - tb0, 3)
-        reps = []
-        for _ in range(repeat):
-            t0 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            reps.append(round(time.perf_counter() - t0, 3))
-        out["queries"][name] = min(reps)
-        out["reps"][name] = reps
-        spark.catalog.clearCache()
+    for name in sys.argv[1:]:
+        out["build"][name], out["reps"][name] = time_lane(spark, queries, name)
+        out["queries"][name] = min(out["reps"][name])
     print(json.dumps(out))
     spark.stop()
 

@@ -177,23 +177,15 @@ def test_faithful_vs_sane_tokenizer_divergence(spark):
     reference's bug does; on the driver's corpus they agree."""
     from pyspark.sql import functions as F
 
+    from cc_mapreducer_spark.functions.text import faithful_tokens, tokens
+
     docs = spark.createDataFrame([(1, "don't stop, can't won't")], ["doc_id", "text"])
-    sane = (
-        docs.select(
-            F.explode(F.split(F.regexp_replace(F.lower("text"), "[^a-z]+", " "), " ")).alias("w")
-        )
-        .filter(F.length("w") > 1)
+    sane = docs.select(F.explode(tokens(F.col("text"))).alias("w")).filter(
+        F.length("w") > 1
     )
-    stripped = F.expr(
-        "concat(substring_index(lower(text), \"'\", 1),"
-        " substring(lower(text), length(substring_index(lower(text), \"'\", 1)) + 2))"
-    )
-    faithful = (
-        docs.select(
-            F.explode(F.split(F.regexp_replace(stripped, "[^a-z]+", " "), " ")).alias("w")
-        )
-        .filter(F.length("w") > 1)
-    )
+    faithful = docs.select(
+        F.explode(faithful_tokens(F.col("text"))).alias("w")
+    ).filter(F.length("w") > 1)
     assert sorted(r.w for r in sane.collect()) == ["can", "don", "stop", "won"]
     assert sorted(r.w for r in faithful.collect()) == ["can", "dont", "stop", "won"]
 
