@@ -108,24 +108,10 @@ _HTML_P4 = '&lt;/em&gt; &quot;quoted&quot; it&#39;s&nbsp;here</h1><P class="x">'
 _HTML_P5 = "</P><br/></body></html>"
 
 
-def _html_fixture_col() -> Column:
-    return F.concat(
-        F.lit(_HTML_P1),
-        F.col("source"),
-        F.lit(_HTML_P2),
-        F.col("doc_id").cast("string"),
-        F.lit(_HTML_P3),
-        F.col("doc_id").cast("string"),
-        F.lit(_HTML_P4),
-        F.col("text"),
-        F.lit(_HTML_P5),
-    )
-
-
 _HTML_FIXTURE_SQL = (
     f"'{sql_quote(_HTML_P1)}' || source || '{sql_quote(_HTML_P2)}' || "
-    f"CAST(doc_id AS VARCHAR) || '{sql_quote(_HTML_P3)}' || "
-    f"CAST(doc_id AS VARCHAR) || '{sql_quote(_HTML_P4)}' || text || '{sql_quote(_HTML_P5)}'"
+    f"CAST(doc_id AS STRING) || '{sql_quote(_HTML_P3)}' || "
+    f"CAST(doc_id AS STRING) || '{sql_quote(_HTML_P4)}' || text || '{sql_quote(_HTML_P5)}'"
 )
 
 _HTML_STRIP_SQL = f"""
@@ -151,7 +137,7 @@ def html_strip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the transform, not just lengths). Driver-hashed via the
     ``mining_suite`` html legs. One scan, zero shuffle."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    raw = docs.select("doc_id", _html_fixture_col().alias("html"))
+    raw = docs.select("doc_id", F.expr(_HTML_FIXTURE_SQL).alias("html"))
     stripped = strip_html(raw, "html")
     return stripped.select(
         "doc_id",
@@ -262,34 +248,8 @@ def _canonicalize_sql(url: str) -> dict[str, str]:
 # Fixture: deterministic messy URLs derived per document — uppercase
 # scheme/host, userinfo on every 5th, default vs explicit ports, double
 # slashes, trailing slashes, utm_ params mixed into unsorted queries,
-# fragments. Built byte-identically in both engines.
-def _url_fixture_col() -> Column:
-    scheme = F.when(F.col("doc_id") % 2 == 0, "HTTP://").otherwise("https://")
-    user = F.when(F.col("doc_id") % 5 == 0, "crawler:pw@").otherwise("")
-    port = (
-        F.when(F.col("doc_id") % 4 == 0, ":80")
-        .when(F.col("doc_id") % 4 == 1, ":8080")
-        .otherwise("")
-    )
-    tld = F.when(F.col("doc_id") % 2 == 0, ".COM").otherwise(".org")
-    tail = (
-        F.when(F.col("doc_id") % 3 == 0, "/?utm_source=feed&b=2&a=1#sec")
-        .when(F.col("doc_id") % 3 == 1, "?z=9&y=8&utm_campaign=x")
-        .otherwise("/")
-    )
-    return F.concat(
-        scheme,
-        user,
-        F.lit("WWW."),
-        F.col("source"),
-        tld,
-        port,
-        F.lit("/Docs//page-"),
-        F.col("doc_id").cast("string"),
-        tail,
-    )
-
-
+# fragments. One SQL text for both engines: Spark reads it through
+# F.expr, DuckDB in the oracles.
 _URL_FIXTURE_SQL = """
 CASE WHEN doc_id % 2 = 0 THEN 'HTTP://' ELSE 'https://' END ||
 CASE WHEN doc_id % 5 = 0 THEN 'crawler:pw@' ELSE '' END ||
@@ -297,7 +257,7 @@ CASE WHEN doc_id % 5 = 0 THEN 'crawler:pw@' ELSE '' END ||
 CASE WHEN doc_id % 2 = 0 THEN '.COM' ELSE '.org' END ||
 CASE WHEN doc_id % 4 = 0 THEN ':80'
      WHEN doc_id % 4 = 1 THEN ':8080' ELSE '' END ||
-'/Docs//page-' || CAST(doc_id AS VARCHAR) ||
+'/Docs//page-' || CAST(doc_id AS STRING) ||
 CASE WHEN doc_id % 3 = 0 THEN '/?utm_source=feed&b=2&a=1#sec'
      WHEN doc_id % 3 = 1 THEN '?z=9&y=8&utm_campaign=x' ELSE '/' END
 """
@@ -324,7 +284,7 @@ def url_canonical_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragment drop. Driver-hashed via the ``mining_suite`` url legs.
     One scan, zero shuffle."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    raw = docs.select("doc_id", _url_fixture_col().alias("url"))
+    raw = docs.select("doc_id", F.expr(_URL_FIXTURE_SQL).alias("url"))
     return canonicalize_url(raw, "url").select(
         "doc_id", "canonical_url", "host", "n_params"
     )
@@ -366,7 +326,7 @@ def domain_acquisition_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the domain sibling of ``dedup_rate_by_source``). ONE groupBy on
     domain (key space = #domains); everything else stays in the scan."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    raw = docs.select("doc_id", "text", _url_fixture_col().alias("url"))
+    raw = docs.select("doc_id", "text", F.expr(_URL_FIXTURE_SQL).alias("url"))
     canon = canonicalize_url(raw, "url").select(
         F.regexp_extract("host", r"[^.]+\.[^.]+$", 0).alias("domain"),
         F.md5("text").alias("sha"),
@@ -444,8 +404,8 @@ def _chain_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"))
     raw = docs.select(
         "doc_id",
-        _html_fixture_col().alias("html"),
-        _url_fixture_col().alias("url"),
+        F.expr(_HTML_FIXTURE_SQL).alias("html"),
+        F.expr(_URL_FIXTURE_SQL).alias("url"),
     )
     cleaned = canonicalize_url(strip_html(raw, "html"), "url")
     ws = F.filter(
@@ -525,13 +485,14 @@ def classify_urls(
 # Fixture: the canonical URL stream with planted path offenders — every
 # 9th doc's page sits under /cart/. The blocklist is two of the twenty
 # source domains.
+_POLICY_URL_FIXTURE_SQL = f"""
+CASE WHEN doc_id % 9 = 0 THEN regexp_replace({_URL_FIXTURE_SQL}, '/Docs//', '/cart/')
+     ELSE {_URL_FIXTURE_SQL} END
+"""
+
 _POLICY_URL_SQL = f"""
 WITH raw AS (
-    SELECT doc_id,
-           CASE WHEN doc_id % 9 = 0
-                THEN regexp_replace({_URL_FIXTURE_SQL}, '/Docs//', '/cart/')
-                ELSE {_URL_FIXTURE_SQL} END AS url
-    FROM documents
+    SELECT doc_id, {_POLICY_URL_FIXTURE_SQL} AS url FROM documents
 )
 SELECT doc_id, {_URL_PARTS['canonical']} AS canonical_url,
        {_URL_PARTS['host']} AS host
@@ -699,12 +660,8 @@ def robots_policy_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     plants deliberately); src7.org is fully disallowed. Labeled, never
     dropped; broadcast rules, zero-shuffle lambdas, DuckDB mirror."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    url = F.when(
-        F.col("doc_id") % 9 == 0,
-        F.regexp_replace(_url_fixture_col(), "/Docs//", "/cart/"),
-    ).otherwise(_url_fixture_col())
     canon = canonicalize_url(
-        docs.select("doc_id", url.alias("url")), "url"
+        docs.selectExpr("doc_id", f"{_POLICY_URL_FIXTURE_SQL} AS url"), "url"
     ).select(
         "doc_id",
         "canonical_url",
@@ -737,12 +694,8 @@ def acquisition_policy_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     9th doc and two blocked fixture domains. Zero shuffle beyond the
     broadcast; the verdict column keeps the gate auditable."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    url = F.when(
-        F.col("doc_id") % 9 == 0,
-        F.regexp_replace(_url_fixture_col(), "/Docs//", "/cart/"),
-    ).otherwise(_url_fixture_col())
     canon = canonicalize_url(
-        docs.select("doc_id", url.alias("url")), "url"
+        docs.selectExpr("doc_id", f"{_POLICY_URL_FIXTURE_SQL} AS url"), "url"
     ).select("doc_id", "canonical_url", "host")
     blocked = _literal_table(spark, [(d,) for d in _BLOCKED_DOMAINS], ("domain",))
     return classify_urls(canon, blocked).select(
@@ -986,12 +939,8 @@ def robots_wildcard_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     with allow-wins ties, every verdict labeled. The DuckDB oracle
     mirrors the rule set with the same precomputed regexes."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    url = F.when(
-        F.col("doc_id") % 9 == 0,
-        F.regexp_replace(_url_fixture_col(), "/Docs//", "/cart/"),
-    ).otherwise(_url_fixture_col())
     canon = canonicalize_url(
-        docs.select("doc_id", url.alias("url")), "url"
+        docs.selectExpr("doc_id", f"{_POLICY_URL_FIXTURE_SQL} AS url"), "url"
     ).select(
         "doc_id",
         "canonical_url",

@@ -179,41 +179,6 @@ FROM words GROUP BY word
 """
 )
 
-# Faithful mode: the reference's apostrophe regex /'/  lacks the g flag
-# (src/index.js:50), so only the FIRST apostrophe per document is removed
-# (joining its neighbors); the rest become word breaks. DuckDB's
-# regexp_replace without the 'g' flag has the same first-match-only
-# semantics, and Spark exposes it via regexp_replace's position overload.
-_TOKENIZE_FAITHFUL_SQL = f"""
-WITH stripped AS (
-    SELECT regexp_replace(lower(text), '''', '') AS t1 FROM documents
-), toks AS (
-    SELECT unnest(string_split(regexp_replace(t1, '[^a-z]+', ' ', 'g'), ' ')) AS word
-    FROM stripped
-), words AS (
-    SELECT word FROM toks
-    WHERE length(word) > 1 AND word NOT IN {stop_words_sql_list()}
-)
-SELECT word, CAST(count(*) AS BIGINT) AS cnt
-FROM words GROUP BY word
-"""
-
-
-def q_tokenize_wordcount_faithful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-faithful reader mode reproducing the reference's
-    first-apostrophe-only quirk (SURVEY §2.2): in a document containing
-    "don't ... can't", the first apostrophe is deleted (-> "dont") and all
-    later ones break words (-> "can", "t"). The sane-mode default
-    (tokenize_wordcount) treats every apostrophe as a break; both modes
-    agree on the driver's apostrophe-free corpus and diverge exactly as
-    the reference does on real text (unit-tested)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    words = docs.select(
-        F.explode(faithful_tokens(F.col("text"))).alias("word")
-    ).filter(F.length("word") > 1)
-    words = op_filter_stopwords(words)
-    return words.groupBy("word").agg(F.count("*").alias("cnt"))
-
 
 def q_tokenize_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reader stage in isolation (source_read + §2.2 projections/filters),
@@ -241,8 +206,11 @@ def q_word_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 # registration-order keys), so the three per-word surfaces above —
 # sane-mode word counts, faithful-mode word counts (first-apostrophe
 # quirk, src/index.js:50), and word->signature (§2.3) — merge into ONE
-# per-word profile. Each component stays an importable function with its
-# own unit tests; the merged key is what the driver hashes.
+# per-word profile. The sane and signature components stay importable
+# functions, the faithful one is ``faithful_tokens``; each has its own
+# unit tests, and the merged key is what the driver hashes. DuckDB's
+# regexp_replace without the 'g' flag replaces the first match only,
+# which is the reference's first-apostrophe quirk.
 _WORD_PROFILE_SQL = f"""
 WITH sane AS (
     {_TOKENIZE_SQL}

@@ -47,9 +47,7 @@ from cc_mapreducer_spark.operators.acquisition import (
     _ADMISSION_SQL,
     _HTML_FIXTURE_SQL,
     _URL_FIXTURE_SQL,
-    _html_fixture_col,
     _strip_html_sql,
-    _url_fixture_col,
     crawl_admission_report,
     strip_html,
 )
@@ -71,6 +69,8 @@ _BOILER_HTML = (
     + _BOILER_TEXT
     + "</p></body></html>"
 )
+# the planted content-duplicate pages swapped into the html fixture
+_E2E_HTML_SQL = f"CASE WHEN doc_id % 12 = 5 THEN '{_BOILER_HTML}' ELSE {_HTML_FIXTURE_SQL} END"
 MIN_DISTINCT_TOKENS = 20
 
 
@@ -78,13 +78,7 @@ def _e2e_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents with the planted content-duplicate pages swapped in
     (local to this query — the per-family fixtures are untouched)."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    return docs.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 12 == 5, F.lit(_BOILER_HTML))
-        .otherwise(_html_fixture_col())
-        .alias("html"),
-        _url_fixture_col().alias("url"),
-    )
+    return docs.selectExpr("doc_id", f"{_E2E_HTML_SQL} AS html", f"{_URL_FIXTURE_SQL} AS url")
 
 
 # the funnel CTE chain, shared by the report (_E2E_SQL) and the reader
@@ -94,10 +88,7 @@ _E2E_CTE = f"""
 WITH adm AS (
     SELECT doc_id, canonical_url, admitted FROM ({_ADMISSION_SQL})
 ), pages AS (
-    SELECT doc_id,
-           CASE WHEN doc_id % 12 = 5 THEN '{_BOILER_HTML}'
-                ELSE {_HTML_FIXTURE_SQL} END AS html,
-           {_URL_FIXTURE_SQL} AS url
+    SELECT doc_id, {_E2E_HTML_SQL} AS html, {_URL_FIXTURE_SQL} AS url
     FROM documents
 ), fetched AS (
     SELECT a.doc_id, a.canonical_url, p.html

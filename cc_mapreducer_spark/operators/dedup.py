@@ -475,6 +475,18 @@ WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 6
 _BLOCK_PAIRS = [(i, j) for i in range(8) for j in range(i + 1, 8)]
 
 
+def block_pair_probe(blocks: list[str]) -> str:
+    """SQL text exploding a row into its 28 probe structs ``(pair_id, key)``,
+    one per block pair, the 16-bit key being ``blocks[i] * 256 + blocks[j]``;
+    ``blocks`` are the eight 8-bit block expressions. One expression string
+    costs one parse, where the same probe built from Column objects costs
+    a few Py4J round trips per block per pair on every query build."""
+    return "explode(array(" + ", ".join(
+        f"named_struct('pair_id', {p}, 'key', CAST(({blocks[i]}) * 256 + ({blocks[j]}) AS INT))"
+        for p, (i, j) in enumerate(_BLOCK_PAIRS)
+    ) + "))"
+
+
 @register("simhash_near_pairs", oracle=_SIMHASH_PAIRS_SQL, driver=False)  # hashed via simhash_suite
 def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All document pairs within Hamming distance 6 on the 64-bit SimHash,
@@ -500,30 +512,18 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints (n_docs x 17 bytes, ~1/1000th of the corpus) to parquet
     once, run the pair search on that table."""
     sh = persisted(_simhash_words(spark, sf_dir))
-    blocks = [
-        (F.shiftright(F.col("hi" if i < 4 else "lo"), 24 - 8 * (i % 4)).bitwiseAND(F.lit(255)))
-        for i in range(8)
-    ]
-    probes = F.array(
-        *[
-            F.struct(
-                F.lit(pid).alias("pid"),
-                (blocks[i] * 256 + blocks[j]).cast("int").alias("k"),
-            )
-            for pid, (i, j) in enumerate(_BLOCK_PAIRS)
-        ]
-    )
-    probed = sh.select("doc_id", "hi", "lo", F.explode(probes).alias("p")).select(
-        "doc_id", "hi", "lo", F.col("p.pid").alias("pid"), F.col("p.k").alias("k")
+    blocks = [f"shiftright({'hi' if i < 4 else 'lo'}, {24 - 8 * (i % 4)}) & 255" for i in range(8)]
+    probed = sh.selectExpr("doc_id", "hi", "lo", f"{block_pair_probe(blocks)} AS p").select(
+        "doc_id", "hi", "lo", "p.pair_id", "p.key"
     )
     a = probed.select(
-        F.col("doc_id").alias("doc_a"), F.col("hi").alias("hi_a"), F.col("lo").alias("lo_a"), "pid", "k"
+        F.col("doc_id").alias("doc_a"), F.col("hi").alias("hi_a"), F.col("lo").alias("lo_a"), "pair_id", "key"
     )
     b = probed.select(
-        F.col("doc_id").alias("doc_b"), F.col("hi").alias("hi_b"), F.col("lo").alias("lo_b"), "pid", "k"
+        F.col("doc_id").alias("doc_b"), F.col("hi").alias("hi_b"), F.col("lo").alias("lo_b"), "pair_id", "key"
     )
     cand = (
-        a.join(b, ["pid", "k"])
+        a.join(b, ["pair_id", "key"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b", "hi_a", "lo_a", "hi_b", "lo_b")
         .distinct()

@@ -73,11 +73,11 @@ from cc_mapreducer_spark.functions.media_codec import (
     decode_png_pixels,
 )
 from cc_mapreducer_spark.memo import persisted
+from cc_mapreducer_spark.operators.dedup import block_pair_probe
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
 
 HAMMING_MAX = 6  # same advertised radius as the SimHash text path
-_BLOCK_PAIRS = [(i, j) for i in range(8) for j in range(i + 1, 8)]
 
 
 # --------------------------------------------------------------------------
@@ -365,32 +365,17 @@ def image_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All image pairs within Hamming distance {HAMMING_MAX} on the
     dHash — perceptual near-duplicates that payload-sha dedup misses
     (re-compressions match at distance 0, single-pixel edits at <= ~4).
-    Found by the SimHash block-pair probe (operators/dedup.py:457): 8
+    Found by the SimHash block-pair probe (dedup.block_pair_probe): 8
     8-bit blocks, 28 16-bit pair keys, hash self-join, Hamming verify.
     Pigeonhole-complete for the radius; pytest proves set-equality with
     a brute-force all-pairs replica. Scale shape identical to
     simhash_near_pairs: 28x explode of tiny fingerprint rows, one hash
     self-join on near-uniform keys, never the n^2 space."""
-    fp = image_dhash_fingerprint(spark, sf_dir).select("img_id", "dhash")
-    blocks = [
-        F.shiftrightunsigned(F.col("dhash"), 8 * i).bitwiseAND(F.lit(255))
-        for i in range(8)
-    ]
-    probes = fp.select(
-        "img_id",
-        "dhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(p).alias("pair_id"),
-                        (blocks[i] * 256 + blocks[j]).alias("key"),
-                    )
-                    for p, (i, j) in enumerate(_BLOCK_PAIRS)
-                ]
-            )
-        ).alias("pr"),
-    ).select("img_id", "dhash", "pr.pair_id", "pr.key")
+    fp = image_dhash_fingerprint(spark, sf_dir)
+    blocks = [f"shiftrightunsigned(dhash, {8 * i}) & 255" for i in range(8)]
+    probes = fp.selectExpr("img_id", "dhash", f"{block_pair_probe(blocks)} AS pr").select(
+        "img_id", "dhash", "pr.pair_id", "pr.key"
+    )
     a, b = probes.alias("a"), probes.alias("b")
     cand = (
         a.join(

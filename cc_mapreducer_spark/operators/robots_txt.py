@@ -28,9 +28,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from cc_mapreducer_spark.functions.text import sql_quote
 from cc_mapreducer_spark.operators.acquisition import (
+    _POLICY_URL_FIXTURE_SQL,
     _ROBOTS_FILTER_SQL,
-    _URL_FIXTURE_SQL,
-    _url_fixture_col,
     canonicalize_url,
     robots_allowed,
 )
@@ -206,12 +205,8 @@ def robots_txt_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"))
     # the structured gate's URL stream verbatim, planted /cart/
     # offenders included (robots_policy_filter, acquisition.py)
-    url = F.when(
-        F.col("doc_id") % 9 == 0,
-        F.regexp_replace(_url_fixture_col(), "/Docs//", "/cart/"),
-    ).otherwise(_url_fixture_col())
     canon = canonicalize_url(
-        docs.select("doc_id", url.alias("url")), "url"
+        docs.selectExpr("doc_id", f"{_POLICY_URL_FIXTURE_SQL} AS url"), "url"
     ).select(
         "doc_id",
         "canonical_url",

@@ -40,7 +40,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from cc_mapreducer_spark.operators.acquisition import (
     _URL_FIXTURE_SQL,
     _URL_PARTS,
-    _url_fixture_col,
     canonicalize_url,
 )
 from cc_mapreducer_spark.registry import register
@@ -233,7 +232,7 @@ _META_SQL = {
 
 def _fixture_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents")).select(
-        "doc_id", _url_fixture_col().alias("url")
+        "doc_id", F.expr(_URL_FIXTURE_SQL).alias("url")
     )
     canon = canonicalize_url(docs, "url").select(
         "doc_id", F.col("canonical_url").alias("loc"), "host"
@@ -354,7 +353,7 @@ def sitemap_recrawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     urls = _meta_cols(
         canonicalize_url(
             spread(load_table(spark, sf_dir, "documents")).select(
-                "doc_id", _url_fixture_col().alias("url")
+                "doc_id", F.expr(_URL_FIXTURE_SQL).alias("url")
             ),
             "url",
         ).select("doc_id", F.col("canonical_url").alias("loc"), "host")

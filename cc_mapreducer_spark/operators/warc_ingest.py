@@ -80,8 +80,6 @@ from cc_mapreducer_spark.operators.acquisition import (
     _CHAIN_DOC_SQL,
     _HTML_FIXTURE_SQL,
     _URL_FIXTURE_SQL,
-    _html_fixture_col,
-    _url_fixture_col,
     canonicalize_url,
     strip_html,
 )
@@ -187,8 +185,8 @@ def warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     per RESPONSE record with the payload and its geometry."""
     docs = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id",
-        _html_fixture_col().alias("html"),
-        _url_fixture_col().alias("url"),
+        F.expr(_HTML_FIXTURE_SQL).alias("html"),
+        F.expr(_URL_FIXTURE_SQL).alias("url"),
     )
     return docs.mapInPandas(_roundtrip_records, RECORD_SCHEMA)
 
@@ -320,8 +318,8 @@ def warc_record_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
     header claims."""
     docs = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id",
-        _html_fixture_col().alias("html"),
-        _url_fixture_col().alias("url"),
+        F.expr(_HTML_FIXTURE_SQL).alias("html"),
+        F.expr(_URL_FIXTURE_SQL).alias("url"),
     )
     return docs.mapInPandas(_digest_rows, _DIGEST_SCHEMA)
 
@@ -483,8 +481,8 @@ def wet_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     in closed form by the oracle from the html fixture alone."""
     docs = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id",
-        _html_fixture_col().alias("html"),
-        _url_fixture_col().alias("url"),
+        F.expr(_HTML_FIXTURE_SQL).alias("html"),
+        F.expr(_URL_FIXTURE_SQL).alias("url"),
     )
     cleaned = strip_html(docs, "html").select("url", "clean_text")
     return cleaned.mapInPandas(_wet_roundtrip, _WET_SCHEMA)
@@ -679,7 +677,7 @@ def warc_segment_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the cross-container residual strategy at scale."""
     docs = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id",
-        _html_fixture_col().alias("html"),
-        _url_fixture_col().alias("url"),
+        F.expr(_HTML_FIXTURE_SQL).alias("html"),
+        F.expr(_URL_FIXTURE_SQL).alias("url"),
     )
     return docs.mapInPandas(_reassemble_rows, _REASSEMBLED_SCHEMA)

@@ -38,18 +38,18 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The file source requires a DIRECTORY; the driver ships a single
     parquet file, so stage a temp dir with a symlink to it (removed at
-    interpreter exit). The staging dir and the schema are built once per
-    session and events file (memo.value), so repeated query runs neither
-    leak temp dirs (ADVICE r1) nor re-read the parquet footer per stream
-    (ADVICE r2 — streaming_view_purchase_join builds two streams per
-    run). Per session, because an INT64-nanos file is only readable
-    through the nanosAsLong conf _read_events sets on THAT session."""
+    interpreter exit). The staging dir is built once per session and
+    events file (memo.value), so repeated query runs do not leak temp
+    dirs (ADVICE r1); the schema is the batch path's memoized one
+    (tables._events_schema), so they do not re-read the parquet footer
+    per stream either (ADVICE r2 — streaming_view_purchase_join builds
+    two streams per run)."""
     import atexit
     import os
     import shutil
     import tempfile
 
-    from cc_mapreducer_spark.tables import _normalize_event_ts, _read_events
+    from cc_mapreducer_spark.tables import _events_schema, _normalize_event_ts
 
     path = os.path.abspath(f"{sf_dir}/events.parquet")
 
@@ -57,10 +57,10 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage_dir = tempfile.mkdtemp(prefix="cc_mr_spark_stream_")
         os.symlink(path, os.path.join(stage_dir, "events.parquet"))
         atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-        return _read_events(spark, sf_dir).schema, stage_dir
+        return stage_dir
 
-    schema, stage_dir = value(spark, "events_stream", (path,), [path], stage)
-    stream = spark.readStream.schema(schema).parquet(stage_dir)
+    stage_dir = value(spark, "events_stream", (path,), [path], stage)
+    stream = spark.readStream.schema(_events_schema(spark, path)).parquet(stage_dir)
     return _normalize_event_ts(stream)
 
 

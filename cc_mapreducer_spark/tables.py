@@ -3,13 +3,23 @@
 All queries read through these so scans share one code path: parquet with
 explicit column pruning left to Catalyst (ReadSchema) and predicate
 pushdown (PushedFilters) — verified in tests/test_plans.py.
+
+A table's schema is memoized per session (``memo.value``) and handed to
+the reader, so only the first ``load_table`` of a file runs Spark's
+schema-inference job (a footer read), not every build of every query
+that scans it. The memo drops the schema when a
+local file is rewritten, even in place (memo.py's staleness rule), and
+the key carries the nanosAsLong conf, which changes what inference
+returns for INT64-nanos columns.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from cc_mapreducer_spark.memo import value
 
@@ -51,18 +61,30 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        return _normalize_event_ts(_read_events(spark, sf_dir))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        schema = _events_schema(spark, path)
+        return _normalize_event_ts(spark.read.schema(schema).parquet(path))
+    return spark.read.schema(_schema(spark, path)).parquet(path)
 
 
-def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Read events.parquet tolerating either physical type the driver has
-    shipped for ts: INT64 TIMESTAMP(NANOS) (round 1), which Spark's reader
-    rejects by default ([PARQUET_TYPE_ILLEGAL]), or a plain
+def _schema(spark: SparkSession, path: str) -> StructType:
+    nanos = spark.conf.get(_NANOS_AS_LONG, None)
+    return value(
+        spark, "schema", (path, nanos), (path,), lambda: spark.read.parquet(path).schema
+    )
+
+
+def _events_schema(spark: SparkSession, path: str) -> StructType:
+    """Schema of events.parquet tolerating either physical type the driver
+    has shipped for ts: INT64 TIMESTAMP(NANOS) (round 1), which Spark's
+    reader rejects by default ([PARQUET_TYPE_ILLEGAL]), or a plain
     TIMESTAMP(MICROS) (round 2+), which reads as TIMESTAMP_NTZ.
 
     nanosAsLong is applied ONLY when the plain read actually fails on the
@@ -72,17 +94,16 @@ def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface as bigint. It cannot be save/restored around the read — Spark
     re-resolves the conf when an ACTION on the returned DataFrame plans,
     so the conf must outlive this call; sessions that never touch a
-    nanos file (round 2+ data) now never set it."""
-    path = f"{sf_dir}/events.parquet"
+    nanos file (round 2+ data) now never set it. A failed inference is
+    not memoized, so a session that unsets the conf again re-runs the
+    fallback instead of reading with a schema the conf no longer allows."""
     try:
-        df = spark.read.parquet(path)
-        df.schema  # schema resolution is where the nanos type is rejected
-        return df
-    except Exception as ex:
+        return _schema(spark, path)
+    except AnalysisException as ex:
         if "PARQUET_TYPE_ILLEGAL" not in str(ex):
             raise
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(path)
+    spark.conf.set(_NANOS_AS_LONG, "true")
+    return _schema(spark, path)
 
 
 def _normalize_event_ts(df: DataFrame) -> DataFrame:

@@ -9,15 +9,20 @@
   thrashing a single one;
 - the store is bounded, and evicting a frame unpersists it;
 - a second call of a query that reaches the store adds no cached data
-  and returns the same rows.
+  and returns the same rows;
+- a table's schema is inferred once per file: a second load of a table,
+  or a second build of a benchmark catalog query, starts no Spark job,
+  and a table rewritten in place is read with its new schema.
 """
 
 from __future__ import annotations
 
 import math
 import shutil
+import uuid
 from collections import Counter
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -26,6 +31,7 @@ from cc_mapreducer_spark import memo, registry
 from cc_mapreducer_spark.operators.dedup import simhash_near_pairs
 from cc_mapreducer_spark.operators.quality_lm import LAM, lm_doc_scores
 from cc_mapreducer_spark.operators.search import tfidf_doc_keywords
+from cc_mapreducer_spark.tables import TABLE_NAMES, load_table
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -230,3 +236,55 @@ def test_second_call_reuses_the_store(spark, name):
     second = sorted(str(tuple(r)) for r in q(spark, SF_SMOKE).collect())
     assert _persistent_rdds(spark) == n_rdds, "second call persisted again"
     assert second == first
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs ``fn()`` starts, counted in a job group of its own
+    (the status store's job list is capped by spark.ui.retainedJobs)."""
+    sc = spark.sparkContext
+    group = f"memo-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "memo test")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# The queries of the benchmark's catalog workload (perfbench/workloads.py).
+_CATALOG_QUERIES = (
+    "q3_shipping_priority",
+    "window_rank_topn",
+    "event_sessionize",
+    "warc_segment_reassembly",
+    "image_near_dup_pairs",
+)
+
+
+def test_second_build_starts_no_job(spark):
+    """Schema inference reads parquet footers in a Spark job; it runs
+    once per file, not once per load_table or query build."""
+    def load_all():
+        for name in TABLE_NAMES:
+            load_table(spark, SF_SMOKE, name)
+
+    assert _jobs_started(spark, load_all) > 0  # the counter sees inference
+    assert _jobs_started(spark, load_all) == 0
+    queries = registry.all_queries()
+    for name in _CATALOG_QUERIES:
+        queries[name](spark, SF_SMOKE)
+    for name in _CATALOG_QUERIES:
+        assert _jobs_started(spark, lambda: queries[name](spark, SF_SMOKE)) == 0, name
+
+
+def test_rewritten_table_shows_its_new_schema(spark, tmp_path):
+    """A table rewritten in place under its old name with one more
+    column must not be read with the memoized old schema."""
+    table = pq.read_table(f"{SF_SMOKE}/region.parquet")
+    path = tmp_path / "region.parquet"
+    pq.write_table(table, path)
+    assert "extra" not in load_table(spark, str(tmp_path), "region").columns
+    pq.write_table(table.append_column("extra", pa.array(range(table.num_rows))), path)
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == table.column_names + ["extra"]
+    assert sorted(r.extra for r in df.collect()) == list(range(table.num_rows))

@@ -133,3 +133,29 @@ def test_events_nanos_fallback_scopes_conf(spark, tmp_path):
         # the fallback legitimately leaves the conf set; don't let that
         # state leak into unrelated tests
         spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+
+
+def test_events_nanos_fallback_reruns_after_unset(spark, tmp_path):
+    """The schema memo must not outlive the conf it was inferred under:
+    once nanosAsLong is unset again, the next read of a nanos file runs
+    the fallback again (the conf is set again) instead of serving the
+    memoized bigint schema to a reader that rejects the nanos type."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cc_mapreducer_spark.tables import load_table
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    ts = pa.array([1_700_000_000_000_000_000 + i for i in range(3)], pa.timestamp("ns"))
+    t = pa.table({"event_id": pa.array(range(3), pa.int64()), "ts": ts})
+    pq.write_table(t, str(tmp_path / "events.parquet"), store_schema=False)
+    try:
+        load_table(spark, str(tmp_path), "events")
+        assert spark.conf.get(conf) == "true"
+        spark.conf.unset(conf)
+        df = load_table(spark, str(tmp_path), "events")
+        assert spark.conf.get(conf, None) == "true", "memoized schema served without the fallback"
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        assert df.count() == 3
+    finally:
+        spark.conf.unset(conf)
