@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Benchmark lane: run the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-JSON line:  {"metric": ..., "value": <total sec>, "unit": "sec",
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default:
+every core this process may run on) and print ONE JSON line:
+{"metric": ..., "value": <total sec>, "unit": "sec",
 "queries": {name: sec, ...}, "sf": <sf>}
 
 Each query is fully materialized through the noop sink (no driver
@@ -95,7 +96,7 @@ HEADLINE = [
     "acquisition_chain_profile", # strip->canonicalize->tokenize composed (r7)
     "warc_acquisition_chain",    # WARC bytes -> records -> the chain (r7)
     "image_near_dup_pairs",      # dHash + block-pair probe over PNGs (r7)
-    "unigram_token_stats",       # unigram-LM Viterbi serving from saved model (r7/r8)
+    "unigram_token_stats",       # unigram-LM Viterbi serving from the memoized model (r7/r8)
     "binary_chunk_dedup",        # Buzhash CDC chunk index + byte dedup (r7)
     "warc_revisit_resolution",   # revisit records -> digest-join dedup (r8)
     "warc_segment_reassembly",   # continuation-chain shuffle + chunked TE (r8 s2)
@@ -103,7 +104,7 @@ HEADLINE = [
     "c4_line_filter_stats",      # C4 line/page rules + verdicts (r8 s2)
     "kmv_corpus_overlap",        # KMV/theta sketch pairwise overlap (r8 s2)
     "sitemap_recrawl_schedule",  # sitemap freshness -> fetch slots (r8 s2)
-    "wordpiece_token_stats",     # WordPiece MaxMatch serving from saved vocab (r8 s2)
+    "wordpiece_token_stats",     # WordPiece MaxMatch serving from the memoized vocab (r8 s2)
     "robots_txt_gate",           # REP gate fed from parsed robots.txt text (r8 s2)
     # domain_pagerank stays OUT of the headline like item_pagerank: 10
     # fixed-cost local rounds measure scheduler floor, not operator cost;
@@ -946,7 +947,7 @@ def shuffle_lane(spark, queries) -> dict:
 
 
 def main() -> None:
-    # local[32] runs all 32 "executors" in ONE JVM: size the heap like the
+    # local[N] runs all N "executors" in ONE JVM: size the heap like the
     # aggregate executor memory a real cluster would have, or the trend
     # lane's 30x corpora GC-thrash (measured: near_dedup_pairs at 150k
     # docs swings 14s -> 85s on an 8g heap, stable on 32g).

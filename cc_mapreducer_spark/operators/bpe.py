@@ -20,23 +20,39 @@ aggregations:
      round (cluster deployments write parquet), same discipline as
      clustering.connected_components.
 
-Encoding applies the learned merge list in rank order per word — a
-Python loop, so it runs Arrow-batched in mapInPandas (the production
-analog swaps in a native tokenizer library behind the same seam).
+That loop is ``train_merges``, the one merge trainer of the family:
+byte-level BPE (operators/byte_bpe.py) and WordPiece
+(operators/wordpiece.py) call it with their own alphabet, fuse rule and
+pair score.
 
-No DuckDB oracle: training is iterative with a data-dependent schedule.
-Evidence is a pure-Python reference implementation (exact merge-list and
-encoding equality on the driver corpus) plus hand-pinned merges on a
-constructed corpus — the policy of the other iterative operators
-(IVF/PQ/pagerank/connected components).
+Encoding applies the learned merge list in rank order per word
+(``replay_merges``, shared with byte-level BPE) — a Python loop, so it
+runs Arrow-batched in mapInPandas (the production analog swaps in a
+native tokenizer library behind the same seam).
+
+A trained model is a driver-side value in the memo (``corpus_model``):
+it trains once per session and corpus, and every query that needs it
+(the *_token_stats singles, tokenizer_suite) reads that one copy.
+
+Evidence: a pure-Python reference implementation (exact merge-list and
+encoding equality on the driver corpus), hand-pinned merges on a
+constructed corpus, and the DuckDB oracle that unrolls the training in
+SQL (functions/trainer_sql.py).
 """
 
 from __future__ import annotations
 
+import operator
+from collections.abc import Callable
+from typing import Any, TypeVar
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.memo import value
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
+
+T = TypeVar("T")
 
 _EOW = "</w>"  # end-of-word marker (standard BPE)
 N_MERGES = 40
@@ -52,17 +68,6 @@ def word_freq_table(docs: DataFrame) -> DataFrame:
 
     words = docs.select(F.explode(F.expr(_SPARK_WORDS)).alias("word"))
     return words.groupBy("word").agg(F.count("*").alias("cnt"))
-
-
-def _initial_symbols(freq: DataFrame) -> DataFrame:
-    """word -> array of single-char symbols + end-of-word marker."""
-    return freq.select(
-        "word",
-        "cnt",
-        F.concat(
-            F.split(F.col("word"), ""), F.array(F.lit(_EOW))
-        ).alias("syms"),
-    )
 
 
 # Left fold == greedy leftmost merge (see module docstring for why the
@@ -97,9 +102,98 @@ def _merge_expr(a: str, b: str, ab: str) -> str:
     return _MERGE_FOLD.format(a=q(a), b=q(b), ab=q(ab))
 
 
-def _apply_merge(syms_df: DataFrame, a: str, b: str) -> DataFrame:
-    expr = _merge_expr(a, b, a + b)
-    return syms_df.select("word", "cnt", F.expr(expr).alias("syms"))
+def train_merges(
+    syms: DataFrame,
+    fuse: Callable[[str, str], str],
+    n_merges: int,
+    min_pair_count: int,
+    scorer: str = "count",
+) -> list[tuple[str, str, Any]]:
+    """The merge-training loop of every merge-based trainer (BPE,
+    byte-level BPE, WordPiece). ``syms`` is the initial (word, cnt,
+    syms) frame. Each round counts adjacent pairs weighted by word count
+    (ONE shuffle on the pair), drops pairs under ``min_pair_count``, and
+    the driver takes the argmax (a 1-row TakeOrdered, ties broken by
+    pair lexicographic order, so training is deterministic) of the pair
+    score: ``"count"``, the raw pair count (Sennrich), or
+    ``"likelihood"``, n_ab / (n_a * n_b) (WordPiece; the symbol counts
+    are model-sized, so both joins broadcast). Every word then fuses
+    the pair into ``fuse(a, b)`` by the left fold. Returns
+    [(left, right, score)] in rank order, stopping early when no pair
+    qualifies — the same split as trainer_sql._chain_sql(scorer=)."""
+    syms = syms.localCheckpoint()
+    merges: list[tuple[str, str, Any]] = []
+    for _ in range(n_merges):
+        pairs = (
+            syms.select("cnt", F.explode(F.expr(_ADJACENT_PAIRS)).alias("p"))
+            .groupBy("p.a", "p.b")
+            .agg(F.sum("cnt").alias("n"))
+            .filter(F.col("n") >= min_pair_count)
+        )
+        if scorer == "likelihood":
+            n_s = (
+                syms.select("cnt", F.explode("syms").alias("s"))
+                .groupBy("s")
+                .agg(F.sum("cnt").alias("n_s"))
+            )
+            pairs = (
+                pairs.join(F.broadcast(n_s.toDF("a", "n_a")), "a")
+                .join(F.broadcast(n_s.toDF("b", "n_b")), "b")
+                .select(
+                    "a",
+                    "b",
+                    (
+                        F.col("n").cast("double")
+                        / (F.col("n_a") * F.col("n_b")).cast("double")
+                    ).alias("n"),
+                )
+            )
+        top = pairs.orderBy(F.desc("n"), "a", "b").take(1)
+        if not top:
+            break
+        a, b = top[0]["a"], top[0]["b"]
+        merges.append((a, b, top[0]["n"]))
+        syms = syms.select(
+            "word", "cnt", F.expr(_merge_expr(a, b, fuse(a, b))).alias("syms")
+        ).localCheckpoint()
+    return merges
+
+
+def replay_merges(symbols: list[str], ranked: list[tuple[str, str]]) -> list[str]:
+    """Encode one word: apply the (left, right) merges in rank order,
+    each as a greedy leftmost scan — what _MERGE_FOLD does to the word
+    in training, so a training word's final symbols are its encoding."""
+    for a, b in ranked:
+        merged, i = [], 0
+        while i < len(symbols):
+            if i + 1 < len(symbols) and symbols[i] == a and symbols[i + 1] == b:
+                merged.append(a + b)
+                i += 2
+            else:
+                merged.append(symbols[i])
+                i += 1
+        symbols = merged
+    return symbols
+
+
+def corpus_model(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    params: tuple,
+    train: Callable[[DataFrame], T],
+) -> T:
+    """``train`` run on sf_dir's documents once per session, held in the
+    memo while documents.parquet is unchanged: the tokenizer queries and
+    tokenizer_suite share one trained model instead of retraining on
+    every build."""
+    return value(
+        spark,
+        name,
+        (sf_dir, *params),
+        [f"{sf_dir}/documents.parquet"],
+        lambda: train(spread(load_table(spark, sf_dir, "documents"))),
+    )
 
 
 def train_bpe(
@@ -108,22 +202,21 @@ def train_bpe(
     min_pair_count: int = MIN_PAIR_COUNT,
 ) -> list[tuple[str, str, int]]:
     """Learn up to ``n_merges`` merges; returns [(left, right, count)]
-    in rank order. Stops early when no pair reaches min_pair_count."""
-    syms = _initial_symbols(word_freq_table(docs)).localCheckpoint()
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        pairs = syms.select(
-            "cnt",
-            F.explode(F.expr(_ADJACENT_PAIRS)).alias("p"),
-        ).groupBy("p.a", "p.b").agg(F.sum("cnt").alias("n"))
-        # deterministic argmax: count desc, then pair lexicographic
-        top = pairs.orderBy(F.desc("n"), "a", "b").take(1)
-        if not top or top[0]["n"] < min_pair_count:
-            break
-        a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
-        merges.append((a, b, n))
-        syms = _apply_merge(syms, a, b).localCheckpoint()
-    return merges
+    in rank order. Stops early when no pair reaches min_pair_count.
+    Alphabet: each word's characters plus the end-of-word marker."""
+    syms = word_freq_table(docs).select(
+        "word",
+        "cnt",
+        F.concat(F.split(F.col("word"), ""), F.array(F.lit(_EOW))).alias("syms"),
+    )
+    return train_merges(syms, operator.add, n_merges, min_pair_count)
+
+
+def bpe_model(spark: SparkSession, sf_dir: str) -> list[tuple[str, str, int]]:
+    """train_bpe on sf_dir's corpus, memoized (corpus_model)."""
+    return corpus_model(
+        spark, sf_dir, "bpe_model", (N_MERGES, MIN_PAIR_COUNT), train_bpe
+    )
 
 
 def encode_bpe(docs: DataFrame, merges: list[tuple[str, str, int]]) -> DataFrame:
@@ -136,20 +229,6 @@ def encode_bpe(docs: DataFrame, merges: list[tuple[str, str, int]]) -> DataFrame
 
     ranked = [(a, b) for a, b, _ in merges]
 
-    def enc_word(word: str) -> list[str]:
-        out = list(word) + [_EOW]
-        for a, b in ranked:
-            merged, i = [], 0
-            while i < len(out):
-                if i + 1 < len(out) and out[i] == a and out[i + 1] == b:
-                    merged.append(a + b)
-                    i += 2
-                else:
-                    merged.append(out[i])
-                    i += 1
-            out = merged
-        return out
-
     def run(batches):
         # per-task memo: words repeat heavily (the same fact that lets
         # training collapse to the distinct-word table), so encode each
@@ -159,7 +238,7 @@ def encode_bpe(docs: DataFrame, merges: list[tuple[str, str, int]]) -> DataFrame
         def enc_cached(w: str) -> list[str]:
             t = memo.get(w)
             if t is None:
-                t = memo[w] = enc_word(w)
+                t = memo[w] = replay_merges(list(w) + [_EOW], ranked)
             return t
 
         for pdf in batches:
@@ -202,13 +281,13 @@ from cc_mapreducer_spark.functions.trainer_sql import bpe_stats_sql
 # (functions/trainer_sql.py) - so pytest value-checks it cross-engine
 @register("bpe_token_stats", oracle=bpe_stats_sql(), driver=False)
 def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train BPE on the documents corpus and report per-source token
-    compression: words in, subword tokens out, tokens-per-word. The
-    driver-facing evidence for the trainer (values are pinned exactly
-    against a pure-Python reference in pytest)."""
+    """Encode the documents corpus with its memoized BPE model and
+    report per-source token compression: words in, subword tokens out,
+    tokens-per-word. The driver-facing evidence for the trainer (values
+    are pinned exactly against a pure-Python reference in pytest)."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    merges = train_bpe(docs)
-    enc = encode_bpe(docs, merges)  # carries n_words: no second tokenize pass
+    # carries n_words: no second tokenize pass
+    enc = encode_bpe(docs, bpe_model(spark, sf_dir))
     per_doc = docs.select("doc_id", "source").join(enc, "doc_id")
     return per_doc.groupBy("source").agg(
         F.count("*").alias("n_docs"),

@@ -19,9 +19,10 @@ printable strings. Consequences this module makes testable:
     space to the following word ("Ġword"), so token boundaries carry
     spacing and decode needs no joiner heuristics.
 
-Training reuses the char-BPE machinery verbatim (operators/bpe.py's
-fold-merge over the distinct-pre-token frequency table — the corpus
-collapses once, rounds are vocab-sized) on the byte-mapped alphabet;
+Training and encoding reuse the char-BPE machinery verbatim
+(operators/bpe.py's train_merges fold-merge loop over the
+distinct-pre-token frequency table — the corpus collapses once, rounds
+are vocab-sized — and its replay_merges) on the byte-mapped alphabet;
 what changes is the alphabet and the pre-tokenizer, which is exactly
 the relationship the real GPT-2/RoBERTa/Llama tokenizers have to
 Sennrich BPE.
@@ -37,8 +38,15 @@ and (round 9) a DuckDB oracle that re-derives the training itself
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cc_mapreducer_spark.operators.bpe import (
+    corpus_model,
+    replay_merges,
+    train_merges,
+)
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
 
@@ -120,27 +128,23 @@ def train_byte_bpe(
     min_pair_count: int = MIN_PAIR_COUNT,
 ) -> list[tuple[str, str, int]]:
     """Sennrich merges over the byte-mapped distinct-pre-token table —
-    the char-BPE trainer's loop (operators/bpe.py) with the byte
-    alphabet and NO end-of-word marker (byte-level BPE carries word
-    boundaries in the Ġ space symbol instead)."""
-    from cc_mapreducer_spark.operators.bpe import _ADJACENT_PAIRS, _apply_merge
-
+    operators/bpe.train_merges with the byte alphabet and NO end-of-word
+    marker (byte-level BPE carries word boundaries in the Ġ space
+    symbol instead)."""
     syms = byte_word_freq_table(docs).select(
         "word", "cnt", F.split(F.col("word"), "").alias("syms")
-    ).localCheckpoint()
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        pairs = syms.select(
-            "cnt",
-            F.explode(F.expr(_ADJACENT_PAIRS)).alias("p"),
-        ).groupBy("p.a", "p.b").agg(F.sum("cnt").alias("n"))
-        top = pairs.orderBy(F.desc("n"), "a", "b").take(1)
-        if not top or top[0]["n"] < min_pair_count:
-            break
-        a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
-        merges.append((a, b, n))
-        syms = _apply_merge(syms, a, b).localCheckpoint()
-    return merges
+    )
+    return train_merges(syms, operator.add, n_merges, min_pair_count)
+
+
+def byte_bpe_model(
+    spark: SparkSession, sf_dir: str
+) -> list[tuple[str, str, int]]:
+    """train_byte_bpe on sf_dir's corpus, memoized (bpe.corpus_model)."""
+    return corpus_model(
+        spark, sf_dir, "byte_bpe_model", (N_MERGES, MIN_PAIR_COUNT),
+        train_byte_bpe,
+    )
 
 
 def encode_byte_bpe(
@@ -153,27 +157,13 @@ def encode_byte_bpe(
 
     ranked = [(a, b) for a, b, _ in merges]
 
-    def enc_sym(pre_token: str) -> list[str]:
-        out = to_symbols(pre_token)
-        for a, b in ranked:
-            merged, i = [], 0
-            while i < len(out):
-                if i + 1 < len(out) and out[i] == a and out[i + 1] == b:
-                    merged.append(a + b)
-                    i += 2
-                else:
-                    merged.append(out[i])
-                    i += 1
-            out = merged
-        return out
-
     def run(batches):
         memo: dict[str, list[str]] = {}
 
         def enc(pt: str) -> list[str]:
             t = memo.get(pt)
             if t is None:
-                t = memo[pt] = enc_sym(pt)
+                t = memo[pt] = replay_merges(to_symbols(pt), ranked)
             return t
 
         for pdf in batches:
@@ -205,13 +195,12 @@ from cc_mapreducer_spark.functions.trainer_sql import bbpe_stats_sql
 # driver=False: hashed inside tokenizer_suite; oracle-backed since r9
 @register("byte_bpe_token_stats", oracle=bbpe_stats_sql(), driver=False)
 def byte_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train byte-level BPE and report per-source bytes-per-token
-    compression — the byte-grain analog of the other tokenizer stats;
-    trainer, encoder, and the lossless-round-trip property are pinned
-    in pytest."""
+    """Encode with the memoized byte-level BPE model and report
+    per-source bytes-per-token compression — the byte-grain analog of
+    the other tokenizer stats; trainer, encoder, and the
+    lossless-round-trip property are pinned in pytest."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    merges = train_byte_bpe(docs)
-    enc = encode_byte_bpe(docs, merges)
+    enc = encode_byte_bpe(docs, byte_bpe_model(spark, sf_dir))
     per_doc = docs.select("doc_id", "source").join(enc, "doc_id")
     return per_doc.groupBy("source").agg(
         F.count("*").alias("n_docs"),

@@ -54,8 +54,11 @@ with the per-trainer *_token_stats single-query oracles.
 Scale shape: each training cost is one corpus-sized word-frequency
 shuffle plus merge rounds over the DISTINCT-(pre-)token table
 (vocabulary-sized — tiny at any corpus scale); encoding rides the scan
-Arrow-batched. The suite localCheckpoints each encoded table once and
-reuses it across leg families.
+Arrow-batched. Each trained model is a driver-side value in the memo
+(operators/bpe.corpus_model), shared with the *_token_stats singles,
+whose frames are the suite's stats legs; the encoded tables and the
+multiply-read seqprep/dataloader frames go through memo.persisted. A
+build after the singles, and every later build, starts no Spark job.
 """
 
 from __future__ import annotations
@@ -66,10 +69,16 @@ from cc_mapreducer_spark.operators.anagram import (
     _HASH_PARTITION_SQL,
     q_hash_partition_stats,
 )
-from cc_mapreducer_spark.operators.bpe import encode_bpe, train_bpe
+from cc_mapreducer_spark.memo import persisted
+from cc_mapreducer_spark.operators.bpe import (
+    bpe_model,
+    bpe_token_stats,
+    encode_bpe,
+)
 from cc_mapreducer_spark.operators.byte_bpe import (
+    byte_bpe_model,
+    byte_bpe_token_stats,
     encode_byte_bpe,
-    train_byte_bpe,
 )
 from cc_mapreducer_spark.operators.text_analysis import (
     _CORPUS_TOKENS_SQL,
@@ -91,7 +100,10 @@ from cc_mapreducer_spark.operators.seqprep import (
     sequence_pack_bins,
     sequence_pack_summary,
 )
-from cc_mapreducer_spark.operators.wordpiece import encode_wordpiece
+from cc_mapreducer_spark.operators.wordpiece import (
+    wordpiece_model,
+    wordpiece_token_stats,
+)
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
 
@@ -196,7 +208,6 @@ def tokenizer_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     corpus = corpus_token_totals(spark, sf_dir)
-    src_docs = docs.select("doc_id", "source")
 
     def vocab_of(enc: DataFrame) -> DataFrame:
         return (
@@ -211,49 +222,20 @@ def tokenizer_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"step int, a string, b string, v {val_type}",
         )
 
-    # BPE
-    bpe_merges = train_bpe(docs)
-    bpe_enc = encode_bpe(docs, bpe_merges).localCheckpoint()
-    bpe_stats = src_docs.join(bpe_enc, "doc_id").groupBy("source").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("n_words").cast("bigint").alias("total_words"),
-        F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-        F.round(
-            F.sum("n_tokens") / F.sum("n_words").cast("double"), 6
-        ).alias("tokens_per_word"),
-    )
-    # byte-level BPE
-    bb_merges = train_byte_bpe(docs)
-    bb_enc = encode_byte_bpe(docs, bb_merges).localCheckpoint()
-    bb_stats = src_docs.join(bb_enc, "doc_id").groupBy("source").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("n_bytes").cast("bigint").alias("total_bytes"),
-        F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-        F.round(
-            F.sum("n_bytes") / F.sum("n_tokens").cast("double"), 6
-        ).alias("bytes_per_token"),
-    )
-    # WordPiece: ONE training supplies both the merge table and the
-    # vocab the MaxMatch serving encodes with (the saved-artifact
-    # save/load seam is exercised by wordpiece_token_stats; re-training
-    # through the saved model here would double the 40-round cost)
-    from cc_mapreducer_spark.operators.wordpiece import train_wordpiece
-
-    wp_merges, wp_vocab = train_wordpiece(docs)
-    wp_enc = encode_wordpiece(docs, wp_vocab).localCheckpoint()
-    wp_stats = src_docs.join(wp_enc, "doc_id").groupBy("source").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("n_words").cast("bigint").alias("total_words"),
-        F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-        F.sum("n_unk").cast("bigint").alias("total_unk"),
-        F.round(
-            F.sum("n_tokens") / F.sum("n_words").cast("double"), 6
-        ).alias("tokens_per_word"),
-    )
+    # the three trained models and the three *_token_stats singles come
+    # from the memo: a build after the singles trains nothing
+    bpe_merges = bpe_model(spark, sf_dir)
+    bpe_enc = persisted(encode_bpe(docs, bpe_merges))
+    bpe_stats = bpe_token_stats(spark, sf_dir)
+    bb_merges = byte_bpe_model(spark, sf_dir)
+    bb_enc = persisted(encode_byte_bpe(docs, bb_merges))
+    bb_stats = byte_bpe_token_stats(spark, sf_dir)
+    wp_merges, wp_vocab = wordpiece_model(spark, sf_dir)
+    wp_stats = wordpiece_token_stats(spark, sf_dir)
     wp_vocab_df = spark.createDataFrame(
         [(v,) for v in wp_vocab], "sym string"
     )
-    pack_sum = sequence_pack_summary(spark, sf_dir).localCheckpoint()
+    pack_sum = persisted(sequence_pack_summary(spark, sf_dir))
 
     parts = [
         leg(corpus, "corpus:docs", F.col("lang"), F.col("n_docs")),
@@ -311,7 +293,7 @@ def tokenizer_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     # dataloader hand-off legs (r10): mixture plan + shuffle manifest —
     # the corpus -> contexts -> mixture -> readers chain, all hashed
-    mix = corpus_mixture_plan(spark, sf_dir).localCheckpoint()
+    mix = persisted(corpus_mixture_plan(spark, sf_dir))
     parts += [
         leg(mix, "mix:avail", F.col("source"), F.col("available_tokens")),
         leg(mix, "mix:target", F.col("source"), F.col("target_tokens")),

@@ -71,6 +71,10 @@ per-word lattice (p_{i}_{j} probability columns, f/b position columns)
 — any drift in a single EM count, prune decision, or Viterbi pick
 fails the value hash.
 
+Serving: the trained piece table is a driver-side value in the memo
+(``unigram_model``), trained once per corpus per session; the
+registered query only Viterbi-encodes with it.
+
 Scale notes: the EM state is model-sized; the only corpus-sized job is
 the one word-frequency groupBy. The integer count grid bounds corpus
 size at ~2^63 / 1e9 ~ 9e9 tokens per training shard — past that, raise
@@ -96,8 +100,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from cc_mapreducer_spark.memo import value
-from cc_mapreducer_spark.operators.bpe import word_freq_table
+from cc_mapreducer_spark.operators.bpe import corpus_model, word_freq_table
 from cc_mapreducer_spark.registry import register
 from cc_mapreducer_spark.tables import load_table, spread
 
@@ -288,17 +291,12 @@ def _prune(p: dict[str, float], chars: set[str]) -> dict[str, float]:
     return {q: v for q, v in p.items() if q in kept}
 
 
-def train_unigram(
-    docs: DataFrame,
-    freq: DataFrame | None = None,
-) -> dict[str, float]:
+def train_unigram(docs: DataFrame) -> dict[str, float]:
     """Fit the unigram-LM piece table on the FIXED schedule
     (EM x EM_ITERS, prune) x PRUNE_ROUNDS + final EM x EM_ITERS; see
     the module docstring's determinism contract. Returns {piece:
-    probability} (single chars always present). Pass ``freq`` when the
-    caller already built/checkpointed the distinct-word table."""
-    if freq is None:
-        freq = word_freq_table(docs).localCheckpoint()
+    probability} (single chars always present)."""
+    freq = word_freq_table(docs).localCheckpoint()
     chars = {
         r["c"]
         for r in freq.select(
@@ -350,37 +348,10 @@ def encode_unigram(freq: DataFrame, p: dict[str, float]) -> DataFrame:
     return freq.mapInPandas(run, ENCODE_SCHEMA)
 
 
-# --------------------------------------------------------------------------
-# model lifecycle: train once -> persist -> serve (the PQ index pattern,
-# operators/pq.py pq_save_index / similarity_topk_pq_from_index)
-# --------------------------------------------------------------------------
-
-
-def unigram_save_model(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Train on sf_dir's corpus and persist the piece table as parquet
-    (piece, p) — the standing artifact a real pipeline trains once and
-    ships to every tokenization job."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    freq = word_freq_table(docs).localCheckpoint()
-    p = train_unigram(docs, freq=freq)
-    spark.createDataFrame(
-        sorted(p.items()), "piece string, p double"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def unigram_load_model(spark: SparkSession, path: str) -> dict[str, float]:
-    """Load a persisted piece table back into the broadcastable dict the
-    encoder rides (model-sized collect)."""
-    return {r["piece"]: r["p"] for r in spark.read.parquet(path).collect()}
-
-
-def unigram_encode_from_model(
-    spark: SparkSession, sf_dir: str, path: str
-) -> DataFrame:
-    """Serving path: Viterbi-encode sf_dir's distinct-word table with the
-    SAVED model — no EM, one scan + one mapInPandas."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return encode_unigram(word_freq_table(docs), unigram_load_model(spark, path))
+def unigram_model(spark: SparkSession, sf_dir: str) -> dict[str, float]:
+    """train_unigram on sf_dir's corpus, memoized (bpe.corpus_model): the
+    {piece: probability} table every serving call encodes with."""
+    return corpus_model(spark, sf_dir, "unigram_model", (), train_unigram)
 
 
 # --------------------------------------------------------------------------
@@ -597,27 +568,12 @@ def unigram_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram-LM tokenizer: per word the piece count and the segmentation
     string.
 
-    The query is the SERVING path — it encodes from the saved model
-    artifact (training runs once per corpus per process via
-    unigram_save_model, the PQ index lifecycle), so per-query cost is
-    the encode, not the EM fit. Oracle-backed since r11 (VERDICT r10
-    next-round #5): the DuckDB oracle re-derives the ENTIRE training
-    schedule — all {PRUNE_ROUNDS}x{EM_ITERS}+{EM_ITERS} EM steps on the
-    integer count grid, every prune, and the Viterbi serving chain —
-    from first principles (module docstring)."""
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"cc_mr_spark_unigram_model_{tag}")
-    # trained and saved once per corpus per session (deterministic
-    # training, so re-serving the saved model is exact)
-    value(
-        spark,
-        "unigram_model",
-        (path,),
-        [f"{sf_dir}/documents.parquet"],
-        lambda: unigram_save_model(spark, sf_dir, path),
-    )
-    return unigram_encode_from_model(spark, sf_dir, path)
+    The query is the SERVING path — it encodes with the memoized model
+    (unigram_model: training runs once per corpus per session), so
+    per-query cost is the encode, not the EM fit. Oracle-backed since
+    r11 (VERDICT r10 next-round #5): the DuckDB oracle re-derives the
+    ENTIRE training schedule — all {PRUNE_ROUNDS}x{EM_ITERS}+{EM_ITERS}
+    EM steps on the integer count grid, every prune, and the Viterbi
+    serving chain — from first principles (module docstring)."""
+    docs = spread(load_table(spark, sf_dir, "documents"))
+    return encode_unigram(word_freq_table(docs), unigram_model(spark, sf_dir))

@@ -15,35 +15,38 @@ encoding decision, and both are implemented faithfully:
              vocab prefix, then repeatedly the longest '##'-continuation
              match; any dead end makes the whole word [UNK].
 
-Distributed shape (same discipline as BPE): the corpus collapses ONCE
-to the distinct-word frequency table, so each training round is
-vocab-sized work — explode adjacent pairs and symbols (both weighted by
-word count), ONE shuffle each, join pair counts to symbol counts
-(broadcast: the symbol table is model-sized), and the driver takes the
-deterministic argmax (score desc, then pair lexicographic — float ties
-broken by total order, so training is reproducible). The merge applies
-via the same left-fold HOF as BPE. Encoding runs Arrow-batched in
-mapInPandas with a per-task word memo; the vocab rides the closure
-(model-sized broadcast, never a join).
+Distributed shape: training is operators/bpe.train_merges, the loop
+BPE and byte-level BPE use, with the likelihood pair score and the
+'##'-aware fuse rule. The corpus collapses ONCE to the distinct-word
+frequency table, so each round is vocab-sized work — explode adjacent
+pairs and symbols (both weighted by word count), ONE shuffle each, join
+pair counts to symbol counts (broadcast: the symbol table is
+model-sized), and the driver takes the deterministic argmax (score
+desc, then pair lexicographic — float ties broken by total order, so
+training is reproducible). The trained (merges, vocab) pair is held in
+the memo (``wordpiece_model``), so the single query and
+tokenizer_suite train once per corpus per session. Encoding runs
+Arrow-batched in mapInPandas with a per-task word memo; the vocab rides
+the closure (model-sized broadcast, never a join).
 
 Non-initial symbols carry the '##' continuation prefix, so merging
 (a, b) yields a + b[2:]; words longer than MAX_WORD_CHARS are [UNK]
 (BERT's max_input_chars_per_word guard).
 
-No DuckDB oracle: training is iterative with a data-dependent schedule
-— the policy of BPE/unigram/IVFPQ. Evidence is a pure-python replica
-(exact merge-list, vocab, and encoding equality pinned in pytest) plus
-hand-verified merges on a constructed corpus.
+Evidence: a pure-python replica (exact merge-list, vocab, and encoding
+equality pinned in pytest), hand-verified merges on a constructed
+corpus, and the DuckDB oracle that unrolls both the training and the
+MaxMatch serving in SQL (functions/trainer_sql.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from cc_mapreducer_spark.memo import value
 from cc_mapreducer_spark.operators.bpe import (
-    _ADJACENT_PAIRS,
-    _merge_expr,
+    _normalize,
+    corpus_model,
+    train_merges,
     word_freq_table,
 )
 from cc_mapreducer_spark.registry import register
@@ -55,29 +58,10 @@ MAX_WORD_CHARS = 100  # BERT's per-word guard: longer words are [UNK]
 UNK = "[UNK]"
 
 
-def _initial_symbols(freq: DataFrame) -> DataFrame:
-    """word -> [first char, '##'+c for the rest] (WordPiece's word-
-    boundary convention: position is carried by the continuation
-    prefix, not an end-of-word marker)."""
-    return freq.select(
-        "word",
-        "cnt",
-        F.expr(
-            "transform(split(word, ''), "
-            "(c, i) -> IF(i = 0, c, concat('##', c)))"
-        ).alias("syms"),
-    )
-
-
 def _merged_symbol(a: str, b: str) -> str:
     """Fusing a pair drops the right side's continuation prefix; the
     left side's prefix (or absence) is the fused symbol's position."""
     return a + (b[2:] if b.startswith("##") else b)
-
-
-def _apply_merge(syms_df: DataFrame, a: str, b: str) -> DataFrame:
-    expr = _merge_expr(a, b, _merged_symbol(a, b))
-    return syms_df.select("word", "cnt", F.expr(expr).alias("syms"))
 
 
 def train_wordpiece(
@@ -88,64 +72,38 @@ def train_wordpiece(
     """Learn up to ``n_merges`` merges by likelihood score; returns
     (merges [(left, right, score)], vocab). The vocab is every initial
     symbol plus every fused symbol — what greedy encoding matches
-    against."""
-    syms = _initial_symbols(word_freq_table(docs)).localCheckpoint()
+    against. Alphabet: each word's first char, then '##'+c for the rest
+    (WordPiece's word-boundary convention: position is carried by the
+    continuation prefix, not an end-of-word marker)."""
+    freq = word_freq_table(docs).localCheckpoint()
+    syms = freq.select(
+        "word",
+        "cnt",
+        F.expr(
+            "transform(split(word, ''), "
+            "(c, i) -> IF(i = 0, c, concat('##', c)))"
+        ).alias("syms"),
+    )
     vocab = {
         r["s"]
-        for r in syms.select(
-            F.explode("syms").alias("s")
-        ).distinct().collect()
+        for r in syms.select(F.explode("syms").alias("s")).distinct().collect()
     }
-    merges: list[tuple[str, str, float]] = []
-    for _ in range(n_merges):
-        exploded = syms.select(
-            "cnt",
-            "syms",
-            F.explode(F.expr(_ADJACENT_PAIRS)).alias("p"),
-        )
-        pairs = exploded.groupBy("p.a", "p.b").agg(F.sum("cnt").alias("n_ab"))
-        sym_counts = (
-            syms.select("cnt", F.explode("syms").alias("s"))
-            .groupBy("s")
-            .agg(F.sum("cnt").alias("n_s"))
-        )
-        scored = (
-            pairs.join(
-                F.broadcast(
-                    sym_counts.select(
-                        F.col("s").alias("a"), F.col("n_s").alias("n_a")
-                    )
-                ),
-                "a",
-            )
-            .join(
-                F.broadcast(
-                    sym_counts.select(
-                        F.col("s").alias("b"), F.col("n_s").alias("n_b")
-                    )
-                ),
-                "b",
-            )
-            .select(
-                "a",
-                "b",
-                "n_ab",
-                (
-                    F.col("n_ab").cast("double")
-                    / (F.col("n_a") * F.col("n_b")).cast("double")
-                ).alias("score"),
-            )
-        )
-        top = scored.filter(F.col("n_ab") >= min_pair_count).orderBy(
-            F.desc("score"), "a", "b"
-        ).take(1)
-        if not top:
-            break
-        a, b, score = top[0]["a"], top[0]["b"], float(top[0]["score"])
-        merges.append((a, b, score))
-        vocab.add(_merged_symbol(a, b))
-        syms = _apply_merge(syms, a, b).localCheckpoint()
+    merges = train_merges(
+        syms, _merged_symbol, n_merges, min_pair_count, scorer="likelihood"
+    )
+    vocab.update(_merged_symbol(a, b) for a, b, _ in merges)
     return merges, sorted(vocab)
+
+
+def wordpiece_model(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[tuple[str, str, float]], list[str]]:
+    """train_wordpiece on sf_dir's corpus, memoized (bpe.corpus_model):
+    the merge table and the vocab the MaxMatch serving encodes with."""
+    return corpus_model(
+        spark, sf_dir, "wordpiece_model", (N_MERGES, MIN_PAIR_COUNT),
+        train_wordpiece,
+    )
 
 
 def encode_word_wordpiece(word: str, vocab: set[str]) -> list[str]:
@@ -174,92 +132,20 @@ def encode_word_wordpiece(word: str, vocab: set[str]) -> list[str]:
     return out
 
 
-def encode_wordpiece(docs: DataFrame, vocab: list[str]) -> DataFrame:
-    """(doc_id, tokens, n_tokens, n_words, n_unk) — greedy MaxMatch per
-    word, Arrow-batched with a per-task distinct-word memo; the vocab
-    set rides the closure."""
-    import pandas as pd
-
-    from cc_mapreducer_spark.operators.bpe import _normalize
-
-    vset = set(vocab)
-
-    def run(batches):
-        memo: dict[str, list[str]] = {}
-
-        def enc(w: str) -> list[str]:
-            t = memo.get(w)
-            if t is None:
-                t = memo[w] = encode_word_wordpiece(w, vset)
-            return t
-
-        for pdf in batches:
-            toks, n_words, n_unk = [], [], []
-            for text in pdf["text"]:
-                words = [w for w in _normalize(text).split(" ") if w]
-                doc_tokens: list[str] = []
-                unk = 0
-                for w in words:
-                    t = enc(w)
-                    unk += t.count(UNK)
-                    doc_tokens.extend(t)
-                toks.append(doc_tokens)
-                n_words.append(len(words))
-                n_unk.append(unk)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "tokens": toks,
-                    "n_tokens": [len(t) for t in toks],
-                    "n_words": n_words,
-                    "n_unk": n_unk,
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(
-        run,
-        "doc_id long, tokens array<string>, n_tokens int, "
-        "n_words int, n_unk int",
-    )
-
-
-# --------------------------------------------------------------------------
-# model lifecycle: train once -> persist -> serve (the PQ/unigram
-# pattern — per-query cost must be the encode, not the 40-round fit)
-# --------------------------------------------------------------------------
-
-
-def wordpiece_save_model(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Train on sf_dir's corpus and persist the vocab as parquet — the
-    standing artifact every tokenization job ships with."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    _, vocab = train_wordpiece(docs)
-    spark.createDataFrame(
-        [(v,) for v in vocab], "piece string"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def wordpiece_load_model(spark: SparkSession, path: str) -> list[str]:
-    """The persisted vocab back as the list the encoder's closure rides
-    (model-sized collect)."""
-    return sorted(r["piece"] for r in spark.read.parquet(path).collect())
-
-
 from cc_mapreducer_spark.functions.trainer_sql import wp_stats_sql
 
+
 def encode_wordpiece_stats(docs: DataFrame, vocab: list[str]) -> DataFrame:
-    """(source, n_tokens, n_words, n_unk) — one row per document, the
-    stats-grain encoder. Same greedy MaxMatch + per-task word memo as
-    ``encode_wordpiece``, but it never materializes or ships the token
+    """(source, n_tokens, n_words, n_unk) — one row per document:
+    greedy MaxMatch per word with a per-task distinct-word memo, the
+    vocab set riding the closure. It never materializes or ships token
     arrays (the stats consumer only sums counts), and it CARRIES the
-    grouping column through the kernel instead of joining the encoded
+    grouping column through the kernel instead of joining an encoded
     stream back to the corpus on doc_id — the r11 lane paid a full
     token-stream shuffle plus the Arrow transfer of every tokens array
     only to discard both (guide §2.3 project-before-the-exchange, §4.1
     pass only the columns the function needs)."""
     import pandas as pd
-
-    from cc_mapreducer_spark.operators.bpe import _normalize
 
     vset = set(vocab)
 
@@ -305,31 +191,15 @@ def encode_wordpiece_stats(docs: DataFrame, vocab: list[str]) -> DataFrame:
 @register("wordpiece_token_stats", oracle=wp_stats_sql(), driver=False)
 def wordpiece_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source subword compression + UNK accounting. The query is
-    the SERVING path — greedy MaxMatch against the saved vocab artifact
-    (training runs once per corpus per process via
-    wordpiece_save_model); values pinned exactly against the
-    pure-python replica in pytest, saved-vs-inline equality included.
+    the SERVING path — greedy MaxMatch against the memoized vocab
+    (wordpiece_model: training runs once per corpus per session);
+    values pinned exactly against the pure-python replica in pytest.
     Aggregates the stats-grain encoder (counts only, source carried
     through the kernel) — r11's shape joined the full token-array
     stream back to the corpus on doc_id and shuffled it, for an
     aggregation that reads none of the tokens."""
-    import hashlib
-    import os
-    import tempfile
-
     docs = spread(load_table(spark, sf_dir, "documents"))
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"cc_mr_spark_wordpiece_model_{tag}")
-    # trained and saved once per corpus per session (deterministic
-    # training, so re-serving the saved vocab is exact)
-    value(
-        spark,
-        "wordpiece_model",
-        (path,),
-        [f"{sf_dir}/documents.parquet"],
-        lambda: wordpiece_save_model(spark, sf_dir, path),
-    )
-    vocab = wordpiece_load_model(spark, path)
+    _, vocab = wordpiece_model(spark, sf_dir)
     per_doc = encode_wordpiece_stats(docs, vocab)
     return per_doc.groupBy("source").agg(
         F.count("*").alias("n_docs"),

@@ -5,7 +5,9 @@ Local-mode settings mirror what we would set on a real cluster:
     the same plan survives a 100x scale-up without re-tuning.
   - UTC session timezone so timestamp semantics match the DuckDB oracle.
   - Arrow enabled for any Pandas-UDF path (the hot paths use none).
-  - shuffle.partitions sized for local[32]; on a 1000-executor cluster this
+  - local[N] with N = $SPARK_GRAFT_CPUS, else every core this process may
+    run on (os.sched_getaffinity), never more threads than the host has.
+  - shuffle.partitions = max(N, 8); on a 1000-executor cluster this
     would be executors*cores*2-ish, but AQE coalescing makes the static
     number mostly a ceiling.
 """
@@ -56,7 +58,9 @@ def cluster_conf(
 
 def get_spark(app_name: str = "cc-mapreducer-spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(
+            os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        )
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -67,7 +71,7 @@ def get_spark(app_name: str = "cc-mapreducer-spark", cpus: int | None = None) ->
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # local[32] pushes ~all of a cluster's generated code through ONE
+        # local mode pushes ~all of a cluster's generated code through ONE
         # JVM; the default 240m JIT code cache evicts hot compiled stages
         # when many codegen-heavy queries interleave (measured: the
         # near_dedup 150k-doc verify swings 9.5-31.5s under the default,

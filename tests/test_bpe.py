@@ -7,12 +7,15 @@ from __future__ import annotations
 import re
 from collections import Counter
 
+import pytest
+
 from cc_mapreducer_spark.operators.bpe import (
     _EOW,
     bpe_token_stats,
     encode_bpe,
     train_bpe,
 )
+from cc_mapreducer_spark.tables import load_table
 from tests.conftest import SF_SMOKE
 
 
@@ -65,27 +68,31 @@ def _ref_encode(word, merges):
     return out
 
 
-def test_trainer_matches_python_reference_exactly(spark):
-    from cc_mapreducer_spark.tables import load_table
+@pytest.fixture(scope="module")
+def smoke_merges(spark):
+    """25 merges of the smoke corpus, trained once for the trainer and
+    encoder tests."""
+    return train_bpe(load_table(spark, SF_SMOKE, "documents"), n_merges=25)
 
+
+def test_trainer_matches_python_reference_exactly(spark, smoke_merges):
     docs = load_table(spark, SF_SMOKE, "documents")
     texts = [r["text"] for r in docs.select("text").collect()]
-    got = train_bpe(docs, n_merges=25)
     expected = _ref_train(texts, n_merges=25)
-    assert got == expected  # merge list, order, AND counts
+    assert smoke_merges == expected  # merge list, order, AND counts
 
 
-def test_encoder_matches_python_reference_exactly(spark):
-    from cc_mapreducer_spark.tables import load_table
-
+def test_encoder_matches_python_reference_exactly(spark, smoke_merges):
     docs = load_table(spark, SF_SMOKE, "documents")
     texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-    merges = train_bpe(docs, n_merges=15)
-    enc = {r["doc_id"]: r["tokens"] for r in encode_bpe(docs, merges).collect()}
+    enc = {
+        r["doc_id"]: r["tokens"]
+        for r in encode_bpe(docs, smoke_merges).collect()
+    }
     for doc_id, text in texts.items():
         expected = []
         for w in re.sub("[^a-z]+", " ", text.lower()).split():
-            expected.extend(_ref_encode(w, merges))
+            expected.extend(_ref_encode(w, smoke_merges))
         assert enc[doc_id] == expected
 
 

@@ -8,6 +8,8 @@ from __future__ import annotations
 import re
 from collections import Counter
 
+import pytest
+
 from cc_mapreducer_spark.operators.byte_bpe import (
     bytes_to_unicode,
     decode_tokens,
@@ -16,7 +18,15 @@ from cc_mapreducer_spark.operators.byte_bpe import (
     to_symbols,
     train_byte_bpe,
 )
+from cc_mapreducer_spark.tables import load_table
 from tests.conftest import SF_SMOKE
+
+
+@pytest.fixture(scope="module")
+def smoke_merges(spark):
+    """25 merges of the smoke corpus, trained once for every test here
+    that needs a trained model."""
+    return train_byte_bpe(load_table(spark, SF_SMOKE, "documents"), n_merges=25)
 
 
 def test_byte_table_is_the_gpt2_bijection():
@@ -36,18 +46,14 @@ def test_round_trip_arbitrary_bytes():
         assert decode_tokens(to_symbols(s)) == s
 
 
-def test_no_unk_after_training(spark):
-    from cc_mapreducer_spark.tables import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    merges = train_byte_bpe(docs, n_merges=20)
+def test_no_unk_after_training(spark, smoke_merges):
     # encode a corpus the training never saw characters of — by
     # construction every byte still has a symbol and merges just
     # fail to apply; round trip stays exact
     df = spark.createDataFrame(
         [(1, "zzzqqq vvv unseen words here")], "doc_id long, text string"
     )
-    row = encode_byte_bpe(df, merges).collect()[0]
+    row = encode_byte_bpe(df, smoke_merges).collect()[0]
     joined = decode_tokens(list(row.tokens))
     assert joined == "zzzqqq vvv unseen words here"
 
@@ -93,27 +99,20 @@ def _ref_train(texts, n_merges, min_pair_count=2):
     return merges
 
 
-def test_trainer_matches_python_reference(spark):
-    from cc_mapreducer_spark.tables import load_table
-
+def test_trainer_matches_python_reference(spark, smoke_merges):
     texts = [
         r["text"]
         for r in spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
         .select("text")
         .collect()
     ]
-    docs = load_table(spark, SF_SMOKE, "documents")
-    got = train_byte_bpe(docs, n_merges=25)
     exp = _ref_train(texts, n_merges=25)
-    assert got == exp
+    assert smoke_merges == exp
 
 
-def test_doc_round_trip_through_trained_encoder(spark):
-    from cc_mapreducer_spark.tables import load_table
-
+def test_doc_round_trip_through_trained_encoder(spark, smoke_merges):
     docs = load_table(spark, SF_SMOKE, "documents")
-    merges = train_byte_bpe(docs, n_merges=25)
-    rows = encode_byte_bpe(docs, merges).collect()
+    rows = encode_byte_bpe(docs, smoke_merges).collect()
     raw = {
         r["doc_id"]: r["text"]
         for r in spark.read.parquet(f"{SF_SMOKE}/documents.parquet")

@@ -104,3 +104,21 @@ def test_aqe_skew_join_splits_planted_hot_key(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_get_spark_defaults_to_the_host_cores(monkeypatch):
+    """Without $SPARK_GRAFT_CPUS the local master gets one thread per
+    core this process may run on, not a fixed 32. The builder is
+    stopped before it starts a session: its options are returned."""
+    from pyspark.sql import SparkSession
+
+    from cc_mapreducer_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: self._options)
+    opts = session.get_spark()
+    assert opts["spark.master"] == "local[3]"
+    assert opts["spark.sql.shuffle.partitions"] == "8"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    assert session.get_spark()["spark.master"] == "local[5]"

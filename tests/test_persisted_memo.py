@@ -12,7 +12,9 @@
   and returns the same rows;
 - a table's schema is inferred once per file: a second load of a table,
   or a second build of a benchmark catalog query, starts no Spark job,
-  and a table rewritten in place is read with its new schema.
+  and a table rewritten in place is read with its new schema;
+- a tokenizer model trains once per corpus: after the tokenizer singles,
+  no build of them or of tokenizer_suite starts a Spark job.
 """
 
 from __future__ import annotations
@@ -261,9 +263,20 @@ _CATALOG_QUERIES = (
 )
 
 
+# The tokenizer queries that train a model on their first build.
+_TOKENIZER_SINGLES = (
+    "bpe_token_stats",
+    "byte_bpe_token_stats",
+    "wordpiece_token_stats",
+    "unigram_token_stats",
+)
+
+
 def test_second_build_starts_no_job(spark):
     """Schema inference reads parquet footers in a Spark job; it runs
-    once per file, not once per load_table or query build."""
+    once per file, not once per load_table or query build. A tokenizer
+    model trains once per corpus: tokenizer_suite built after the four
+    tokenizer singles trains nothing, and no rebuild trains again."""
     def load_all():
         for name in TABLE_NAMES:
             load_table(spark, SF_SMOKE, name)
@@ -271,9 +284,11 @@ def test_second_build_starts_no_job(spark):
     assert _jobs_started(spark, load_all) > 0  # the counter sees inference
     assert _jobs_started(spark, load_all) == 0
     queries = registry.all_queries()
-    for name in _CATALOG_QUERIES:
+    for name in _CATALOG_QUERIES + _TOKENIZER_SINGLES:
         queries[name](spark, SF_SMOKE)
-    for name in _CATALOG_QUERIES:
+    suite = lambda: queries["tokenizer_suite"](spark, SF_SMOKE)  # noqa: E731
+    assert _jobs_started(spark, suite) == 0, "tokenizer_suite"
+    for name in _CATALOG_QUERIES + _TOKENIZER_SINGLES + ("tokenizer_suite",):
         assert _jobs_started(spark, lambda: queries[name](spark, SF_SMOKE)) == 0, name
 
 

@@ -121,6 +121,11 @@ ALLOWED_PYTHON_EVAL = {
     "similar_documents",
     "hybrid_search_rrf",
     # suites/digests whose legs are the allowed kernels above
+    # (tokenizer_suite's legs are the bpe/byte_bpe/wordpiece stats
+    # frames and the two BPE encoders; the encoders used to run at
+    # build time behind localCheckpoint, which hid the same Python
+    # stages from this audit)
+    "tokenizer_suite",
     "multimodal_suite",
     "binary_dedup_suite",
     "image_dedup_suite",

@@ -211,29 +211,20 @@ def test_unigram_oracle_parity_other_sfs(spark):
             con.close()
 
 
-def test_saved_model_serving_equals_inline(spark, tmp_path):
-    """The train->persist->load->encode lifecycle must reproduce the
-    inline train->encode result exactly (round 8 split, mirroring the
-    PQ index lifecycle)."""
+def test_saved_model_serving_equals_inline(spark):
+    """The model the memo holds for a corpus equals a fresh
+    train_unigram on that corpus, and the registered query serves
+    exactly encode_unigram run with that model."""
     from cc_mapreducer_spark.operators.bpe import word_freq_table
-    from cc_mapreducer_spark.operators.unigram_lm import (
-        encode_unigram,
-        train_unigram,
-        unigram_encode_from_model,
-        unigram_load_model,
-        unigram_save_model,
-    )
+    from cc_mapreducer_spark.operators.unigram_lm import unigram_model
     from cc_mapreducer_spark.tables import load_table, spread
 
     sf = "/root/testdata/sf0.001"
-    path = str(tmp_path / "unigram_model")
-    unigram_save_model(spark, sf, path)
     docs = spread(load_table(spark, sf, "documents"))
-    freq = word_freq_table(docs).localCheckpoint()
-    inline = encode_unigram(freq, train_unigram(docs, freq=freq)).toPandas()
-    served = unigram_encode_from_model(spark, sf, path).toPandas()
-    # the loaded dict must round-trip the trained one exactly
-    assert unigram_load_model(spark, path) == train_unigram(docs, freq=freq)
+    model = unigram_model(spark, sf)
+    assert model == train_unigram(docs)
+    inline = encode_unigram(word_freq_table(docs), model).toPandas()
+    served = unigram_token_stats(spark, sf).toPandas()
     key = lambda df: sorted(
         map(tuple, df[["word", "cnt", "n_pieces", "segmentation"]].values)
     )

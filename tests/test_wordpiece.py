@@ -1,5 +1,6 @@
 """Distributed WordPiece: exact equality with a pure-python reference
-(merge list, vocab, AND encodings), hand-verified likelihood-score
+(merge list, vocab, AND per-document token/word/UNK counts of the
+encoder), the memoized model, hand-verified likelihood-score
 merges on a constructed corpus, greedy-longest-match edge cases
 ([UNK] on dead ends and over-long words), and the BPE-vs-WordPiece
 behavioral difference the likelihood score exists to produce."""
@@ -9,15 +10,19 @@ from __future__ import annotations
 import re
 from collections import Counter
 
+import pytest
+
 from cc_mapreducer_spark.operators.wordpiece import (
     MAX_WORD_CHARS,
     UNK,
     _merged_symbol,
     encode_word_wordpiece,
-    encode_wordpiece,
+    encode_wordpiece_stats,
     train_wordpiece,
+    wordpiece_model,
     wordpiece_token_stats,
 )
+from cc_mapreducer_spark.tables import load_table
 from tests.conftest import SF_SMOKE
 
 
@@ -82,11 +87,15 @@ def _smoke_texts(spark):
     ]
 
 
-def test_trainer_matches_python_reference_exactly(spark):
-    from cc_mapreducer_spark.tables import load_table
+@pytest.fixture(scope="module")
+def smoke_model(spark):
+    """The default 40-merge model of the smoke corpus, trained once for
+    every test here that reads it."""
+    return train_wordpiece(load_table(spark, SF_SMOKE, "documents"))
 
-    docs = load_table(spark, SF_SMOKE, "documents")
-    got_merges, got_vocab = train_wordpiece(docs)
+
+def test_trainer_matches_python_reference_exactly(spark, smoke_model):
+    got_merges, got_vocab = smoke_model
     exp_merges, exp_vocab = _ref_train(_smoke_texts(spark))
     assert [(a, b) for a, b, _ in got_merges] == [
         (a, b) for a, b, _ in exp_merges
@@ -96,27 +105,25 @@ def test_trainer_matches_python_reference_exactly(spark):
     assert got_vocab == exp_vocab
 
 
-def test_encoder_matches_python_reference_exactly(spark):
-    from cc_mapreducer_spark.tables import load_table
-
+def test_encoder_matches_python_reference_exactly(spark, smoke_model):
+    """Per-document (n_tokens, n_words, n_unk) of each source, from the
+    stats-grain encoder, equal the pure-python MaxMatch's."""
+    _, vocab = smoke_model
     docs = load_table(spark, SF_SMOKE, "documents")
-    _, vocab = train_wordpiece(docs)
-    got = {
-        r["doc_id"]: list(r["tokens"])
-        for r in encode_wordpiece(docs, vocab).collect()
-    }
+    got = Counter(
+        tuple(r) for r in encode_wordpiece_stats(docs, vocab).collect()
+    )
     vset = set(vocab)
-    rows = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
-        "doc_id", "text"
-    ).collect()
-    for r in rows:
+    exp = Counter()
+    for r in docs.select("source", "text").collect():
         words = [
             w
             for w in re.sub("[^a-z]+", " ", r["text"].lower()).split()
             if w
         ]
-        exp = [t for w in words for t in encode_word_wordpiece(w, vset)]
-        assert got[r["doc_id"]] == exp, r["doc_id"]
+        toks = [t for w in words for t in encode_word_wordpiece(w, vset)]
+        exp[(r["source"], len(toks), len(words), toks.count(UNK))] += 1
+    assert got == exp
 
 
 def test_likelihood_score_beats_raw_count(spark):
@@ -163,15 +170,7 @@ def test_stats_compression_sane(spark):
     assert (df["tokens_per_word"] < 4.0).all()
 
 
-def test_saved_model_equals_inline_training(spark, tmp_path):
-    from cc_mapreducer_spark.operators.wordpiece import (
-        wordpiece_load_model,
-        wordpiece_save_model,
-    )
-    from cc_mapreducer_spark.tables import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    _, inline_vocab = train_wordpiece(docs)
-    path = str(tmp_path / "wp_model")
-    wordpiece_save_model(spark, SF_SMOKE, path)
-    assert wordpiece_load_model(spark, path) == inline_vocab
+def test_saved_model_equals_inline_training(spark, smoke_model):
+    """The model the memo holds for a corpus is the one inline training
+    learns, merge table and vocab alike."""
+    assert wordpiece_model(spark, SF_SMOKE) == smoke_model
