@@ -35,6 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from cc_mapreducer_spark.digest import digest_frame
 from cc_mapreducer_spark.functions.cdc_chunker import chunk_payload
 from cc_mapreducer_spark.operators.multimodal import _encode_one
 from cc_mapreducer_spark.registry import register
@@ -740,42 +741,18 @@ def binary_dedup_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_suite_artifacts_for); the zlib-container payloads keep their
     python-replica pin in binary_chunk_dedup / tests."""
 
-    def leg(df: DataFrame, component: str, entity, value) -> DataFrame:
-        return df.select(
-            F.lit(component).alias("component"),
-            entity.cast("string").alias("entity"),
-            value.cast("double").alias("value"),
-        )
-
     chunks = suite_chunk_table(spark, sf_dir)
-    rollup = _suite_rollup(chunks)
-    return (
-        leg(
-            chunks,
+    return digest_frame([
+        (chunks, [(
             "chunk",
-            F.concat_ws(
-                "|", "artifact_id", "chunk_idx", "offset", "length", "chunk_sha"
-            ),
-            F.lit(1.0),
-        )
-        .unionByName(
-            leg(rollup, "rollup:bytes", F.col("media_type"), F.col("total_bytes"))
-        )
-        .unionByName(
-            leg(rollup, "rollup:uniq", F.col("media_type"), F.col("unique_bytes"))
-        )
-        .unionByName(
-            leg(rollup, "rollup:chunks", F.col("media_type"), F.col("n_chunks"))
-        )
-        .unionByName(
-            leg(
-                rollup,
-                "rollup:uchunks",
-                F.col("media_type"),
-                F.col("n_unique_chunks"),
-            )
-        )
-        .unionByName(
-            leg(rollup, "rollup:ratio", F.col("media_type"), F.col("dedup_ratio"))
-        )
-    )
+            "concat_ws('|', artifact_id, chunk_idx, `offset`, `length`, chunk_sha)",
+            "1.0",
+        )]),
+        (_suite_rollup(chunks), [
+            ("rollup:bytes", "media_type", "total_bytes"),
+            ("rollup:uniq", "media_type", "unique_bytes"),
+            ("rollup:chunks", "media_type", "n_chunks"),
+            ("rollup:uchunks", "media_type", "n_unique_chunks"),
+            ("rollup:ratio", "media_type", "dedup_ratio"),
+        ]),
+    ])

@@ -72,6 +72,7 @@ from cc_mapreducer_spark.functions.media_codec import (
     _png_chunk,
     decode_png_pixels,
 )
+from cc_mapreducer_spark.digest import digest_frame
 from cc_mapreducer_spark.memo import persisted
 from cc_mapreducer_spark.operators.dedup import block_pair_probe
 from cc_mapreducer_spark.registry import register
@@ -461,32 +462,14 @@ def image_dedup_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     for why the whole pipeline is cross-engine checkable despite the
     zlib container: the fixture pixels are closed-form."""
 
-    def leg(df: DataFrame, component: str, entity, value) -> DataFrame:
-        return df.select(
-            F.lit(component).alias("component"),
-            entity.cast("string").alias("entity"),
-            value.cast("double").alias("value"),
-        )
-
-    fp = image_dhash_fingerprint(spark, sf_dir)
-    pairs = image_near_dup_pairs(spark, sf_dir)
-    cl = image_dup_clusters(spark, sf_dir)
-    return (
-        leg(
-            fp,
-            "fp",
-            F.concat_ws("|", "img_id", "doc_id", "variant", "dhash"),
-            F.lit(1.0),
-        )
-        .unionByName(
-            leg(pairs, "pair", F.concat_ws("|", "img_a", "img_b"), F.col("hamming"))
-        )
-        .unionByName(
-            leg(
-                cl,
-                "cluster",
-                F.concat_ws("|", "img_id", "cluster_id"),
-                F.col("is_keeper").cast("int"),
-            )
-        )
-    )
+    return digest_frame([
+        (image_dhash_fingerprint(spark, sf_dir), [
+            ("fp", "concat_ws('|', img_id, doc_id, variant, dhash)", "1.0"),
+        ]),
+        (image_near_dup_pairs(spark, sf_dir), [
+            ("pair", "concat_ws('|', img_a, img_b)", "hamming"),
+        ]),
+        (image_dup_clusters(spark, sf_dir), [
+            ("cluster", "concat_ws('|', img_id, cluster_id)", "is_keeper"),
+        ]),
+    ])

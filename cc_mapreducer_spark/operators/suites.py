@@ -1,193 +1,54 @@
-"""Driver digest suites for the round-4 sketch / feature / mining
-families (VERDICT r4 item 3).
+"""Driver digest suites for the sketch, feature, mining, acquisition,
+SimHash, similarity and multimodal families.
 
-The driver's correctness roster caps at 50 keys, so families that landed
-as driver=False singles never reached the driver's own hash artifact even
-though pytest parity-proves them. Following the ``tpch_suite_extra`` /
-``stats_unpivot_suite`` precedent, each suite here normalizes several
-component queries to a uniform ``(component, entity, value)`` long form
-and registers driver=True; the singles stay registered driver=False with
-their full schemas for pytest parity and direct use.
+The driver's correctness roster caps at 50 keys, so most families reach
+the driver's hash through a digest key: each suite below projects
+several registered component queries (its sources) into a uniform
+``(component, entity, value)`` long form and registers driver=True; the
+sources stay registered driver=False with their full schemas, each
+value-checked by its own oracle parity test.
 
-Digest normalization rules (shared with the other suites):
-  - ``entity`` is a '|'-joined string of the component's key columns —
-    every key column participates in the driver's value hash;
+A suite is a table of ``(source, legs)`` entries, and each leg is
+``(tag, entity_sql, value_sql)`` (cc_mapreducer_spark/digest.py):
+
+  - ``source`` names a registered query. Spark builds that query and
+    DuckDB runs that query's registered oracle, so the digest's oracle
+    is exactly its sources' independent oracles. Two sources are not
+    plain registered queries and are written as explicit
+    ``(frame builder, oracle SQL)`` pairs: the ADPCM geometry and the
+    per-slice PSI totals;
+  - ``entity`` is a '|'-joined string of the component's key columns,
+    so every key column lands in the driver's value hash;
   - ``value`` is a double; booleans hash as 0/1; integer metrics cast
     exactly (all are far below 2^53);
-  - multi-metric rows fan out to one digest row per metric with a
-    ``component:metric`` tag, so no value column is dropped.
+  - a multi-metric row fans out to one digest row per leg, tagged
+    ``component:metric``.
 
-Scale shape: a digest is a UNION of its components plus a projection —
-it adds no shuffle beyond what the components already do, so the
-100 TB story of each component (documented at its definition) carries
-over unchanged.
+The legs hash chosen columns, not every column of every source: for
+example ``crawl_e2e_funnel.n_fetched``, ``c4_filter_funnel.lines_in``
+and ``span_removal.removed_tokens`` are read by no leg. Those columns
+are checked by the sources' own parity tests.
+
+Scale shape: one projection per source (an ``inline`` generator that
+emits one row per leg), the projections unioned. Each source appears
+once in the plan, however many legs read it, and the digest adds no
+shuffle beyond its sources' own, so the 100 TB story of each source
+(documented at its definition) carries over unchanged.
+
+The tables name their sources through the registry, so every source
+module must be imported (operators/__init__.py) before this one.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from cc_mapreducer_spark.registry import register
-
-from cc_mapreducer_spark.operators.sketches import _cms_sql, cms_word_counts
-from cc_mapreducer_spark.operators.heavyhitters import (
-    _TOPK_OTHER_SQL,
-    _hh_sql,
-    event_type_topk_rollup,
-    heavy_hitter_words,
-)
-from cc_mapreducer_spark.operators.dq import (
-    _APPROX_QUANTILE_SQL,
-    _emb_drift_sql,
-    approx_quantile_contract,
-    embedding_drift_psi,
-)
-from cc_mapreducer_spark.operators.graph import _TRIANGLE_SQL, item_triangle_stats
-from cc_mapreducer_spark.operators.kmv import (
-    _KMV_CARD_SQL,
-    _KMV_OVERLAP_SQL,
-    kmv_corpus_overlap,
-    kmv_shingle_cardinality,
-)
+from cc_mapreducer_spark.digest import digest_frame, digest_sql
+from cc_mapreducer_spark.operators.dq import embedding_drift_psi
 from cc_mapreducer_spark.operators.multimodal import adpcm_codec_stats
-from cc_mapreducer_spark.operators.features import (
-    _PCT_RANK_SQL,
-    _TARGET_ENC_SQL,
-    price_percent_rank,
-    target_encoded_orders,
-)
-from cc_mapreducer_spark.operators.search import _TFIDF_SQL, tfidf_doc_keywords
-from cc_mapreducer_spark.operators.classifier import (
-    _eval_sql,
-    classifier_eval_metrics,
-)
-from cc_mapreducer_spark.operators.linkage import (
-    _LINKAGE_SQL,
-    record_linkage_parts,
-)
-from cc_mapreducer_spark.operators.contrastive import (
-    _CONTRASTIVE_SQL,
-    contrastive_negatives,
-)
-from cc_mapreducer_spark.operators.dedup import (
-    _DEDUP_RATE_SQL,
-    _SIMHASH_PAIRS_SQL,
-    _SIMHASH_SQL,
-    dedup_rate_by_source,
-    simhash_fingerprint,
-    simhash_near_pairs,
-)
-from cc_mapreducer_spark.operators.similarity import (
-    _ANN_SQL,
-    _BRUTE_SQL,
-    similarity_topk_bruteforce,
-    similarity_topk_signlsh,
-)
-from cc_mapreducer_spark.operators.multimodal import (
-    _BINARY_STATS_SQL,
-    _DERIVED_SQL,
-    multimodal_binary_stats,
-    multimodal_derived,
-)
-from cc_mapreducer_spark.operators.spans import (
-    _SPAN_DECONTAM_SQL,
-    _SPAN_MULTI_SQL,
-    _SPAN_REMOVAL_L32_SQL,
-    _SPAN_REMOVAL_SQL,
-    span_decontamination,
-    span_dup_coverage_multi,
-    span_removal,
-    span_removal_l32,
-)
-from cc_mapreducer_spark.operators.acquisition import (
-    _ADMISSION_SQL,
-    _CHAIN_DOC_SQL,
-    _CHAIN_ROLLUP_SQL,
-    _DOMAIN_ROLLUP_SQL,
-    _HTML_STRIP_SQL,
-    _FRONTIER_SQL,
-    _POLICY_FILTER_SQL,
-    _ROBOTS_FILTER_SQL,
-    _ROBOTS_W_SQL,
-    _URL_CANON_SQL,
-    acquisition_chain_profile,
-    acquisition_chain_rollup,
-    acquisition_policy_filter,
-    crawl_admission_report,
-    crawl_frontier_schedule,
-    domain_acquisition_rollup,
-    html_strip_stats,
-    robots_policy_filter,
-    robots_wildcard_filter,
-    url_canonical_stats,
-)
-from cc_mapreducer_spark.operators.crawl_e2e import (
-    _E2E_SQL,
-    crawl_e2e_funnel,
-)
-from cc_mapreducer_spark.operators.c4_filters import (
-    _C4_DOC_SQL,
-    _C4_FUNNEL_SQL,
-    c4_filter_funnel,
-    c4_line_filter_stats,
-)
-from cc_mapreducer_spark.operators.extraction import (
-    _CONTENT_YIELD_SQL,
-    _MAIN_CONTENT_SQL,
-    content_yield_by_source,
-    main_content_extract,
-)
-from cc_mapreducer_spark.operators.linkgraph import (
-    _EDGES_SQL,
-    _PAGERANK_SQL,
-    domain_link_edges,
-    domain_pagerank,
-)
-from cc_mapreducer_spark.operators.robots_txt import (
-    _ROBOTS_TXT_STATS_SQL,
-    robots_txt_directives,
-    robots_txt_gate,
-)
-from cc_mapreducer_spark.operators.sitemap import (
-    _RECRAWL_SQL,
-    _SITEMAP_RT_SQL,
-    sitemap_recrawl_schedule,
-    sitemap_roundtrip_stats,
-)
-from cc_mapreducer_spark.operators.warc_ingest import (
-    _REVISIT_SQL,
-    _SEGMENT_SQL,
-    _WARC_STATS_SQL,
-    _wet_sql,
-    warc_acquisition_chain,
-    warc_response_stats,
-    warc_revisit_resolution,
-    warc_segment_reassembly,
-    wet_export_roundtrip,
-)
+from cc_mapreducer_spark.registry import all_oracles, all_queries, register
 
-
-def _leg(
-    df: DataFrame, component: str, entity: F.Column, value: F.Column
-) -> DataFrame:
-    return df.select(
-        F.lit(component).alias("component"),
-        entity.cast("string").alias("entity"),
-        value.cast("double").alias("value"),
-    )
-
-
-def _union(parts: list[DataFrame]) -> DataFrame:
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# sketches_suite: CMS estimates+bound flags ⊕ Misra-Gries heavy hitters
-# ⊕ approx-quantile contract
-# ---------------------------------------------------------------------------
+_ORACLES = all_oracles()
 
 # ADPCM witnesses the driver CAN hash: container geometry and the
 # first decoded sample are closed-form (the sample-recursive waveform
@@ -207,998 +68,336 @@ SELECT doc_id,
 FROM documents WHERE length(text) > 0
 """
 
-_SKETCHES_SUITE_SQL = f"""
-SELECT 'cms:true' AS component, word AS entity, CAST(true_cnt AS DOUBLE) AS value
-FROM ({_cms_sql()})
-UNION ALL
-SELECT 'cms:est', word, CAST(cms_est AS DOUBLE) FROM ({_cms_sql()})
-UNION ALL
-SELECT 'cms:within', word, CAST(CAST(within_eps AS INT) AS DOUBLE) FROM ({_cms_sql()})
-UNION ALL
-SELECT 'mg', word, CAST(cnt AS DOUBLE) FROM ({_hh_sql()})
-UNION ALL
-SELECT 'q:p50', l_returnflag, exact_p50 FROM ({_APPROX_QUANTILE_SQL})
-UNION ALL
-SELECT 'q:p95', l_returnflag, exact_p95 FROM ({_APPROX_QUANTILE_SQL})
-UNION ALL
-SELECT 'q:within', l_returnflag, CAST(CAST(within_bound AS INT) AS DOUBLE)
-FROM ({_APPROX_QUANTILE_SQL})
-UNION ALL
-SELECT 'tri:deg', CAST(item AS VARCHAR), CAST(degree AS DOUBLE)
-FROM ({_TRIANGLE_SQL})
-UNION ALL
-SELECT 'tri:n', CAST(item AS VARCHAR), CAST(n_triangles AS DOUBLE)
-FROM ({_TRIANGLE_SQL})
-UNION ALL
-SELECT 'tri:cc', CAST(item AS VARCHAR), clustering_coeff
-FROM ({_TRIANGLE_SQL})
-UNION ALL
-SELECT 'adpcm:n', CAST(doc_id AS VARCHAR), CAST(n_samples AS DOUBLE)
-FROM ({_ADPCM_GEOM_SQL})
-UNION ALL
-SELECT 'adpcm:bytes', CAST(doc_id AS VARCHAR), CAST(adpcm_bytes AS DOUBLE)
-FROM ({_ADPCM_GEOM_SQL})
-UNION ALL
-SELECT 'adpcm:s0', CAST(doc_id AS VARCHAR), CAST(first_sample AS DOUBLE)
-FROM ({_ADPCM_GEOM_SQL})
-UNION ALL
-SELECT 'kmv:exact', source, CAST(n_exact AS DOUBLE) FROM ({_KMV_CARD_SQL})
-UNION ALL
-SELECT 'kmv:est', source, est_distinct FROM ({_KMV_CARD_SQL})
-UNION ALL
-SELECT 'kmv:jacc', source_a || '|' || source_b, est_jaccard
-FROM ({_KMV_OVERLAP_SQL})
-UNION ALL
-SELECT 'kmv:xjacc', source_a || '|' || source_b, exact_jaccard
-FROM ({_KMV_OVERLAP_SQL})
-"""
+
+def _psi_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return embedding_drift_psi(spark, sf_dir).select("slice", "psi_total").distinct()
 
 
-@register("sketches_suite", oracle=_SKETCHES_SUITE_SQL)
-def sketches_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver digest of the sketch family: count-min word-count estimates
-    with their exact counts and eps-bound verdicts (sketches.py), the
-    Misra-Gries heavy-hitter words (heavyhitters.py), the
-    approx-quantile contract (exact p50/p95 + the approx-within-bound
-    flag, dq.py), and — round 7 — the degree-oriented triangle counts /
-    clustering coefficients (graph.py, full per-node values against the
-    SQL oracle) plus the integer-exact ADPCM codec witnesses (container
-    geometry + first decoded sample against a closed-form derivation;
-    the waveform sha stays pytest-pinned, multimodal.py), and — round 8
-    session 2 — the KMV/theta sketch contract (kmv.py: per-source exact
-    vs estimated distinct-shingle counts, and per-source-pair estimated
-    vs exact Jaccard — all deterministic md5-48 hash-space math). Every
-    value of every component lands in the driver's hash; the full-schema singles
-    stay driver=False for pytest parity."""
-    cms = cms_word_counts(spark, sf_dir)
-    quant = approx_quantile_contract(spark, sf_dir)
-    tri = item_triangle_stats(spark, sf_dir)
-    adpcm = adpcm_codec_stats(spark, sf_dir)
-    kmv_card = kmv_shingle_cardinality(spark, sf_dir)
-    kmv_olap = kmv_corpus_overlap(spark, sf_dir)
-    return _union(
-        [
-            _leg(cms, "cms:true", F.col("word"), F.col("true_cnt")),
-            _leg(cms, "cms:est", F.col("word"), F.col("cms_est")),
-            _leg(cms, "cms:within", F.col("word"), F.col("within_eps").cast("int")),
-            _leg(
-                heavy_hitter_words(spark, sf_dir), "mg", F.col("word"), F.col("cnt")
-            ),
-            _leg(quant, "q:p50", F.col("l_returnflag"), F.col("exact_p50")),
-            _leg(quant, "q:p95", F.col("l_returnflag"), F.col("exact_p95")),
-            _leg(
-                quant,
-                "q:within",
-                F.col("l_returnflag"),
-                F.col("within_bound").cast("int"),
-            ),
-            _leg(tri, "tri:deg", F.col("item"), F.col("degree")),
-            _leg(tri, "tri:n", F.col("item"), F.col("n_triangles")),
-            _leg(tri, "tri:cc", F.col("item"), F.col("clustering_coeff")),
-            _leg(adpcm, "adpcm:n", F.col("doc_id"), F.col("n_samples")),
-            _leg(adpcm, "adpcm:bytes", F.col("doc_id"), F.col("adpcm_bytes")),
-            _leg(adpcm, "adpcm:s0", F.col("doc_id"), F.col("first_sample")),
-            _leg(kmv_card, "kmv:exact", F.col("source"), F.col("n_exact")),
-            _leg(kmv_card, "kmv:est", F.col("source"), F.col("est_distinct")),
-            _leg(
-                kmv_olap,
-                "kmv:jacc",
-                F.concat_ws("|", "source_a", "source_b"),
-                F.col("est_jaccard"),
-            ),
-            _leg(
-                kmv_olap,
-                "kmv:xjacc",
-                F.concat_ws("|", "source_a", "source_b"),
-                F.col("exact_jaccard"),
-            ),
-        ]
-    )
+_PSI_TOTALS_SQL = (
+    "SELECT DISTINCT slice, psi_total "
+    f"FROM ({_ORACLES['embedding_drift_psi']})"
+)
+
+# count-min estimates with their exact counts and eps-bound verdicts,
+# the Misra-Gries heavy hitters, the approx-quantile contract, the
+# triangle counts / clustering coefficients, the ADPCM codec witnesses,
+# and the KMV/theta sketch contract (exact vs estimated distinct
+# shingles per source, estimated vs exact Jaccard per source pair)
+SKETCHES = [
+    ("cms_word_counts", [
+        ("cms:true", "word", "true_cnt"),
+        ("cms:est", "word", "cms_est"),
+        ("cms:within", "word", "within_eps"),
+    ]),
+    ("heavy_hitter_words", [("mg", "word", "cnt")]),
+    ("approx_quantile_contract", [
+        ("q:p50", "l_returnflag", "exact_p50"),
+        ("q:p95", "l_returnflag", "exact_p95"),
+        ("q:within", "l_returnflag", "within_bound"),
+    ]),
+    ("item_triangle_stats", [
+        ("tri:deg", "item", "degree"),
+        ("tri:n", "item", "n_triangles"),
+        ("tri:cc", "item", "clustering_coeff"),
+    ]),
+    ((adpcm_codec_stats, _ADPCM_GEOM_SQL), [
+        ("adpcm:n", "doc_id", "n_samples"),
+        ("adpcm:bytes", "doc_id", "adpcm_bytes"),
+        ("adpcm:s0", "doc_id", "first_sample"),
+    ]),
+    ("kmv_shingle_cardinality", [
+        ("kmv:exact", "source", "n_exact"),
+        ("kmv:est", "source", "est_distinct"),
+    ]),
+    ("kmv_corpus_overlap", [
+        ("kmv:jacc", "concat_ws('|', source_a, source_b)", "est_jaccard"),
+        ("kmv:xjacc", "concat_ws('|', source_a, source_b)", "exact_jaccard"),
+    ]),
+]
+
+# skew-safe percent-rank over lineitem prices, smoothed + leave-one-out
+# target encoding of order priorities, and the top-k/OTHER rollup
+_ORDER_KEY = "concat_ws('|', o_orderkey, o_orderpriority)"
+FEATURES = [
+    ("price_percent_rank", [(
+        "pct_rank",
+        "concat_ws('|', l_orderkey, l_linenumber, l_returnflag)",
+        "pct_rank",
+    )]),
+    ("target_encoded_orders", [
+        ("enc:smooth", _ORDER_KEY, "enc_smoothed"),
+        ("enc:loo", _ORDER_KEY, "enc_loo"),
+    ]),
+    ("event_type_topk_rollup", [
+        ("topk:n", "label", "n_events"),
+        ("topk:v", "label", "total_value"),
+    ]),
+]
+
+# the text-mining family: TF-IDF keywords, the frozen-classifier eval
+# metrics (tie-aware AUC + confusion), embedding PSI drift, FastSS record
+# linkage, contrastive hash-jump negatives, the ExactSubstr span family
+# (duplicate-span coverage, decontamination, keep-one removal) and
+# per-source dedup telemetry. The removal legs carry the first 48 bits
+# of the cleaned text's md5 in the entity, as the SimHash ``fp`` leg
+# carries its fingerprint.
+_TFIDF_KEY = "concat_ws('|', doc_id, rank, word)"
+_PSI_KEY = "concat_ws('|', slice, bin)"
+_LINK_KEY = "concat_ws('|', b_id, a_id)"
+_REMOVAL_KEY = "concat_ws('|', doc_id, substr(md5(cleaned_text), 1, 12))"
+_EVAL_METRICS = (
+    "n_pos", "n_neg", "tp", "fp", "fn", "tn",
+    "auc", "accuracy", "precision_en", "recall_en",
+)
+MINING = [
+    ("tfidf_doc_keywords", [
+        ("tfidf", _TFIDF_KEY, "score"),
+        ("tfidf:tf", _TFIDF_KEY, "tf"),
+    ]),
+    ("classifier_eval_metrics", [("eval", f"'{m}'", m) for m in _EVAL_METRICS]),
+    ("embedding_drift_psi", [
+        ("psi", _PSI_KEY, "psi_contrib"),
+        ("psi:nref", _PSI_KEY, "n_ref"),
+        ("psi:ncur", _PSI_KEY, "n_cur"),
+    ]),
+    ((_psi_totals, _PSI_TOTALS_SQL), [("psi_total", "slice", "psi_total")]),
+    ("record_linkage_parts", [
+        ("link:score", _LINK_KEY, "score"),
+        ("link:dist", _LINK_KEY, "dist"),
+        ("link:flags", _LINK_KEY,
+         "2 * CAST(brand_match AS INT) + CAST(type_match AS INT)"),
+    ]),
+    ("contrastive_negatives", [
+        ("contrast", "concat_ws('|', doc_id, rank)", "neg_id"),
+    ]),
+    ("span_dup_coverage_multi", [
+        ("span:cov", "doc_id", "covered_l8"),
+        ("span:frac", "doc_id", "cov_l8"),
+        ("span32:cov", "doc_id", "covered_l32"),
+        ("span32:frac", "doc_id", "cov_l32"),
+    ]),
+    ("span_decontamination", [
+        ("decon:n", "doc_id", "n_contaminated"),
+        ("decon:flag", "doc_id", "flagged"),
+    ]),
+    ("dedup_rate_by_source", [
+        ("deduprate:dups", "source", "n_dup_docs"),
+        ("deduprate:waste", "source", "tokens_wasted"),
+        ("deduprate:frac", "source", "dup_doc_frac"),
+    ]),
+    ("span_removal", [
+        ("removal:kept", "doc_id", "kept_tokens"),
+        ("removal:h", _REMOVAL_KEY, "1.0"),
+    ]),
+    ("span_removal_l32", [
+        ("removal32:kept", "doc_id", "kept_tokens"),
+        ("removal32:h", _REMOVAL_KEY, "1.0"),
+    ]),
+]
+
+# the crawl-to-corpus family: HTML strip with a content-pinning hash,
+# URL canonicalization, the per-domain rollup, the composed
+# strip->canonicalize->tokenize chain, the WARC round-trip witnesses, the
+# crawl-policy and robots.txt gates, the composed admission decision,
+# the frontier schedule, segmented-record reassembly, main-content
+# extraction, the C4 cleaning battery, sitemap discovery and recrawl,
+# robots.txt TEXT parsing, the end-to-end funnel and the domain link
+# graph with its 10-iteration PageRank. The ``warcchain:*`` legs run the
+# WARC path (bytes -> response records -> the chain) against the SAME
+# oracle as the batch chain, and ``rbtxt:gate`` runs the gate fed from
+# parsed robots.txt text against the structured gate's oracle, so both
+# round trips are checked to be semantic no-ops per value.
+_DOC_URL = "concat_ws('|', doc_id, domain, canonical_url)"
+_DOC_URI = "concat_ws('|', doc_id, target_uri)"
+_DOC_RULE = "concat_ws('|', doc_id, coalesce(robots_rule, '-'))"
+ACQUISITION = [
+    ("html_strip_stats", [
+        ("html:h", "doc_id", "clean_h"),
+        ("html:len", "doc_id", "n_chars_clean"),
+        ("html:tags", "doc_id", "n_tags"),
+    ]),
+    ("url_canonical_stats", [
+        ("url:canon", "concat_ws('|', doc_id, canonical_url)", "n_params"),
+    ]),
+    ("domain_acquisition_rollup", [
+        ("domain:docs", "domain", "n_docs"),
+        ("domain:dups", "domain", "n_dup_docs"),
+        ("domain:tokens", "domain", "tokens_total"),
+        ("domain:frac", "domain", "dup_doc_frac"),
+    ]),
+    ("acquisition_chain_profile", [
+        ("chain:h", _DOC_URL, "clean_h"),
+        ("chain:tok", "doc_id", "n_tokens"),
+        ("chain:utok", "doc_id", "n_distinct_tokens"),
+    ]),
+    ("acquisition_chain_rollup", [
+        ("chaindom:docs", "domain", "n_docs"),
+        ("chaindom:tokens", "domain", "tokens_total"),
+        ("chaindom:frac", "domain", "dup_doc_frac"),
+    ]),
+    ("warc_response_stats", [
+        ("warc:h", _DOC_URI, "body_h"),
+        ("warc:len", "doc_id", "block_len"),
+        ("warc:clen", "doc_id", "content_len"),
+        ("warc:status", "doc_id", "http_status"),
+    ]),
+    ("warc_acquisition_chain", [
+        ("warcchain:h", _DOC_URL, "clean_h"),
+        ("warcchain:tok", "doc_id", "n_tokens"),
+        ("warcchain:utok", "doc_id", "n_distinct_tokens"),
+    ]),
+    ("wet_export_roundtrip", [
+        ("wet:h", _DOC_URI, "clean_h"),
+        ("wet:len", "doc_id", "wet_block_len"),
+    ]),
+    ("warc_revisit_resolution", [
+        ("revisit:resolved", "concat_ws('|', doc_id, target_uri, digest)",
+         "resolved_doc"),
+        ("revisit:saved", "doc_id", "saved_bytes"),
+        ("revisit:blen", "doc_id", "revisit_block_len"),
+    ]),
+    ("acquisition_policy_filter", [(
+        "policy",
+        "concat_ws('|', doc_id, verdict)",
+        "CASE verdict WHEN 'ok' THEN 0 WHEN 'blocked_domain' THEN 1 ELSE 2 END",
+    )]),
+    ("robots_policy_filter", [("robots", _DOC_RULE, "robots_allowed")]),
+    ("crawl_admission_report", [
+        ("admit", "concat_ws('|', doc_id, decision)", "admitted"),
+    ]),
+    ("robots_wildcard_filter", [("robotsw", _DOC_RULE, "robots_allowed")]),
+    ("crawl_frontier_schedule", [
+        ("frontier:slot", "concat_ws('|', doc_id, domain)", "slot"),
+        ("frontier:t", "doc_id", "fetch_offset_ms"),
+    ]),
+    ("warc_segment_reassembly", [
+        ("seg:h", "concat_ws('|', doc_id, te)", "body_h"),
+        ("seg:n", "doc_id", "n_segments"),
+        ("seg:blen", "doc_id", "block_len"),
+    ]),
+    ("main_content_extract", [
+        ("extract:h", "doc_id", "main_h"),
+        ("extract:chars", "doc_id", "content_chars * 100000 + boiler_chars"),
+    ]),
+    ("content_yield_by_source", [("yield:frac", "source", "content_yield")]),
+    ("c4_line_filter_stats", [
+        ("c4:h", "concat_ws('|', doc_id, verdict)", "kept_h"),
+        ("c4:lines", "doc_id", "n_lines * 1000 + n_kept_lines"),
+    ]),
+    ("c4_filter_funnel", [(
+        "c4funnel",
+        "concat_ws('|', source, verdict)",
+        "n_docs * 1000000 + lines_kept",
+    )]),
+    ("sitemap_roundtrip_stats", [
+        ("sitemap:bytes", "concat_ws('|', doc_id, host)", "file_bytes"),
+        ("sitemap:meta",
+         "concat_ws('|', doc_id, lastmod, changefreq, priority)", "file_no"),
+    ]),
+    ("sitemap_recrawl_schedule", [
+        ("recrawl:due", "concat_ws('|', doc_id, domain)", "is_due"),
+        ("recrawl:slot", "doc_id", "coalesce(fetch_offset_ms, -1)"),
+    ]),
+    ("robots_txt_directives", [
+        ("rbtxt:rules", "concat_ws('|', domain, sitemap_url)", "rules_h"),
+        ("rbtxt:delay", "domain", "crawl_delay"),
+    ]),
+    ("robots_txt_gate", [("rbtxt:gate", _DOC_RULE, "robots_allowed")]),
+    # packed numbers stay exact in a double far past any fixture scale
+    # (< 2^53); e2e:pack hashes the funnel's corpus-to-contexts hand-off
+    ("crawl_e2e_funnel", [
+        ("e2e:funnel", "domain",
+         "((n_urls * 1000 + n_admitted) * 1000 + n_quality_ok) * 1000"
+         " + n_unique"),
+        ("e2e:tokens", "domain", "tokens_shipped"),
+        ("e2e:content", "domain", "content_sum"),
+        ("e2e:revisit", "domain", "n_revisits * 1000 + n_revisit_resolved"),
+        ("e2e:saved", "domain", "revisit_saved_bytes"),
+        ("e2e:pack", "domain",
+         "(pack_contexts * 100000 + pack_padding) * 100000 + pack_fragments"),
+    ]),
+    ("domain_link_edges", [
+        ("edges:n", "concat_ws('|', src_domain, dst_domain)", "n_links"),
+    ]),
+    ("domain_pagerank", [
+        ("pagerank:rank", "domain", "rank"),
+        ("pagerank:out", "domain", "n_out_links"),
+    ]),
+]
+
+# every document's 64-bit SimHash fingerprint (hex, in the entity so all
+# 64 bits land in the hash) plus every near-dup pair within Hamming
+# radius 6; the pair oracle is the brute-force all-pairs spec, so a
+# green hash shows the block-pair probe drops nothing
+SIMHASH = [
+    ("simhash_fingerprint", [("fp", "concat_ws('|', doc_id, simhash)", "1.0")]),
+    ("simhash_near_pairs", [
+        ("pair", "concat_ws('|', doc_a, doc_b)", "hamming"),
+    ]),
+]
+
+# the exact brute-force and the multi-table sign-LSH embedding top-k,
+# (query, neighbor, rank) in the entity, the rounded cosine as the value
+_TOPK_KEY = "concat_ws('|', query_id, vec_id, rn)"
+SIMILARITY = [
+    ("similarity_topk_bruteforce", [("brute", _TOPK_KEY, "cosine")]),
+    ("similarity_topk_signlsh", [("lsh", _TOPK_KEY, "cosine")]),
+]
+
+# the metadata-only binary stats rollup and every field of the decoded
+# media derivation, one leg per field over ALL rows with nulls coalesced
+# to -1 (a PNG has no sample_rate, a decoded row has no frame_idx), so no
+# filter can drop a row from the hash
+_MEDIA_KEY = "concat_ws('|', doc_id, kind, media_type, coalesce(frame_idx, -1))"
+MULTIMODAL = [
+    ("multimodal_binary_stats", [
+        ("bin:items", "media_type", "n_items"),
+        ("bin:bytes", "media_type", "total_bytes"),
+        ("bin:maxb", "media_type", "max_bytes"),
+        ("bin:uniq", "media_type", "n_distinct_payloads"),
+    ]),
+    ("multimodal_derived", [
+        (f"drv:{tag}", _MEDIA_KEY, f"coalesce({col}, -1)")
+        for tag, col in (
+            ("w", "width"), ("h", "height"), ("ch", "channels"),
+            ("sr", "sample_rate"), ("ns", "n_samples"),
+            ("dur", "duration_ms"), ("flen", "frame_len"),
+        )
+    ]),
+]
+
+SUITES = {
+    "sketches_suite": SKETCHES,
+    "features_suite": FEATURES,
+    "mining_suite": MINING,
+    "acquisition_suite": ACQUISITION,
+    "simhash_suite": SIMHASH,
+    "similarity_suite": SIMILARITY,
+    "multimodal_suite": MULTIMODAL,
+}
 
 
-# ---------------------------------------------------------------------------
-# features_suite: skew-safe percent-rank ⊕ smoothed+LOO target encoding
-# ⊕ top-k/OTHER rollup
-# ---------------------------------------------------------------------------
-
-_FEATURES_SUITE_SQL = f"""
-SELECT 'pct_rank' AS component,
-       CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)
-         || '|' || l_returnflag AS entity,
-       pct_rank AS value
-FROM ({_PCT_RANK_SQL})
-UNION ALL
-SELECT 'enc:smooth', CAST(o_orderkey AS VARCHAR) || '|' || o_orderpriority,
-       enc_smoothed FROM ({_TARGET_ENC_SQL})
-UNION ALL
-SELECT 'enc:loo', CAST(o_orderkey AS VARCHAR) || '|' || o_orderpriority,
-       enc_loo FROM ({_TARGET_ENC_SQL})
-UNION ALL
-SELECT 'topk:n', label, CAST(n_events AS DOUBLE) FROM ({_TOPK_OTHER_SQL})
-UNION ALL
-SELECT 'topk:v', label, total_value FROM ({_TOPK_OTHER_SQL})
-"""
-
-
-@register("features_suite", oracle=_FEATURES_SUITE_SQL)
-def features_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver digest of the feature-transform family: skew-safe
-    percent-rank over lineitem prices, smoothed + leave-one-out target
-    encoding of order priorities, and the top-k/OTHER long-tail rollup
-    (features.py, heavyhitters.py)."""
-    pct = price_percent_rank(spark, sf_dir)
-    enc = target_encoded_orders(spark, sf_dir)
-    enc_ent = F.concat_ws("|", "o_orderkey", "o_orderpriority")
-    topk = event_type_topk_rollup(spark, sf_dir)
-    return _union(
-        [
-            _leg(
-                pct,
-                "pct_rank",
-                F.concat_ws("|", "l_orderkey", "l_linenumber", "l_returnflag"),
-                F.col("pct_rank"),
-            ),
-            _leg(enc, "enc:smooth", enc_ent, F.col("enc_smoothed")),
-            _leg(enc, "enc:loo", enc_ent, F.col("enc_loo")),
-            _leg(topk, "topk:n", F.col("label"), F.col("n_events")),
-            _leg(topk, "topk:v", F.col("label"), F.col("total_value")),
-        ]
-    )
-
-
-# ---------------------------------------------------------------------------
-# mining_suite: TF-IDF keywords ⊕ classifier eval ⊕ embedding PSI drift
-# ⊕ record linkage ⊕ contrastive negatives
-# ---------------------------------------------------------------------------
-
-_MINING_SUITE_SQL = f"""
-SELECT 'tfidf' AS component,
-       CAST(doc_id AS VARCHAR) || '|' || CAST(rank AS VARCHAR) || '|' || word AS entity,
-       score AS value
-FROM ({_TFIDF_SQL})
-UNION ALL
-SELECT 'tfidf:tf', CAST(doc_id AS VARCHAR) || '|' || CAST(rank AS VARCHAR) || '|' || word,
-       CAST(tf AS DOUBLE) FROM ({_TFIDF_SQL})
-UNION ALL
-SELECT 'eval', metric, value
-FROM (
-  SELECT CAST(n_pos AS DOUBLE) AS n_pos, CAST(n_neg AS DOUBLE) AS n_neg,
-         CAST(tp AS DOUBLE) AS tp, CAST(fp AS DOUBLE) AS fp,
-         CAST(fn AS DOUBLE) AS fn, CAST(tn AS DOUBLE) AS tn,
-         auc, accuracy, precision_en, recall_en
-  FROM ({_eval_sql()})
-) UNPIVOT (value FOR metric IN (n_pos, n_neg, tp, fp, fn, tn, auc,
-                                accuracy, precision_en, recall_en))
-UNION ALL
-SELECT 'psi', slice || '|' || bin, psi_contrib FROM ({_emb_drift_sql()})
-UNION ALL
-SELECT 'psi:nref', slice || '|' || bin, CAST(n_ref AS DOUBLE) FROM ({_emb_drift_sql()})
-UNION ALL
-SELECT 'psi:ncur', slice || '|' || bin, CAST(n_cur AS DOUBLE) FROM ({_emb_drift_sql()})
-UNION ALL
-SELECT DISTINCT 'psi_total', slice, psi_total FROM ({_emb_drift_sql()})
-UNION ALL
-SELECT 'link:score', CAST(b_id AS VARCHAR) || '|' || CAST(a_id AS VARCHAR),
-       CAST(score AS DOUBLE) FROM ({_LINKAGE_SQL})
-UNION ALL
-SELECT 'link:dist', CAST(b_id AS VARCHAR) || '|' || CAST(a_id AS VARCHAR),
-       CAST(dist AS DOUBLE) FROM ({_LINKAGE_SQL})
-UNION ALL
-SELECT 'link:flags', CAST(b_id AS VARCHAR) || '|' || CAST(a_id AS VARCHAR),
-       CAST(2 * CAST(brand_match AS INT) + CAST(type_match AS INT) AS DOUBLE)
-FROM ({_LINKAGE_SQL})
-UNION ALL
-SELECT 'contrast', CAST(doc_id AS VARCHAR) || '|' || CAST(rank AS VARCHAR),
-       CAST(neg_id AS DOUBLE) FROM ({_CONTRASTIVE_SQL})
-UNION ALL
-SELECT 'span:cov', CAST(doc_id AS VARCHAR), CAST(covered_l8 AS DOUBLE)
-FROM ({_SPAN_MULTI_SQL})
-UNION ALL
-SELECT 'span:frac', CAST(doc_id AS VARCHAR), cov_l8
-FROM ({_SPAN_MULTI_SQL})
-UNION ALL
-SELECT 'span32:cov', CAST(doc_id AS VARCHAR), CAST(covered_l32 AS DOUBLE)
-FROM ({_SPAN_MULTI_SQL})
-UNION ALL
-SELECT 'span32:frac', CAST(doc_id AS VARCHAR), cov_l32
-FROM ({_SPAN_MULTI_SQL})
-UNION ALL
-SELECT 'decon:n', CAST(doc_id AS VARCHAR), CAST(n_contaminated AS DOUBLE)
-FROM ({_SPAN_DECONTAM_SQL})
-UNION ALL
-SELECT 'decon:flag', CAST(doc_id AS VARCHAR),
-       CAST(CAST(flagged AS INT) AS DOUBLE)
-FROM ({_SPAN_DECONTAM_SQL})
-UNION ALL
-SELECT 'deduprate:dups', source, CAST(n_dup_docs AS DOUBLE)
-FROM ({_DEDUP_RATE_SQL})
-UNION ALL
-SELECT 'deduprate:waste', source, CAST(tokens_wasted AS DOUBLE)
-FROM ({_DEDUP_RATE_SQL})
-UNION ALL
-SELECT 'deduprate:frac', source, dup_doc_frac
-FROM ({_DEDUP_RATE_SQL})
-UNION ALL
-SELECT 'removal:kept', CAST(doc_id AS VARCHAR), CAST(kept_tokens AS DOUBLE)
-FROM ({_SPAN_REMOVAL_SQL})
-UNION ALL
-SELECT 'removal:h', CAST(doc_id AS VARCHAR),
-       CAST(('0x' || substr(md5(cleaned_text), 1, 12))::BIGINT AS DOUBLE)
-FROM ({_SPAN_REMOVAL_SQL})
-UNION ALL
-SELECT 'removal32:kept', CAST(doc_id AS VARCHAR), CAST(kept_tokens AS DOUBLE)
-FROM ({_SPAN_REMOVAL_L32_SQL})
-UNION ALL
-SELECT 'removal32:h', CAST(doc_id AS VARCHAR),
-       CAST(('0x' || substr(md5(cleaned_text), 1, 12))::BIGINT AS DOUBLE)
-FROM ({_SPAN_REMOVAL_L32_SQL})
-"""
-
-
-@register("mining_suite", oracle=_MINING_SUITE_SQL)
-def mining_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver digest of the mining family: per-doc TF-IDF keywords
-    (search.py), the frozen-classifier eval metrics (tie-aware AUC +
-    confusion, classifier.py), embedding PSI drift contributions
-    (dq.py), FastSS record linkage (linkage.py), contrastive hash-jump
-    negatives (contrastive.py), and — round 5 — the ExactSubstr span
-    family (per-doc duplicate-span coverage + GPT-3-style span
-    decontamination, spans.py) and per-source dedup telemetry
-    (dedup.py). The acquisition/WARC legs that rode here in rounds 6-7
-    moved to their own ``acquisition_suite`` in round 8 (roster
-    rotation): this digest is the text-mining family only."""
-    tfidf = tfidf_doc_keywords(spark, sf_dir)
-    tfidf_ent = F.concat_ws("|", "doc_id", "rank", "word")
-    ev = classifier_eval_metrics(spark, sf_dir)
-    ev_long = ev.select(
-        *[
-            F.col(c).cast("double").alias(c)
-            for c in (
-                "n_pos",
-                "n_neg",
-                "tp",
-                "fp",
-                "fn",
-                "tn",
-                "auc",
-                "accuracy",
-                "precision_en",
-                "recall_en",
+def _frame(table):
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        queries = all_queries()
+        return digest_frame(
+            (
+                queries[src](spark, sf_dir)
+                if isinstance(src, str)
+                else src[0](spark, sf_dir),
+                legs,
             )
-        ]
-    ).unpivot(
-        ids=[],
-        values=None,
-        variableColumnName="metric",
-        valueColumnName="value",
-    )
-    drift = embedding_drift_psi(spark, sf_dir)
-    drift_ent = F.concat_ws("|", "slice", "bin")
-    link = record_linkage_parts(spark, sf_dir)
-    link_ent = F.concat_ws("|", "b_id", "a_id")
-    cov = span_dup_coverage_multi(spark, sf_dir)
-    decon = span_decontamination(spark, sf_dir)
-    rate = dedup_rate_by_source(spark, sf_dir)
-    rem = span_removal(spark, sf_dir)
-    rem32 = span_removal_l32(spark, sf_dir)
-    return _union(
-        [
-            _leg(tfidf, "tfidf", tfidf_ent, F.col("score")),
-            _leg(tfidf, "tfidf:tf", tfidf_ent, F.col("tf")),
-            ev_long.select(
-                F.lit("eval").alias("component"),
-                F.col("metric").alias("entity"),
-                F.col("value"),
-            ),
-            _leg(drift, "psi", drift_ent, F.col("psi_contrib")),
-            _leg(drift, "psi:nref", drift_ent, F.col("n_ref")),
-            _leg(drift, "psi:ncur", drift_ent, F.col("n_cur")),
-            _leg(
-                drift.select("slice", "psi_total").distinct(),
-                "psi_total",
-                F.col("slice"),
-                F.col("psi_total"),
-            ),
-            _leg(link, "link:score", link_ent, F.col("score")),
-            _leg(link, "link:dist", link_ent, F.col("dist")),
-            _leg(
-                link,
-                "link:flags",
-                link_ent,
-                F.lit(2) * F.col("brand_match").cast("int")
-                + F.col("type_match").cast("int"),
-            ),
-            _leg(
-                contrastive_negatives(spark, sf_dir),
-                "contrast",
-                F.concat_ws("|", "doc_id", "rank"),
-                F.col("neg_id"),
-            ),
-            _leg(cov, "span:cov", F.col("doc_id"), F.col("covered_l8")),
-            _leg(cov, "span:frac", F.col("doc_id"), F.col("cov_l8")),
-            _leg(cov, "span32:cov", F.col("doc_id"), F.col("covered_l32")),
-            _leg(cov, "span32:frac", F.col("doc_id"), F.col("cov_l32")),
-            _leg(decon, "decon:n", F.col("doc_id"), F.col("n_contaminated")),
-            _leg(
-                decon, "decon:flag", F.col("doc_id"), F.col("flagged").cast("int")
-            ),
-            _leg(rate, "deduprate:dups", F.col("source"), F.col("n_dup_docs")),
-            _leg(
-                rate, "deduprate:waste", F.col("source"), F.col("tokens_wasted")
-            ),
-            _leg(rate, "deduprate:frac", F.col("source"), F.col("dup_doc_frac")),
-            _leg(rem, "removal:kept", F.col("doc_id"), F.col("kept_tokens")),
-            _leg(
-                rem,
-                "removal:h",
-                F.col("doc_id"),
-                F.conv(F.substring(F.md5("cleaned_text"), 1, 12), 16, 10).cast(
-                    "double"
-                ),
-            ),
-            _leg(rem32, "removal32:kept", F.col("doc_id"), F.col("kept_tokens")),
-            _leg(
-                rem32,
-                "removal32:h",
-                F.col("doc_id"),
-                F.conv(F.substring(F.md5("cleaned_text"), 1, 12), 16, 10).cast(
-                    "double"
-                ),
-            ),
-        ]
-    )
-
-
-# ---------------------------------------------------------------------------
-# acquisition_suite: the crawl-to-corpus family as its own driver digest
-# (round 8 roster rotation — these legs debuted inside mining_suite in
-# rounds 6-7; the WARC-chain legs are new here)
-# ---------------------------------------------------------------------------
-
-_ACQUISITION_SUITE_SQL = f"""
-SELECT 'html:h' AS component, CAST(doc_id AS VARCHAR) AS entity,
-       CAST(clean_h AS DOUBLE) AS value
-FROM ({_HTML_STRIP_SQL})
-UNION ALL
-SELECT 'html:len', CAST(doc_id AS VARCHAR), CAST(n_chars_clean AS DOUBLE)
-FROM ({_HTML_STRIP_SQL})
-UNION ALL
-SELECT 'html:tags', CAST(doc_id AS VARCHAR), CAST(n_tags AS DOUBLE)
-FROM ({_HTML_STRIP_SQL})
-UNION ALL
-SELECT 'url:canon', CAST(doc_id AS VARCHAR) || '|' || canonical_url,
-       CAST(n_params AS DOUBLE) FROM ({_URL_CANON_SQL})
-UNION ALL
-SELECT 'domain:docs', domain, CAST(n_docs AS DOUBLE)
-FROM ({_DOMAIN_ROLLUP_SQL})
-UNION ALL
-SELECT 'domain:dups', domain, CAST(n_dup_docs AS DOUBLE)
-FROM ({_DOMAIN_ROLLUP_SQL})
-UNION ALL
-SELECT 'domain:tokens', domain, CAST(tokens_total AS DOUBLE)
-FROM ({_DOMAIN_ROLLUP_SQL})
-UNION ALL
-SELECT 'domain:frac', domain, dup_doc_frac
-FROM ({_DOMAIN_ROLLUP_SQL})
-UNION ALL
-SELECT 'chain:h', CAST(doc_id AS VARCHAR) || '|' || domain || '|' || canonical_url,
-       CAST(clean_h AS DOUBLE) FROM ({_CHAIN_DOC_SQL})
-UNION ALL
-SELECT 'chain:tok', CAST(doc_id AS VARCHAR), CAST(n_tokens AS DOUBLE)
-FROM ({_CHAIN_DOC_SQL})
-UNION ALL
-SELECT 'chain:utok', CAST(doc_id AS VARCHAR), CAST(n_distinct_tokens AS DOUBLE)
-FROM ({_CHAIN_DOC_SQL})
-UNION ALL
-SELECT 'chaindom:docs', domain, CAST(n_docs AS DOUBLE)
-FROM ({_CHAIN_ROLLUP_SQL})
-UNION ALL
-SELECT 'chaindom:tokens', domain, CAST(tokens_total AS DOUBLE)
-FROM ({_CHAIN_ROLLUP_SQL})
-UNION ALL
-SELECT 'chaindom:frac', domain, dup_doc_frac
-FROM ({_CHAIN_ROLLUP_SQL})
-UNION ALL
-SELECT 'warc:h', CAST(doc_id AS VARCHAR) || '|' || target_uri,
-       CAST(body_h AS DOUBLE) FROM ({_WARC_STATS_SQL})
-UNION ALL
-SELECT 'warc:len', CAST(doc_id AS VARCHAR), CAST(block_len AS DOUBLE)
-FROM ({_WARC_STATS_SQL})
-UNION ALL
-SELECT 'warc:clen', CAST(doc_id AS VARCHAR), CAST(content_len AS DOUBLE)
-FROM ({_WARC_STATS_SQL})
-UNION ALL
-SELECT 'warc:status', CAST(doc_id AS VARCHAR), CAST(http_status AS DOUBLE)
-FROM ({_WARC_STATS_SQL})
-UNION ALL
-SELECT 'warcchain:h', CAST(doc_id AS VARCHAR) || '|' || domain || '|' || canonical_url,
-       CAST(clean_h AS DOUBLE) FROM ({_CHAIN_DOC_SQL})
-UNION ALL
-SELECT 'warcchain:tok', CAST(doc_id AS VARCHAR), CAST(n_tokens AS DOUBLE)
-FROM ({_CHAIN_DOC_SQL})
-UNION ALL
-SELECT 'warcchain:utok', CAST(doc_id AS VARCHAR), CAST(n_distinct_tokens AS DOUBLE)
-FROM ({_CHAIN_DOC_SQL})
-UNION ALL
-SELECT 'wet:h', CAST(doc_id AS VARCHAR) || '|' || target_uri,
-       CAST(clean_h AS DOUBLE) FROM ({_wet_sql()})
-UNION ALL
-SELECT 'wet:len', CAST(doc_id AS VARCHAR), CAST(wet_block_len AS DOUBLE)
-FROM ({_wet_sql()})
-UNION ALL
-SELECT 'revisit:resolved', CAST(doc_id AS VARCHAR) || '|' || target_uri || '|' || digest,
-       CAST(resolved_doc AS DOUBLE) FROM ({_REVISIT_SQL})
-UNION ALL
-SELECT 'revisit:saved', CAST(doc_id AS VARCHAR), CAST(saved_bytes AS DOUBLE)
-FROM ({_REVISIT_SQL})
-UNION ALL
-SELECT 'revisit:blen', CAST(doc_id AS VARCHAR), CAST(revisit_block_len AS DOUBLE)
-FROM ({_REVISIT_SQL})
-UNION ALL
-SELECT 'policy', CAST(doc_id AS VARCHAR) || '|' || verdict,
-       CAST(CASE verdict WHEN 'ok' THEN 0
-            WHEN 'blocked_domain' THEN 1 ELSE 2 END AS DOUBLE)
-FROM ({_POLICY_FILTER_SQL})
-UNION ALL
-SELECT 'robots', CAST(doc_id AS VARCHAR) || '|' || coalesce(robots_rule, '-'),
-       CAST(CAST(robots_allowed AS INT) AS DOUBLE)
-FROM ({_ROBOTS_FILTER_SQL})
-UNION ALL
-SELECT 'admit', CAST(doc_id AS VARCHAR) || '|' || decision,
-       CAST(CAST(admitted AS INT) AS DOUBLE)
-FROM ({_ADMISSION_SQL})
-UNION ALL
-SELECT 'robotsw', CAST(doc_id AS VARCHAR) || '|' || coalesce(robots_rule, '-'),
-       CAST(CAST(robots_allowed AS INT) AS DOUBLE)
-FROM ({_ROBOTS_W_SQL})
-UNION ALL
-SELECT 'frontier:slot', CAST(doc_id AS VARCHAR) || '|' || domain,
-       CAST(slot AS DOUBLE) FROM ({_FRONTIER_SQL})
-UNION ALL
-SELECT 'frontier:t', CAST(doc_id AS VARCHAR), CAST(fetch_offset_ms AS DOUBLE)
-FROM ({_FRONTIER_SQL})
-UNION ALL
-SELECT 'seg:h', CAST(doc_id AS VARCHAR) || '|' || te, CAST(body_h AS DOUBLE)
-FROM ({_SEGMENT_SQL})
-UNION ALL
-SELECT 'seg:n', CAST(doc_id AS VARCHAR), CAST(n_segments AS DOUBLE)
-FROM ({_SEGMENT_SQL})
-UNION ALL
-SELECT 'seg:blen', CAST(doc_id AS VARCHAR), CAST(block_len AS DOUBLE)
-FROM ({_SEGMENT_SQL})
-UNION ALL
-SELECT 'extract:h', CAST(doc_id AS VARCHAR), CAST(main_h AS DOUBLE)
-FROM ({_MAIN_CONTENT_SQL})
-UNION ALL
-SELECT 'extract:chars', CAST(doc_id AS VARCHAR),
-       CAST(content_chars * 100000 + boiler_chars AS DOUBLE)
-FROM ({_MAIN_CONTENT_SQL})
-UNION ALL
-SELECT 'yield:frac', source, content_yield
-FROM ({_CONTENT_YIELD_SQL})
-UNION ALL
-SELECT 'c4:h', CAST(doc_id AS VARCHAR) || '|' || verdict,
-       CAST(kept_h AS DOUBLE) FROM ({_C4_DOC_SQL})
-UNION ALL
-SELECT 'c4:lines', CAST(doc_id AS VARCHAR),
-       CAST(n_lines * 1000 + n_kept_lines AS DOUBLE) FROM ({_C4_DOC_SQL})
-UNION ALL
-SELECT 'c4funnel', source || '|' || verdict,
-       CAST(n_docs * 1000000 + lines_kept AS DOUBLE)
-FROM ({_C4_FUNNEL_SQL})
-UNION ALL
-SELECT 'sitemap:bytes', CAST(doc_id AS VARCHAR) || '|' || host,
-       CAST(file_bytes AS DOUBLE) FROM ({_SITEMAP_RT_SQL})
-UNION ALL
-SELECT 'sitemap:meta', CAST(doc_id AS VARCHAR) || '|' || lastmod || '|'
-       || changefreq || '|' || priority, CAST(file_no AS DOUBLE)
-FROM ({_SITEMAP_RT_SQL})
-UNION ALL
-SELECT 'recrawl:due', CAST(doc_id AS VARCHAR) || '|' || domain,
-       CAST(CAST(is_due AS INT) AS DOUBLE) FROM ({_RECRAWL_SQL})
-UNION ALL
-SELECT 'recrawl:slot', CAST(doc_id AS VARCHAR),
-       CAST(coalesce(fetch_offset_ms, -1) AS DOUBLE) FROM ({_RECRAWL_SQL})
-UNION ALL
-SELECT 'rbtxt:rules', domain || '|' || sitemap_url,
-       CAST(rules_h AS DOUBLE) FROM ({_ROBOTS_TXT_STATS_SQL})
-UNION ALL
-SELECT 'rbtxt:delay', domain, CAST(crawl_delay AS DOUBLE)
-FROM ({_ROBOTS_TXT_STATS_SQL})
-UNION ALL
-SELECT 'rbtxt:gate', CAST(doc_id AS VARCHAR) || '|' || coalesce(robots_rule, '-'),
-       CAST(CAST(robots_allowed AS INT) AS DOUBLE)
-FROM ({_ROBOTS_FILTER_SQL})
-UNION ALL
-SELECT 'e2e:funnel', domain,
-       CAST(((n_urls * 1000 + n_admitted) * 1000 + n_quality_ok) * 1000
-            + n_unique AS DOUBLE)
-FROM ({_E2E_SQL})
-UNION ALL
-SELECT 'e2e:tokens', domain, CAST(tokens_shipped AS DOUBLE)
-FROM ({_E2E_SQL})
-UNION ALL
-SELECT 'e2e:content', domain, CAST(content_sum AS DOUBLE)
-FROM ({_E2E_SQL})
-UNION ALL
-SELECT 'e2e:revisit', domain,
-       CAST(n_revisits * 1000 + n_revisit_resolved AS DOUBLE)
-FROM ({_E2E_SQL})
-UNION ALL
-SELECT 'e2e:saved', domain, CAST(revisit_saved_bytes AS DOUBLE)
-FROM ({_E2E_SQL})
-UNION ALL
-SELECT 'e2e:pack', domain,
-       CAST((pack_contexts * 100000 + pack_padding) * 100000
-            + pack_fragments AS DOUBLE)
-FROM ({_E2E_SQL})
-UNION ALL
-SELECT 'edges:n', src_domain || '|' || dst_domain, CAST(n_links AS DOUBLE)
-FROM ({_EDGES_SQL})
-UNION ALL
-SELECT 'pagerank:rank', domain, rank FROM ({_PAGERANK_SQL})
-UNION ALL
-SELECT 'pagerank:out', domain, CAST(n_out_links AS DOUBLE)
-FROM ({_PAGERANK_SQL})
-"""
-
-
-@register("acquisition_suite", oracle=_ACQUISITION_SUITE_SQL)
-def acquisition_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver digest of the acquisition family (acquisition.py,
-    warc_ingest.py): HTML strip with a content-pinning hash, URL
-    canonicalization, the per-domain rollup, the composed
-    strip->canonicalize->tokenize chain (per-doc and per-domain), the
-    WARC round-trip witnesses (body hash, block/content byte geometry,
-    HTTP status), the crawl-policy and robots.txt gates, and the
-    composed admission decision. The ``e2e:pack`` leg (r10) hashes the
-    funnel's corpus-to-contexts hand-off: packed contexts, padding, and
-    fragmented docs of the SURVIVING corpus per domain — curation ->
-    dedup -> quality -> pack in one composed DAG.
-    The ``warcchain:*`` legs run the WARC
-    path (bytes -> response records -> the chain) against the SAME
-    oracle SQL as the batch chain — hashing green means the container
-    round trip is a semantic no-op end to end, per-value. The
-    ``seg:*`` legs (round 8, session 2) hash the segmented-record
-    reassembly + chunked-TE decode witnesses: payload hash, segment
-    count, and reassembled block geometry per planted wire shape. The
-    ``extract:*`` / ``yield:frac`` legs hash the main-content extraction
-    family: per-doc extracted-text hash, the content/boiler character
-    split, and the per-source content yield. The ``c4:*`` legs hash the
-    C4 cleaning battery: per-page kept-text hash keyed by verdict, line
-    accounting, and the per-(source, verdict) filter funnel. The
-    ``sitemap:*`` / ``recrawl:*`` legs hash the sitemap discovery
-    family: per-URL round-trip fields + file byte geometry, and the
-    lastmod/changefreq freshness decision with priority-ordered
-    per-domain fetch slots. The ``rbtxt:*`` legs hash robots.txt TEXT
-    parsing: per-domain rule digests + Sitemap/Crawl-delay directives,
-    and the gate fed from parsed text against the structured gate's own
-    oracle (text -> rules -> gate provably a no-op). The ``edges:n`` /
-    ``pagerank:*`` legs (round 9) hash the domain link graph: weighted
-    cross-domain edges and the 10-iteration PageRank at 9dp — the
-    iterative float family's first driver-hashed values, oracle-backed
-    by the unrolled power iteration (linkgraph._pagerank_sql)."""
-    html = html_strip_stats(spark, sf_dir)
-    url = url_canonical_stats(spark, sf_dir)
-    dom = domain_acquisition_rollup(spark, sf_dir)
-    chain = acquisition_chain_profile(spark, sf_dir)
-    chain_dom = acquisition_chain_rollup(spark, sf_dir)
-    warc = warc_response_stats(spark, sf_dir)
-    wchain = warc_acquisition_chain(spark, sf_dir)
-    revisit = warc_revisit_resolution(spark, sf_dir)
-    wet = wet_export_roundtrip(spark, sf_dir)
-    policy = acquisition_policy_filter(spark, sf_dir)
-    robots = robots_policy_filter(spark, sf_dir)
-    robotsw = robots_wildcard_filter(spark, sf_dir)
-    admit = crawl_admission_report(spark, sf_dir)
-    frontier = crawl_frontier_schedule(spark, sf_dir)
-    seg = warc_segment_reassembly(spark, sf_dir).localCheckpoint()
-    extract = main_content_extract(spark, sf_dir).localCheckpoint()
-    cyield = content_yield_by_source(spark, sf_dir)
-    c4 = c4_line_filter_stats(spark, sf_dir).localCheckpoint()
-    c4f = c4_filter_funnel(spark, sf_dir)
-    smap = sitemap_roundtrip_stats(spark, sf_dir).localCheckpoint()
-    recrawl = sitemap_recrawl_schedule(spark, sf_dir).localCheckpoint()
-    rbtxt = robots_txt_directives(spark, sf_dir)
-    rbgate = robots_txt_gate(spark, sf_dir)
-    e2e = crawl_e2e_funnel(spark, sf_dir).localCheckpoint()
-    edges = domain_link_edges(spark, sf_dir)
-    pr = domain_pagerank(spark, sf_dir).localCheckpoint()
-    chain_ent = F.concat_ws("|", "doc_id", "domain", "canonical_url")
-    return _union(
-        [
-            _leg(html, "html:h", F.col("doc_id"), F.col("clean_h")),
-            _leg(html, "html:len", F.col("doc_id"), F.col("n_chars_clean")),
-            _leg(html, "html:tags", F.col("doc_id"), F.col("n_tags")),
-            _leg(
-                url,
-                "url:canon",
-                F.concat_ws("|", "doc_id", "canonical_url"),
-                F.col("n_params"),
-            ),
-            _leg(dom, "domain:docs", F.col("domain"), F.col("n_docs")),
-            _leg(dom, "domain:dups", F.col("domain"), F.col("n_dup_docs")),
-            _leg(dom, "domain:tokens", F.col("domain"), F.col("tokens_total")),
-            _leg(dom, "domain:frac", F.col("domain"), F.col("dup_doc_frac")),
-            _leg(
-                chain,
-                "chain:h",
-                F.concat_ws("|", "doc_id", "domain", "canonical_url"),
-                F.col("clean_h"),
-            ),
-            _leg(chain, "chain:tok", F.col("doc_id"), F.col("n_tokens")),
-            _leg(chain, "chain:utok", F.col("doc_id"), F.col("n_distinct_tokens")),
-            _leg(chain_dom, "chaindom:docs", F.col("domain"), F.col("n_docs")),
-            _leg(
-                chain_dom,
-                "chaindom:tokens",
-                F.col("domain"),
-                F.col("tokens_total"),
-            ),
-            _leg(chain_dom, "chaindom:frac", F.col("domain"), F.col("dup_doc_frac")),
-            _leg(
-                warc,
-                "warc:h",
-                F.concat_ws("|", "doc_id", "target_uri"),
-                F.col("body_h"),
-            ),
-            _leg(warc, "warc:len", F.col("doc_id"), F.col("block_len")),
-            _leg(warc, "warc:clen", F.col("doc_id"), F.col("content_len")),
-            _leg(warc, "warc:status", F.col("doc_id"), F.col("http_status")),
-            _leg(wchain, "warcchain:h", chain_ent, F.col("clean_h")),
-            _leg(wchain, "warcchain:tok", F.col("doc_id"), F.col("n_tokens")),
-            _leg(
-                wchain,
-                "warcchain:utok",
-                F.col("doc_id"),
-                F.col("n_distinct_tokens"),
-            ),
-            _leg(
-                wet,
-                "wet:h",
-                F.concat_ws("|", "doc_id", "target_uri"),
-                F.col("clean_h"),
-            ),
-            _leg(wet, "wet:len", F.col("doc_id"), F.col("wet_block_len")),
-            _leg(
-                revisit,
-                "revisit:resolved",
-                F.concat_ws("|", "doc_id", "target_uri", "digest"),
-                F.col("resolved_doc"),
-            ),
-            _leg(revisit, "revisit:saved", F.col("doc_id"), F.col("saved_bytes")),
-            _leg(
-                revisit,
-                "revisit:blen",
-                F.col("doc_id"),
-                F.col("revisit_block_len"),
-            ),
-            _leg(
-                policy,
-                "policy",
-                F.concat_ws("|", "doc_id", "verdict"),
-                F.when(F.col("verdict") == "ok", 0)
-                .when(F.col("verdict") == "blocked_domain", 1)
-                .otherwise(2),
-            ),
-            _leg(
-                robots,
-                "robots",
-                F.concat_ws(
-                    "|", "doc_id", F.coalesce("robots_rule", F.lit("-"))
-                ),
-                F.col("robots_allowed").cast("int"),
-            ),
-            _leg(
-                admit,
-                "admit",
-                F.concat_ws("|", "doc_id", "decision"),
-                F.col("admitted").cast("int"),
-            ),
-            _leg(
-                robotsw,
-                "robotsw",
-                F.concat_ws(
-                    "|", "doc_id", F.coalesce("robots_rule", F.lit("-"))
-                ),
-                F.col("robots_allowed").cast("int"),
-            ),
-            _leg(
-                frontier,
-                "frontier:slot",
-                F.concat_ws("|", "doc_id", "domain"),
-                F.col("slot"),
-            ),
-            _leg(
-                frontier,
-                "frontier:t",
-                F.col("doc_id"),
-                F.col("fetch_offset_ms"),
-            ),
-            _leg(
-                seg,
-                "seg:h",
-                F.concat_ws("|", "doc_id", "te"),
-                F.col("body_h"),
-            ),
-            _leg(seg, "seg:n", F.col("doc_id"), F.col("n_segments")),
-            _leg(seg, "seg:blen", F.col("doc_id"), F.col("block_len")),
-            _leg(extract, "extract:h", F.col("doc_id"), F.col("main_h")),
-            _leg(
-                extract,
-                "extract:chars",
-                F.col("doc_id"),
-                F.col("content_chars") * 100000 + F.col("boiler_chars"),
-            ),
-            _leg(cyield, "yield:frac", F.col("source"), F.col("content_yield")),
-            _leg(
-                c4,
-                "c4:h",
-                F.concat_ws("|", "doc_id", "verdict"),
-                F.col("kept_h"),
-            ),
-            _leg(
-                c4,
-                "c4:lines",
-                F.col("doc_id"),
-                F.col("n_lines") * 1000 + F.col("n_kept_lines"),
-            ),
-            _leg(
-                c4f,
-                "c4funnel",
-                F.concat_ws("|", "source", "verdict"),
-                F.col("n_docs") * 1000000 + F.col("lines_kept"),
-            ),
-            _leg(
-                smap,
-                "sitemap:bytes",
-                F.concat_ws("|", "doc_id", "host"),
-                F.col("file_bytes"),
-            ),
-            _leg(
-                smap,
-                "sitemap:meta",
-                F.concat_ws(
-                    "|", "doc_id", "lastmod", "changefreq", "priority"
-                ),
-                F.col("file_no"),
-            ),
-            _leg(
-                recrawl,
-                "recrawl:due",
-                F.concat_ws("|", "doc_id", "domain"),
-                F.col("is_due").cast("int"),
-            ),
-            _leg(
-                recrawl,
-                "recrawl:slot",
-                F.col("doc_id"),
-                F.coalesce(F.col("fetch_offset_ms"), F.lit(-1)),
-            ),
-            _leg(
-                rbtxt,
-                "rbtxt:rules",
-                F.concat_ws("|", "domain", "sitemap_url"),
-                F.col("rules_h"),
-            ),
-            _leg(rbtxt, "rbtxt:delay", F.col("domain"), F.col("crawl_delay")),
-            _leg(
-                rbgate,
-                "rbtxt:gate",
-                F.concat_ws(
-                    "|", "doc_id", F.coalesce("robots_rule", F.lit("-"))
-                ),
-                F.col("robots_allowed").cast("int"),
-            ),
-            _leg(
-                e2e,
-                "e2e:funnel",
-                F.col("domain"),
-                ((F.col("n_urls") * 1000 + F.col("n_admitted")) * 1000
-                 + F.col("n_quality_ok")) * 1000 + F.col("n_unique"),
-            ),
-            _leg(e2e, "e2e:tokens", F.col("domain"), F.col("tokens_shipped")),
-            _leg(e2e, "e2e:content", F.col("domain"), F.col("content_sum")),
-            _leg(
-                e2e,
-                "e2e:revisit",
-                F.col("domain"),
-                F.col("n_revisits") * 1000 + F.col("n_revisit_resolved"),
-            ),
-            _leg(e2e, "e2e:saved", F.col("domain"),
-                 F.col("revisit_saved_bytes")),
-            # corpus-to-contexts hand-off (r10): packing the surviving
-            # docs — contexts*1e10 + padding*1e5 + fragments stays exact
-            # in a double far past any fixture scale (< 2^53)
-            _leg(
-                e2e,
-                "e2e:pack",
-                F.col("domain"),
-                (F.col("pack_contexts") * 100000 + F.col("pack_padding"))
-                * 100000
-                + F.col("pack_fragments"),
-            ),
-            _leg(
-                edges,
-                "edges:n",
-                F.concat_ws("|", "src_domain", "dst_domain"),
-                F.col("n_links"),
-            ),
-            _leg(pr, "pagerank:rank", F.col("domain"), F.col("rank")),
-            _leg(pr, "pagerank:out", F.col("domain"), F.col("n_out_links")),
-        ]
-    )
-
-
-# ---------------------------------------------------------------------------
-# simhash_suite / similarity_suite / multimodal_suite (round 8 roster
-# rotation): each merges two driver singles into one digest key with
-# every value still hashed, freeing roster slots for the round-7
-# families (acquisition_suite, image_dedup_suite, binary_dedup_suite).
-# The singles stay registered driver=False with their full schemas.
-# ---------------------------------------------------------------------------
-
-_SIMHASH_SUITE_SQL = f"""
-SELECT 'fp' AS component,
-       CAST(doc_id AS VARCHAR) || '|' || simhash AS entity,
-       1.0 AS value
-FROM ({_SIMHASH_SQL})
-UNION ALL
-SELECT 'pair', CAST(doc_a AS VARCHAR) || '|' || CAST(doc_b AS VARCHAR),
-       CAST(hamming AS DOUBLE)
-FROM ({_SIMHASH_PAIRS_SQL})
-"""
-
-
-@register("simhash_suite", oracle=_SIMHASH_SUITE_SQL)
-def simhash_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver digest of the SimHash family (dedup.py): every document's
-    64-bit fingerprint (hex, carried in the entity so all 64 bits land
-    in the hash) plus every near-dup pair within Hamming radius 6 with
-    its exact distance — the pair oracle is the brute-force all-pairs
-    spec, so a green hash proves the block-pair probe drops nothing."""
-    fp = simhash_fingerprint(spark, sf_dir)
-    pairs = simhash_near_pairs(spark, sf_dir)
-    return _union(
-        [
-            _leg(
-                fp, "fp", F.concat_ws("|", "doc_id", "simhash"), F.lit(1.0)
-            ),
-            _leg(
-                pairs,
-                "pair",
-                F.concat_ws("|", "doc_a", "doc_b"),
-                F.col("hamming"),
-            ),
-        ]
-    )
-
-
-_SIMILARITY_SUITE_SQL = f"""
-SELECT 'brute' AS component,
-       CAST(query_id AS VARCHAR) || '|' || CAST(vec_id AS VARCHAR)
-         || '|' || CAST(rn AS VARCHAR) AS entity,
-       cosine AS value
-FROM ({_BRUTE_SQL})
-UNION ALL
-SELECT 'lsh', CAST(query_id AS VARCHAR) || '|' || CAST(vec_id AS VARCHAR)
-         || '|' || CAST(rn AS VARCHAR),
-       cosine
-FROM ({_ANN_SQL})
-"""
-
-
-@register("similarity_suite", oracle=_SIMILARITY_SUITE_SQL)
-def similarity_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver digest of the embedding top-k family (similarity.py): the
-    exact brute-force ranking and the multi-table sign-LSH ranking, each
-    with (query, neighbor, rank) in the entity and the rounded cosine as
-    the value — both oracles unchanged from the former singles."""
-    brute = similarity_topk_bruteforce(spark, sf_dir)
-    lsh = similarity_topk_signlsh(spark, sf_dir)
-    ent = F.concat_ws("|", "query_id", "vec_id", "rn")
-    return _union(
-        [
-            _leg(brute, "brute", ent, F.col("cosine")),
-            _leg(lsh, "lsh", ent, F.col("cosine")),
-        ]
-    )
-
-
-# Derived-media legs: one leg per decoded metric over ALL rows, nulls
-# coalesced to -1 on both sides (a PNG has no sample_rate, a decoded row
-# has no frame_idx) so no filter can silently drop a row from the hash.
-_MULTIMODAL_SUITE_SQL = f"""
-SELECT 'bin:items' AS component, media_type AS entity,
-       CAST(n_items AS DOUBLE) AS value FROM ({_BINARY_STATS_SQL})
-UNION ALL
-SELECT 'bin:bytes', media_type, CAST(total_bytes AS DOUBLE)
-FROM ({_BINARY_STATS_SQL})
-UNION ALL
-SELECT 'bin:maxb', media_type, CAST(max_bytes AS DOUBLE)
-FROM ({_BINARY_STATS_SQL})
-UNION ALL
-SELECT 'bin:uniq', media_type, CAST(n_distinct_payloads AS DOUBLE)
-FROM ({_BINARY_STATS_SQL})
-UNION ALL
-SELECT 'drv:' || metric,
-       CAST(doc_id AS VARCHAR) || '|' || kind || '|' || media_type
-         || '|' || CAST(coalesce(frame_idx, -1) AS VARCHAR),
-       value
-FROM (
-    SELECT doc_id, kind, media_type, frame_idx,
-           CAST(coalesce(width, -1) AS DOUBLE) AS w,
-           CAST(coalesce(height, -1) AS DOUBLE) AS h,
-           CAST(coalesce(channels, -1) AS DOUBLE) AS ch,
-           CAST(coalesce(sample_rate, -1) AS DOUBLE) AS sr,
-           CAST(coalesce(n_samples, -1) AS DOUBLE) AS ns,
-           CAST(coalesce(duration_ms, -1) AS DOUBLE) AS dur,
-           CAST(coalesce(frame_len, -1) AS DOUBLE) AS flen
-    FROM ({_DERIVED_SQL})
-) UNPIVOT (value FOR metric IN (w, h, ch, sr, ns, dur, flen))
-"""
-
-
-@register("multimodal_suite", oracle=_MULTIMODAL_SUITE_SQL)
-def multimodal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver digest of the multimodal container family (multimodal.py):
-    the metadata-only binary stats rollup and every field of the
-    Arrow-batched decode/frame-sample derivation (header geometry read
-    out of REAL container bytes; the oracle re-derives each value from
-    the generation formulas alone) — both former singles' oracles
-    unchanged, merged long-form."""
-    stats = multimodal_binary_stats(spark, sf_dir)
-    drv = multimodal_derived(spark, sf_dir)
-    ent = F.concat_ws(
-        "|",
-        "doc_id",
-        "kind",
-        "media_type",
-        F.coalesce(F.col("frame_idx"), F.lit(-1)),
-    )
-
-    def m(tag: str, col: str) -> DataFrame:
-        return _leg(
-            drv, f"drv:{tag}", ent, F.coalesce(F.col(col), F.lit(-1))
+            for src, legs in table
         )
 
-    return _union(
-        [
-            _leg(stats, "bin:items", F.col("media_type"), F.col("n_items")),
-            _leg(stats, "bin:bytes", F.col("media_type"), F.col("total_bytes")),
-            _leg(stats, "bin:maxb", F.col("media_type"), F.col("max_bytes")),
-            _leg(
-                stats,
-                "bin:uniq",
-                F.col("media_type"),
-                F.col("n_distinct_payloads"),
-            ),
-            m("w", "width"),
-            m("h", "height"),
-            m("ch", "channels"),
-            m("sr", "sample_rate"),
-            m("ns", "n_samples"),
-            m("dur", "duration_ms"),
-            m("flen", "frame_len"),
-        ]
-    )
+    return build
+
+
+for _name, _table in SUITES.items():
+    register(
+        _name,
+        oracle=digest_sql(
+            (_ORACLES[src] if isinstance(src, str) else src[1], legs)
+            for src, legs in _table
+        ),
+    )(_frame(_table))

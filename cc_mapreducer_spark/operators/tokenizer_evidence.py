@@ -57,7 +57,7 @@ shuffle plus merge rounds over the DISTINCT-(pre-)token table
 Arrow-batched. Each trained model is a driver-side value in the memo
 (operators/bpe.corpus_model), shared with the *_token_stats singles,
 whose frames are the suite's stats legs; the encoded tables and the
-multiply-read seqprep/dataloader frames go through memo.persisted. A
+seqprep/dataloader summary frames go through memo.persisted. A
 build after the singles, and every later build, starts no Spark job.
 """
 
@@ -69,6 +69,7 @@ from cc_mapreducer_spark.operators.anagram import (
     _HASH_PARTITION_SQL,
     q_hash_partition_stats,
 )
+from cc_mapreducer_spark.digest import digest_frame
 from cc_mapreducer_spark.memo import persisted
 from cc_mapreducer_spark.operators.bpe import (
     bpe_model,
@@ -199,13 +200,6 @@ def tokenizer_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle in r11 (operators/unigram_lm.py — integer count grid, no
     float accumulation) and is hashed via its single key."""
 
-    def leg(df: DataFrame, component: str, entity, value) -> DataFrame:
-        return df.select(
-            F.lit(component).alias("component"),
-            entity.cast("string").alias("entity"),
-            value.cast("double").alias("value"),
-        )
-
     docs = spread(load_table(spark, sf_dir, "documents"))
     corpus = corpus_token_totals(spark, sf_dir)
 
@@ -226,106 +220,83 @@ def tokenizer_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from the memo: a build after the singles trains nothing
     bpe_merges = bpe_model(spark, sf_dir)
     bpe_enc = persisted(encode_bpe(docs, bpe_merges))
-    bpe_stats = bpe_token_stats(spark, sf_dir)
     bb_merges = byte_bpe_model(spark, sf_dir)
     bb_enc = persisted(encode_byte_bpe(docs, bb_merges))
-    bb_stats = byte_bpe_token_stats(spark, sf_dir)
     wp_merges, wp_vocab = wordpiece_model(spark, sf_dir)
-    wp_stats = wordpiece_token_stats(spark, sf_dir)
     wp_vocab_df = spark.createDataFrame(
         [(v,) for v in wp_vocab], "sym string"
     )
-    pack_sum = persisted(sequence_pack_summary(spark, sf_dir))
-
-    parts = [
-        leg(corpus, "corpus:docs", F.col("lang"), F.col("n_docs")),
-        leg(corpus, "corpus:ws", F.col("lang"), F.col("total_ws_tokens")),
-        leg(corpus, "corpus:chars", F.col("lang"), F.col("total_chars")),
-        leg(merge_df(bpe_merges, "long"), "bpe:merge",
-            F.concat_ws("|", "step", "a", "b"), F.col("v")),
-        leg(vocab_of(bpe_enc), "bpe:vocab", F.col("sym"), F.col("n")),
-        leg(bpe_stats, "bpe:docs", F.col("source"), F.col("n_docs")),
-        leg(bpe_stats, "bpe:words", F.col("source"), F.col("total_words")),
-        leg(bpe_stats, "bpe:tokens", F.col("source"),
-            F.col("total_tokens")),
-        leg(bpe_stats, "bpe:tpw", F.col("source"),
-            F.col("tokens_per_word")),
-        leg(merge_df(bb_merges, "long"), "bbpe:merge",
-            F.concat_ws("|", "step", "a", "b"), F.col("v")),
-        leg(vocab_of(bb_enc), "bbpe:vocab", F.col("sym"), F.col("n")),
-        leg(bb_stats, "bbpe:docs", F.col("source"), F.col("n_docs")),
-        leg(bb_stats, "bbpe:bytes", F.col("source"), F.col("total_bytes")),
-        leg(bb_stats, "bbpe:tokens", F.col("source"),
-            F.col("total_tokens")),
-        leg(bb_stats, "bbpe:bpt", F.col("source"),
-            F.col("bytes_per_token")),
-        leg(merge_df(wp_merges, "double"), "wp:merge",
-            F.concat_ws("|", "step", "a", "b"), F.col("v")),
-        leg(wp_vocab_df, "wp:vocab", F.col("sym"), F.lit(1.0)),
-        leg(wp_stats, "wp:docs", F.col("source"), F.col("n_docs")),
-        leg(wp_stats, "wp:words", F.col("source"), F.col("total_words")),
-        leg(wp_stats, "wp:tokens", F.col("source"),
-            F.col("total_tokens")),
-        leg(wp_stats, "wp:unk", F.col("source"), F.col("total_unk")),
-        leg(wp_stats, "wp:tpw", F.col("source"),
-            F.col("tokens_per_word")),
-        leg(
-            sequence_pack_bins(spark, sf_dir),
+    merge_key = "concat_ws('|', step, a, b)"
+    return digest_frame([
+        (corpus, [
+            ("corpus:docs", "lang", "n_docs"),
+            ("corpus:ws", "lang", "total_ws_tokens"),
+            ("corpus:chars", "lang", "total_chars"),
+        ]),
+        (merge_df(bpe_merges, "long"), [("bpe:merge", merge_key, "v")]),
+        (vocab_of(bpe_enc), [("bpe:vocab", "sym", "n")]),
+        (bpe_token_stats(spark, sf_dir), [
+            ("bpe:docs", "source", "n_docs"),
+            ("bpe:words", "source", "total_words"),
+            ("bpe:tokens", "source", "total_tokens"),
+            ("bpe:tpw", "source", "tokens_per_word"),
+        ]),
+        (merge_df(bb_merges, "long"), [("bbpe:merge", merge_key, "v")]),
+        (vocab_of(bb_enc), [("bbpe:vocab", "sym", "n")]),
+        (byte_bpe_token_stats(spark, sf_dir), [
+            ("bbpe:docs", "source", "n_docs"),
+            ("bbpe:bytes", "source", "total_bytes"),
+            ("bbpe:tokens", "source", "total_tokens"),
+            ("bbpe:bpt", "source", "bytes_per_token"),
+        ]),
+        (merge_df(wp_merges, "double"), [("wp:merge", merge_key, "v")]),
+        (wp_vocab_df, [("wp:vocab", "sym", "1.0")]),
+        (wordpiece_token_stats(spark, sf_dir), [
+            ("wp:docs", "source", "n_docs"),
+            ("wp:words", "source", "total_words"),
+            ("wp:tokens", "source", "total_tokens"),
+            ("wp:unk", "source", "total_unk"),
+            ("wp:tpw", "source", "tokens_per_word"),
+        ]),
+        (sequence_pack_bins(spark, sf_dir), [(
             "pack:bin",
-            F.concat_ws("|", "source", "shard", "bin"),
-            (F.col("n_docs") * 1000 + F.col("n_crossers")) * 1000
-            + F.col("fill_tokens"),
-        ),
-        leg(pack_sum, "pack:ctx", F.col("source"), F.col("n_contexts")),
-        leg(pack_sum, "pack:tok", F.col("source"), F.col("total_tokens")),
-        leg(pack_sum, "pack:pad", F.col("source"), F.col("padding_tokens")),
-        leg(pack_sum, "pack:frag", F.col("source"),
-            F.col("fragmented_docs")),
-        leg(pack_sum, "pack:ffrac", F.col("source"),
-            F.col("fragmented_frac")),
-        leg(
-            doc_window_chunks(spark, sf_dir),
+            "concat_ws('|', source, shard, bin)",
+            "(n_docs * 1000 + n_crossers) * 1000 + fill_tokens",
+        )]),
+        (persisted(sequence_pack_summary(spark, sf_dir)), [
+            ("pack:ctx", "source", "n_contexts"),
+            ("pack:tok", "source", "total_tokens"),
+            ("pack:pad", "source", "padding_tokens"),
+            ("pack:frag", "source", "fragmented_docs"),
+            ("pack:ffrac", "source", "fragmented_frac"),
+        ]),
+        (doc_window_chunks(spark, sf_dir), [(
             "chunk:doc",
-            F.concat_ws("|", "doc_id", "chunk_idx"),
-            (F.col("start_tok") * 1000 + F.col("chunk_len")) * 100
-            + F.col("overlap_prev"),
-        ),
-    ]
-    # dataloader hand-off legs (r10): mixture plan + shuffle manifest —
-    # the corpus -> contexts -> mixture -> readers chain, all hashed
-    mix = persisted(corpus_mixture_plan(spark, sf_dir))
-    parts += [
-        leg(mix, "mix:avail", F.col("source"), F.col("available_tokens")),
-        leg(mix, "mix:target", F.col("source"), F.col("target_tokens")),
-        leg(mix, "mix:epochs", F.col("source"), F.col("epochs")),
-        leg(
-            context_shuffle_manifest(spark, sf_dir),
+            "concat_ws('|', doc_id, chunk_idx)",
+            "(start_tok * 1000 + chunk_len) * 100 + overlap_prev",
+        )]),
+        # dataloader hand-off legs (r10): mixture plan + shuffle manifest —
+        # the corpus -> contexts -> mixture -> readers chain, all hashed
+        (persisted(corpus_mixture_plan(spark, sf_dir)), [
+            ("mix:avail", "source", "available_tokens"),
+            ("mix:target", "source", "target_tokens"),
+            ("mix:epochs", "source", "epochs"),
+        ]),
+        (context_shuffle_manifest(spark, sf_dir), [(
             "rdr:ctx",
-            F.concat_ws("|", "source", "shard", "bin"),
-            F.col("reader") * 100000 + F.col("pos"),
-        ),
-        leg(
-            mixture_context_sample(spark, sf_dir),
+            "concat_ws('|', source, shard, bin)",
+            "reader * 100000 + pos",
+        )]),
+        (mixture_context_sample(spark, sf_dir), [(
             "mix:sample",
-            F.concat_ws("|", "source", "shard"),
-            (
-                F.col("available_contexts") * 100000
-                + F.col("picked_contexts")
-            )
-            * 100000
-            + F.col("sampled_tokens"),
-        ),
+            "concat_ws('|', source, shard)",
+            "(available_contexts * 100000 + picked_contexts) * 100000"
+            " + sampled_tokens",
+        )]),
         # absorbed hash_partition_stats (r11 roster rotation): per-bucket
         # pair/signature counts of the §2.4 shuffle demo stay hashed here
         # while its roster slot goes to corpus_to_readers
-        leg(
-            q_hash_partition_stats(spark, sf_dir),
-            "hashpart",
-            F.col("bucket"),
-            F.col("n_pairs") * 100000 + F.col("n_signatures"),
-        ),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        (q_hash_partition_stats(spark, sf_dir), [
+            ("hashpart", "bucket", "n_pairs * 100000 + n_signatures"),
+        ]),
+    ])
